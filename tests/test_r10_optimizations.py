@@ -177,7 +177,7 @@ def test_exact_dedup_matches_semijoin_form(spark):
 
 def test_minhash_pairs_match_selfjoin_form(spark):
     from wine_label_ocr_spark.operators.dedupe import (
-        jaccard, lsh_bands, minhash_lsh_pairs, minhash_signature, shingles)
+        jaccard, minhash_lsh_pairs, shingles)
     base_words = "the quick brown fox jumps over a lazy dog tonight".split()
     rows = []
     for i in range(40):
@@ -193,13 +193,11 @@ def test_minhash_pairs_match_selfjoin_form(spark):
                                        min_jaccard=0.3, max_bucket=10)
                      .collect()))
     # reference: the pre-r10 window + self-join candidate generation
-    k, n_perm, n_bands, rpb, max_bucket = 3, 16, 4, 4, 10
-    base = df.select(F.col("doc_id").alias("_id"),
-                     shingles(F.col("text"), k).alias("_sh"))
-    buck = base.select(
-        "_id", F.explode(lsh_bands(minhash_signature(F.col("_sh"), n_perm,
-                                                     False),
-                                   n_bands, rpb)).alias("_b"),
+    k, n_perm, n_bands, max_bucket = 3, 16, 4, 10
+    buck = df.select(
+        F.col("doc_id").alias("_id"),
+        F.explode(_minhash_bands_expr(F.col("text"), k, n_perm, n_bands,
+                                      False)).alias("_b"),
     ).select("_id", F.col("_b.band").alias("band"),
              F.col("_b.band_hash").alias("band_hash"))
     sized = buck.withColumn(
@@ -364,24 +362,38 @@ def test_myers_distances_match_dp():
 
 
 # ---------------------------------------------------------------------------
-# segmentation: mapInArrow kernel vs legacy mapInPandas form
+# segmentation: every SEGMENT_DDL column vs oracle.extract run in-process
 # ---------------------------------------------------------------------------
 
-def test_segment_arrow_matches_pandas(spark):
-    import json
-    from wine_label_ocr_spark.fixtures import pages_spark
-    from wine_label_ocr_spark.operators.segmentation import (
-        SEGMENT_DDL, _segment_batches, segment)
-    pages = pages_spark(spark, 300, partitions=4).drop("text")
-    new = segment(pages)
-    old = pages.select("url", "warc_ts", "html", "lang").mapInPandas(
-        _segment_batches, schema=SEGMENT_DDL)
-    a = sorted(json.dumps(r.asDict(recursive=True), default=str)
-               for r in new.collect())
-    b = sorted(json.dumps(r.asDict(recursive=True), default=str)
-               for r in old.collect())
-    assert a == b
-    assert len(a) == 300
+def test_segment_matches_oracle_extract(spark):
+    from wine_label_ocr_spark import oracle
+    from wine_label_ocr_spark.fixtures import make_page, pages_spark
+    from wine_label_ocr_spark.operators.segmentation import segment
+    n = 300
+    pages = pages_spark(spark, n, partitions=4).drop("text")
+    seg = segment(pages)
+    got = {r["url"]: r for r in seg.collect()}
+    inputs = {r["url"]: r for r in pages.collect()}
+    assert len(got) == n
+    for i in range(n):
+        p = make_page(i)
+        o = oracle.extract(p["html"], p["url"])
+        r, inp = got[p["url"]], inputs[p["url"]]
+        assert r["warc_ts"] == inp["warc_ts"] and r["lang"] == inp["lang"]
+        want = {
+            "text": o["text"], "title_raw": o["title"], "vintage": o["year"],
+            "barcode": p["canonical"], "method": o["method"],
+            "charset": o["charset"], "n_blocks": o["n_blocks"],
+            "kept_blocks": o["kept_blocks"], "raw_chars": len(o["raw_text"]),
+            "fingerprint": o["fingerprint"],
+            "spans": [(sp["start"], sp["end"], sp["tag"], sp["cx"], sp["cy"],
+                       sp["area"], sp["aspect_ratio"], sp["solidity"],
+                       sp["extent"], sp["score"]) for sp in o["spans"]]}
+        have = {c: r[c] for c in want}
+        have["spans"] = [tuple(sp) for sp in r["spans"]]
+        assert have == want, (i, p["kind"])
+    # every SEGMENT_DDL column was compared
+    assert set(want) | {"url", "warc_ts", "lang"} == set(seg.columns)
 
 
 def test_fuzzy_kernel_empty_pair(spark):
@@ -398,8 +410,11 @@ def test_fuzzy_kernel_empty_pair(spark):
 
 
 # ---------------------------------------------------------------------------
-# simhash64 / minhash band kernels (xxhash64 flavor) vs expression forms
+# simhash64 / minhash band kernels (both hash flavors) vs expression forms
 # ---------------------------------------------------------------------------
+
+FLAVORS = pytest.mark.parametrize("oracle_safe", [False, True],
+                                  ids=["xxhash", "md5"])
 
 @pytest.fixture(scope="module")
 def hash_texts(spark):
@@ -415,13 +430,43 @@ def hash_texts(spark):
     return spark.createDataFrame(rows, "doc_id bigint, text string")
 
 
-def _simhash_expr(text):
-    """The pre-r10 expression form of simhash64(oracle_safe=False)."""
+def _minhash_bands_expr(text, k, n_perm, n_bands, oracle_safe):
+    """The column-expression form of the MinHash band kernel:
+    array<struct<band:int, band_hash:string>> — shingles folded ONCE into
+    an n_perm-wide running min of ``_hash64(shingle, p)``, then md5 over
+    each band slice of the signature."""
+    from wine_label_ocr_spark.functions import let
+    from wine_label_ocr_spark.operators.dedupe import _hash64, shingles
+    rpb = n_perm // n_bands
+    sig = F.aggregate(
+        shingles(text, k),
+        F.array_repeat(F.lit(2 ** 63 - 1).cast("long"), n_perm),
+        lambda acc, sh: F.zip_with(
+            acc, F.array(*[_hash64(sh, p, oracle_safe)
+                           for p in range(n_perm)]),
+            lambda x, y: F.least(x, y)))
+
+    def bands_of(sg):
+        return F.transform(
+            F.sequence(F.lit(0), F.lit(n_bands - 1)),
+            lambda b: F.struct(
+                b.cast("int").alias("band"),
+                F.md5(F.array_join(
+                    F.transform(F.slice(sg, b * rpb + 1, rpb),
+                                lambda x: x.cast("string")),
+                    ",")).alias("band_hash")))
+
+    return let(sig, bands_of)
+
+
+def _simhash_expr(text, oracle_safe):
+    """The column-expression form of simhash64: one ``aggregate`` with a
+    64-wide ``zip_with`` vote accumulator."""
     from wine_label_ocr_spark.functions import let
     from wine_label_ocr_spark.operators.dedupe import _hash64
     from wine_label_ocr_spark.operators.textops import tokens_col
     toks = tokens_col(text)
-    hashes = F.transform(toks, lambda t: _hash64(t, 0, False))
+    hashes = F.transform(toks, lambda t: _hash64(t, 0, oracle_safe))
 
     def bits_of(h):
         return F.array(*[
@@ -444,36 +489,45 @@ def _simhash_expr(text):
     return let(counts, fold)
 
 
-def test_simhash_kernel_matches_expression(spark, hash_texts):
+@FLAVORS
+def test_simhash_kernel_matches_expression(spark, hash_texts, oracle_safe):
     from wine_label_ocr_spark.operators.dedupe import simhash64
     got = {r["doc_id"]: r["s"] for r in hash_texts.select(
-        "doc_id", simhash64(F.col("text")).alias("s")).collect()}
+        "doc_id", simhash64(F.col("text"), oracle_safe).alias("s")).collect()}
     want = {r["doc_id"]: r["s"] for r in hash_texts.select(
-        "doc_id", _simhash_expr(F.col("text")).alias("s")).collect()}
+        "doc_id", _simhash_expr(F.col("text"), oracle_safe).alias("s"))
+        .collect()}
     assert got == want
     assert want[901] == 0 and want[900] is None  # fixture sanity
 
 
-def test_minhash_kernel_bands(spark, hash_texts):
-    from wine_label_ocr_spark.operators.dedupe import (lsh_bands,
-                                                       minhash_lsh_pairs,
-                                                       minhash_signature,
-                                                       shingles)
-    # band rows: kernel vs expression form
-    bands_expr = (hash_texts.select(
+@FLAVORS
+def test_minhash_kernel_bands(spark, hash_texts, oracle_safe):
+    from wine_label_ocr_spark.operators.dedupe import _minhash_bands
+    want = sorted(map(tuple, hash_texts.select(
         F.col("doc_id").alias("_id"),
-        F.explode(lsh_bands(minhash_signature(
-            shingles(F.col("text"), 3), 16, False), 4, 4)).alias("_b"))
-        .select("_id", "_b.band", "_b.band_hash"))
-    want = sorted(map(tuple, bands_expr.collect()))
-    from wine_label_ocr_spark.operators.dedupe import _minhash_bands_kernel
-    from pyspark.sql.functions import pandas_udf
-    kern = pandas_udf(_minhash_bands_kernel(3, 16, 4), "array<string>")
+        F.explode(_minhash_bands_expr(F.col("text"), 3, 16, 4,
+                                      oracle_safe)).alias("_b"))
+        .select("_id", "_b.band", "_b.band_hash").collect()))
     got = sorted(map(tuple, hash_texts.select(
-        F.col("doc_id").alias("_id"), kern(F.col("text")).alias("_bh"))
+        F.col("doc_id").alias("_id"),
+        _minhash_bands(F.col("text"), 3, 16, 4, oracle_safe).alias("_bh"))
         .select("_id", F.posexplode("_bh").alias("band", "band_hash"))
         .collect()))
     assert got == want
+    assert len(want) == 4 * hash_texts.count()
+
+
+@FLAVORS
+@pytest.mark.parametrize("sketch", ["minhash_bands", "simhash64"])
+def test_sketch_kernel_empty_batch(sketch, oracle_safe):
+    """An empty Arrow batch yields an empty result, not a dead task."""
+    import pandas as pd
+    from wine_label_ocr_spark.operators.dedupe import (_minhash_bands_kernel,
+                                                       _simhash64_kernel)
+    kern = (_minhash_bands_kernel(3, 16, 4, oracle_safe)
+            if sketch == "minhash_bands" else _simhash64_kernel(oracle_safe))
+    assert len(kern(pd.Series([], dtype=object))) == 0
 
 
 def test_minhash_pairs_end_to_end_kernel_vs_r9(spark, hash_texts):
@@ -488,14 +542,11 @@ def test_minhash_pairs_end_to_end_kernel_vs_r9(spark, hash_texts):
                                    min_jaccard=0.4).collect())
     assert len(got) >= 20  # the duplicated docs must collide
     # reference: monkey-free expression shape — rebuild buck inline
-    from wine_label_ocr_spark.operators.dedupe import (jaccard, lsh_bands,
-                                                       minhash_signature,
-                                                       shingles)
-    base = dup.select(F.col("doc_id").alias("_id"),
-                      shingles(F.col("text"), 3).alias("_sh"))
-    buck = base.select(
-        "_id", F.explode(lsh_bands(minhash_signature(F.col("_sh"), 16, False),
-                                   4, 4)).alias("_b")).select(
+    from wine_label_ocr_spark.operators.dedupe import jaccard, shingles
+    buck = dup.select(
+        F.col("doc_id").alias("_id"),
+        F.explode(_minhash_bands_expr(F.col("text"), 3, 16, 4, False))
+        .alias("_b")).select(
         "_id", F.col("_b.band").alias("band"),
         F.col("_b.band_hash").alias("band_hash"))
     ids = F.array_sort(F.collect_list("_id")).alias("_ids")

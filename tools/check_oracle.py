@@ -4,6 +4,7 @@ Runs each ``__spark_entry__.queries()`` entry and its ``oracle_sql()`` twin
 on the same parquet tables (default sf0.01), compares row count, column
 names, and an order-insensitive value hash (columns sorted by name, rows
 sorted, values canonicalized). Usage: ``python tools/check_oracle.py [sf_dir]``.
+``tests/test_oracle_gates.py`` imports the fetch and hash helpers below.
 """
 
 from __future__ import annotations
@@ -60,11 +61,36 @@ def value_hash(cols, rows):
     return h.hexdigest()
 
 
+def open_duckdb(sf_dir):
+    """In-memory DuckDB with one view per parquet table of ``sf_dir``."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    return con
+
+
+def spark_rows(sdf):
+    """(columns, rows) of a Spark DataFrame, fetched via pandas like the
+    oracle side: nullable int columns degrade to float64 on BOTH sides, so
+    degradation must be symmetric for the hash to be meaningful."""
+    spdf = sdf.toPandas()
+    return list(spdf.columns), [_pd_row(row) for row in spdf.itertuples(index=False, name=None)]
+
+
+def duck_rows(con, sql):
+    """(columns, rows) of an oracle query, fetched via pandas, NOT
+    fetchall(): the correctness gate goes through pandas, where DuckDB HUGEINT
+    (e.g. SUM(BIGINT)) degrades to float64 — reproduce that here or local
+    PASSes lie (VERDICT r1 #1)."""
+    pdf = con.execute(sql).fetchdf()
+    return list(pdf.columns), [_pd_row(row) for row in pdf.itertuples(index=False, name=None)]
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:]) or None
-
-    import duckdb
 
     sys.path.insert(0, "/root/repo")
     import __spark_entry__ as entrymod
@@ -73,9 +99,7 @@ def main():
     spark = get_spark(app="check_oracle", master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    con = open_duckdb(sf_dir)
 
     qs, oq = entrymod.queries(), entrymod.oracle_sql()
     failures = 0
@@ -83,13 +107,7 @@ def main():
         if only and name not in only:
             continue
         try:
-            sdf = fn(spark, sf_dir)
-            # Spark side also via pandas (mirrors the driver): nullable int
-            # columns degrade to float64 on BOTH sides, so degradation must be
-            # symmetric for the hash to be meaningful.
-            spdf = sdf.toPandas()
-            scols = list(spdf.columns)
-            srows = [_pd_row(row) for row in spdf.itertuples(index=False, name=None)]
+            scols, srows = spark_rows(fn(spark, sf_dir))
         except Exception as e:
             print(f"FAIL {name}: spark error {type(e).__name__}: {str(e)[:300]}")
             failures += 1
@@ -98,12 +116,7 @@ def main():
             print(f"ok?  {name}: rows-only ({len(srows)} rows)")
             continue
         try:
-            # fetch via pandas, NOT fetchall(): the driver's gate goes through
-            # pandas, where DuckDB HUGEINT (e.g. SUM(BIGINT)) degrades to
-            # float64 — reproduce that here or local PASSes lie (VERDICT r1 #1)
-            pdf = con.execute(oq[name]).fetchdf()
-            dcols = list(pdf.columns)
-            drows = [_pd_row(row) for row in pdf.itertuples(index=False, name=None)]
+            dcols, drows = duck_rows(con, oq[name])
         except Exception as e:
             print(f"FAIL {name}: duckdb error {str(e)[:300]}")
             failures += 1

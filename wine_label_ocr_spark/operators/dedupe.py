@@ -5,23 +5,28 @@ The reference dedups via exact keys then fuzzy similarity
 
 * **exact** — hash-groupBy on canonicalized content (one shuffle on the
   content hash; map-side partial aggregation applies);
-* **MinHash + LSH** — shingle → minhash signature → band → bucket join:
+* **MinHash + LSH** — shingle → minhash signature → band → bucket:
   the only pairs ever scored are bucket collisions, never O(n²);
 * **SimHash** — 64-bit sign-aggregated token hashes, near-dup via
-  hamming distance on bucketed prefixes;
+  hamming distance within disjoint bit-band buckets;
 * **n-gram Jaccard** — exact verification on candidate pairs;
 * **embedding cosine** — see ``operators.ann`` (near-dup via vector space).
 
-Everything below is native ``F.*`` column algebra (nested lambda
-expressions; zero Python in the hot path). Hash functions come in two
-flavors: ``xxhash64`` (fast path, Spark-only) and md5-derived bigints
-(oracle path — bit-identical in DuckDB), selected by ``oracle_safe``.
+Exact keys, winnowing, exact-substring spans and the pair joins are
+native ``F.*`` column algebra. The two sketches with per-token work —
+MinHash LSH bands and SimHash — are vectorized Arrow batch kernels
+(``pandas_udf``), one kernel per sketch. Hash functions come in two
+flavors, selected by ``oracle_safe``: ``xxhash64`` (fast path,
+Spark-only) and md5-derived bigints (bit-identical in DuckDB); the
+kernels take the flavor as an argument, so the DuckDB gates certify the
+same kernel body the production flavor runs.
 
-Scale notes: signatures are fixed-width arrays (p ≈ 64 minhashes ≈ 512
-bytes/doc); the LSH explode multiplies rows by n_bands (8-16), all of it
-shuffled once on (band_idx, band_hash). Hot buckets (boilerplate dups)
-are bounded by ``max_bucket`` to keep the pair join from exploding on
-skew — the explicit skew handling the north rule asks for.
+Scale notes: signatures never leave the kernel — a doc comes out as
+n_bands 32-hex-char band hashes; the LSH explode multiplies rows by
+n_bands (8-16), all of it shuffled once on (band_idx, band_hash). Hot
+buckets (boilerplate dups) are bounded by ``max_bucket`` to keep the
+pair join from exploding on skew — the explicit skew handling the north
+rule asks for.
 """
 
 from __future__ import annotations
@@ -38,6 +43,40 @@ def _hash64(col: Column, seed: int, oracle_safe: bool) -> Column:
         return F.conv(F.substring(F.md5(F.concat(col, F.lit(f"#{seed}"))), 1, 15),
                       16, 10).cast("bigint")
     return F.xxhash64(col, F.lit(seed))
+
+
+def _hash64_batch(strs: list, oracle_safe: bool):
+    """Batch twin of ``_hash64`` over non-NULL strings: returns
+    ``seed -> int64[len(strs)]``, the bits ``_hash64`` gives each string.
+
+    xxhash64 flavor: one vectorized string pass (seed 42), each seed then
+    chained through hashInt. md5 flavor: each string's UTF-8 bytes are
+    hashed once and a copy is extended with ``#<seed>``; the first 15 hex
+    digits of the digest are its top 60 bits.
+    """
+    import numpy as np
+
+    if oracle_safe:
+        from hashlib import md5
+
+        prefixes = [md5(s.encode()) for s in strs]
+
+        def at(seed: int):
+            suffix = f"#{seed}".encode()
+            digests = []
+            for p in prefixes:
+                h = p.copy()
+                h.update(suffix)
+                digests.append(h.digest())
+            top = np.frombuffer(b"".join(digests), dtype=">u8")[::2]
+            return (top >> np.uint64(4)).astype(np.int64)
+
+        return at
+
+    from ..functions.xxh64 import spark_xxhash64_str, xxh64_int
+
+    h0 = spark_xxhash64_str(strs)
+    return lambda seed: xxh64_int(seed, h0).view(np.int64)
 
 
 def content_key(text: Column) -> Column:
@@ -100,46 +139,6 @@ def shingles(text: Column, k: int = 3) -> Column:
 _LONG_MAX = 9223372036854775807
 
 
-def minhash_signature(sh: Column, n_perm: int = 32,
-                      oracle_safe: bool = False) -> Column:
-    """array<bigint> of length n_perm: min over shingles per hash seed.
-
-    Evaluation shape matters here: the naive "n_perm transforms over the
-    shingle array" recomputes the (inlined) shingle expression once per
-    permutation after CollapseProject — measured 8× slower. This form
-    folds ONCE over the shingles, minimizing element-wise against an
-    n_perm-wide accumulator; the shingle expression is referenced exactly
-    once. Same values, one pass.
-    """
-    def hashes(s: Column) -> Column:
-        # s is a lambda variable — already computed, cheap to reference
-        return F.array(*[_hash64(s, p, oracle_safe) for p in range(n_perm)])
-
-    return F.aggregate(
-        sh,
-        F.array_repeat(F.lit(_LONG_MAX).cast("long"), n_perm),
-        lambda acc, s: F.zip_with(acc, hashes(s), lambda x, y: F.least(x, y)))
-
-
-def lsh_bands(sig: Column, n_bands: int, rows_per_band: int) -> Column:
-    """array<struct<band:int, band_hash:string>> — md5 over each band slice.
-
-    ``sig`` is let-bound so the signature evaluates once, not per band.
-    """
-    from ..functions import let
-
-    def bands_of(s: Column) -> Column:
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(n_bands - 1)),
-            lambda b: F.struct(
-                b.cast("int").alias("band"),
-                F.md5(F.array_join(
-                    F.transform(F.slice(s, b * rows_per_band + 1, rows_per_band),
-                                lambda x: x.cast("string")), ",")).alias("band_hash")))
-
-    return let(sig, bands_of)
-
-
 def jaccard(sh_a: Column, sh_b: Column) -> Column:
     """Exact n-gram Jaccard on distinct shingle arrays."""
     inter = F.size(F.array_intersect(sh_a, sh_b))
@@ -147,45 +146,47 @@ def jaccard(sh_a: Column, sh_b: Column) -> Column:
     return inter / F.greatest(union, F.lit(1))
 
 
-def _minhash_bands_kernel(k: int, n_perm: int, n_bands: int):
-    """Batch kernel: text → LSH band-hash array, xxhash64 flavor.
+def _minhash_bands_kernel(k: int, n_perm: int, n_bands: int,
+                          oracle_safe: bool):
+    """Batch kernel: text → LSH band-hash array, in the ``_hash64``
+    flavor ``oracle_safe`` selects.
 
-    Replicates the expression chain exactly: Java-``\\s`` tokens, k-gram
-    shingles ("<k tokens → one whole-join shingle"; duplicates need no
-    dedup — ``min`` is idempotent), per-permutation signed min of
-    ``xxhash64(shingle, lit(p))`` (string hash seed 42 chained into
-    hashInt of the IntegerType literal), then per-band
-    ``md5(",".join(signed signature slice))``.
+    Java-``\\s`` tokens, k-gram shingles ("<k tokens → one whole-join
+    shingle"; duplicates need no dedup — ``min`` is idempotent), the
+    per-permutation signed min of ``_hash64(shingle, p)``, then per band
+    ``md5(",".join(signed signature slice))`` — the construction the
+    DuckDB twins of ``minhash_lsh`` / ``incremental_dedup`` spell out.
 
-    NULL text → the expression's shingle array is ``[NULL]`` and
-    ``xxhash64`` skips null inputs, leaving ``hashInt(p, 42)`` — the
-    kernel reproduces that too.
+    NULL text has the one-shingle array ``[NULL]``: ``xxhash64`` skips the
+    null input, leaving ``hashInt(p, 42)`` per permutation, while the md5
+    hash is NULL and ``least()`` skips it, leaving ``LONG_MAX``.
+
+    Memory: the signature is one per-permutation ``np.minimum.reduceat``
+    over the flat shingle hashes — never a ``[shingles × n_perm]`` matrix.
     """
     import re
     from hashlib import md5
 
     import numpy as np
 
-    from ..functions.xxh64 import _SPARK_SEED, spark_xxhash64_str, xxh64_int
+    from ..functions.xxh64 import _SPARK_SEED, xxh64_int
 
     split = re.compile(r"[ \t\n\x0b\f\r]+").split
     rpb = n_perm // n_bands
-    null_sig = np.array(
-        [np.int64(np.uint64(xxh64_int(p, _SPARK_SEED)))
-         for p in range(n_perm)], dtype=np.int64)
+    null_sig = (np.full(n_perm, _LONG_MAX, dtype=np.int64) if oracle_safe
+                else xxh64_int(np.arange(n_perm), _SPARK_SEED).view(np.int64))
 
     def kernel(texts):
         import pandas as pd
 
         shingles_flat: list[str] = []
         starts = []
-        kinds = []  # 0 = normal doc, 1 = null text
+        null_mask = []
         for t in texts:
             starts.append(len(shingles_flat))
+            null_mask.append(t is None)
             if t is None:
-                kinds.append(1)
                 continue
-            kinds.append(0)
             toks = [tok for tok in split(t) if tok]
             if len(toks) >= k:
                 shingles_flat.extend(
@@ -195,18 +196,17 @@ def _minhash_bands_kernel(k: int, n_perm: int, n_bands: int):
                 shingles_flat.append(" ".join(toks))
         n = len(texts)
         sigs = np.empty((n, n_perm), dtype=np.int64)
-        kinds_arr = np.asarray(kinds)
-        valid = np.nonzero(kinds_arr == 0)[0]
+        nulls = np.asarray(null_mask, dtype=bool)
+        valid = np.nonzero(~nulls)[0]
         if len(valid):
             # every non-null doc has ≥ 1 shingle (empty text → [""]), so
             # the valid docs' segments tile the flat array with no empty
             # segment — reduceat is safe on their start offsets
-            h0 = spark_xxhash64_str(shingles_flat)
+            hash_at = _hash64_batch(shingles_flat, oracle_safe)
             s_valid = np.asarray(starts)[valid]
             for p in range(n_perm):
-                hp = xxh64_int(p, h0).view(np.int64)
-                sigs[valid, p] = np.minimum.reduceat(hp, s_valid)
-        sigs[kinds_arr == 1] = null_sig
+                sigs[valid, p] = np.minimum.reduceat(hash_at(p), s_valid)
+        sigs[nulls] = null_sig
         out = []
         for i in range(n):
             row = sigs[i]
@@ -220,6 +220,21 @@ def _minhash_bands_kernel(k: int, n_perm: int, n_bands: int):
     return kernel
 
 
+def _minhash_bands(text: Column, k: int, n_perm: int, n_bands: int,
+                   oracle_safe: bool) -> Column:
+    """array<string> of the ``n_bands`` LSH band hashes of ``text`` (band
+    i at index i), evaluated once per row by ``_minhash_bands_kernel``.
+
+    asNondeterministic: a filter on the result (posexplode's implicit
+    ``size(..) > 0``) otherwise gets pushed below a repartition and the
+    optimizer DUPLICATES the kernel — two ArrowEvalPython nodes, every
+    doc hashed twice (guide §4.4; seen in plans/r10/minhash_lsh). The
+    kernel is pure; the flag only pins its single evaluation point.
+    """
+    return pandas_udf(_minhash_bands_kernel(k, n_perm, n_bands, oracle_safe),
+                      "array<string>").asNondeterministic()(text)
+
+
 def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
                       text_col: str = "text", k: int = 3,
                       n_perm: int = 32, n_bands: int = 8,
@@ -228,47 +243,25 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
                       max_bucket: int = 200) -> DataFrame:
     """Near-dup candidate pairs via MinHash LSH, verified by exact Jaccard.
 
-    Plan shape: project signature (pure map) → explode bands (×n_bands)
-    → shuffle once on (band, band_hash) → oversized buckets dropped
-    (boilerplate skew guard) → self-join within bucket → distinct pairs →
-    exact Jaccard verify on the shingle arrays.
+    Plan shape: band hashes (one Arrow kernel, pure map) → explode bands
+    (×n_bands) → shuffle once on (band, band_hash), one aggregation that
+    drops oversized buckets (boilerplate skew guard) and emits every id
+    pair of a bucket → distinct pairs → exact Jaccard verify on the
+    shingle arrays.
     """
-    rows_per_band = n_perm // n_bands
     # Bands carry ONLY (id, band, band_hash) through the shuffle — the wide
     # shingle arrays stay out of the explode/join entirely (a ~n_bands×
-    # shuffle-volume cut).
-    if oracle_safe:
-        base = df.select(
-            F.col(id_col).alias("_id"),
-            shingles(F.col(text_col), k).alias("_sh"))
-        buck = base.select(
-            "_id",
-            F.explode(lsh_bands(minhash_signature(F.col("_sh"), n_perm,
-                                                  oracle_safe),
-                                n_bands, rows_per_band)).alias("_b"),
-        ).select("_id", F.col("_b.band").alias("band"),
-                 F.col("_b.band_hash").alias("band_hash"))
-    else:
-        # r10: the xxhash64 production flavor computes shingle → signature
-        # → band hashes in ONE vectorized Arrow kernel. The interpreted
-        # higher-order lambda chain (slice/join per shingle position ×
-        # n_perm hashes per shingle) measured ~2 ms/doc at sf1.0; the
-        # kernel's bucketed numpy XXH64 (functions.xxh64 — bit-exact vs
-        # F.xxhash64, pinned by tests/test_xxh64.py) brings the same
-        # band hashes out in ~50 µs/doc. Values pinned identical by
-        # tests/test_r10_optimizations.py::test_minhash_kernel_bands.
-        # asNondeterministic: posexplode's implicit `size(..) > 0` filter
-        # otherwise gets pushed below the repartition and the optimizer
-        # DUPLICATES the kernel — two ArrowEvalPython nodes, every doc
-        # hashed twice (guide §4.4; seen in plans/r10/minhash_lsh). The
-        # kernel is pure; the flag only pins its single evaluation point.
-        bands_udf = pandas_udf(
-            _minhash_bands_kernel(k, n_perm, n_bands),
-            "array<string>").asNondeterministic()
-        buck = df.select(
-            F.col(id_col).alias("_id"),
-            bands_udf(F.col(text_col)).alias("_bh"),
-        ).select("_id", F.posexplode("_bh").alias("band", "band_hash"))
+    # shuffle-volume cut). Shingle → signature → band hashes is ONE
+    # vectorized Arrow kernel: the interpreted higher-order lambda chain
+    # it replaced (slice/join per shingle position × n_perm hashes per
+    # shingle) measured ~2 ms/doc at sf1.0, the kernel ~50 µs/doc. Both
+    # flavors are pinned bit-identical to that column form by
+    # tests/test_r10_optimizations.py::test_minhash_kernel_bands.
+    buck = df.select(
+        F.col(id_col).alias("_id"),
+        _minhash_bands(F.col(text_col), k, n_perm, n_bands,
+                       oracle_safe).alias("_bh"),
+    ).select("_id", F.posexplode("_bh").alias("band", "band_hash"))
     # Pair generation as ONE aggregation: group each (band, band_hash)
     # bucket, drop oversized buckets (the same skew guard the former
     # window count applied), and emit every a<b pair from the sorted id
@@ -652,16 +645,14 @@ def snapshot_fingerprints(df: DataFrame, text_col: str = "text",
     on the fp itself; at 10^12 docs the store is written partitioned by
     ``kind`` so each anti-join below prunes to its own slice.
     """
-    rpb = n_perm // n_bands
     exact = df.select(F.lit("exact").alias("kind"),
                       content_key(F.col(text_col)).alias("fp"))
-    bands = (df.select(F.explode(lsh_bands(
-                minhash_signature(shingles(F.col(text_col), k),
-                                  n_perm, oracle_safe),
-                n_bands, rpb)).alias("_b"))
+    bands = (df.select(F.posexplode(_minhash_bands(
+                F.col(text_col), k, n_perm, n_bands, oracle_safe))
+                .alias("_band", "fp"))
              .select(F.concat(F.lit("band:"),
-                              F.col("_b.band").cast("string")).alias("kind"),
-                     F.col("_b.band_hash").alias("fp")))
+                              F.col("_band").cast("string")).alias("kind"),
+                     "fp"))
     return exact.unionByName(bands).distinct()
 
 
@@ -685,7 +676,6 @@ def incremental_dedup(new_docs: DataFrame, prior_fps: DataFrame,
     No broadcast assumption anywhere: at 10^12 docs the store is itself
     corpus-sized, and every join here shuffles only (id, hash) pairs.
     """
-    rpb = n_perm // n_bands
     exact_fps = prior_fps.filter(F.col("kind") == "exact").select("fp")
     keyed = new_docs.withColumn("_ck", content_key(F.col(text_col)))
     fresh = keyed.join(exact_fps, keyed["_ck"] == exact_fps["fp"],
@@ -695,115 +685,78 @@ def incremental_dedup(new_docs: DataFrame, prior_fps: DataFrame,
                         .select("kind", "fp")
     new_bands = (fresh.select(
         F.col(id_col).alias("_id"),
-        F.explode(lsh_bands(
-            minhash_signature(shingles(F.col(text_col), k), n_perm,
-                              oracle_safe),
-            n_bands, rpb)).alias("_b"))
+        F.posexplode(_minhash_bands(F.col(text_col), k, n_perm, n_bands,
+                                    oracle_safe)).alias("_band", "fp"))
         .select("_id",
                 F.concat(F.lit("band:"),
-                         F.col("_b.band").cast("string")).alias("kind"),
-                F.col("_b.band_hash").alias("fp")))
+                         F.col("_band").cast("string")).alias("kind"),
+                "fp"))
     dup_ids = (new_bands.join(band_fps, ["kind", "fp"], "left_semi")
                .select(F.col("_id").alias(id_col)).distinct())
     return fresh.join(dup_ids, id_col, "left_anti")
 
 
-_JAVA_WS_SPLIT = None  # compiled lazily inside the worker
-
-
-def _simhash64_kernel(texts):
-    """Batch SimHash (xxhash64 flavor) — bit-identical to the expression
-    form below, computed vectorized: one bucketed XXH64 pass over every
-    token of the batch, bit-unpack to [T,64], per-doc prefix-sum
-    difference for the ±1 bit votes, pack the sign bits back to int64.
-    Tokens are the Java-``\\s`` runs the expression's split produces.
+def _simhash64_kernel(oracle_safe: bool):
+    """Batch SimHash kernel in the ``_hash64`` flavor ``oracle_safe``
+    selects: one ``_hash64_batch`` pass (seed 0) over every token of the
+    batch, bit-unpack to [T,64], per-doc prefix-sum difference for the ±1
+    bit votes, pack the sign bits back to int64. Tokens are Java-``\\s``
+    runs. A doc with no tokens hashes to 0; NULL text to NULL.
     """
     import re
 
     import numpy as np
-    import pandas as pd
-
-    from ..functions.xxh64 import spark_xxhash64_str
 
     split = re.compile(r"[ \t\n\x0b\f\r]+").split
-    toks_all: list[str] = []
-    starts = []
-    null_mask = []
-    for t in texts:
-        null_mask.append(t is None)
+
+    def kernel(texts):
+        import pandas as pd
+
+        toks_all: list[str] = []
+        starts = []
+        null_mask = []
+        for t in texts:
+            null_mask.append(t is None)
+            starts.append(len(toks_all))
+            if t is not None:
+                toks_all.extend(tok for tok in split(t) if tok)
         starts.append(len(toks_all))
-        if t is not None:
-            toks_all.extend(tok for tok in split(t) if tok)
-    starts.append(len(toks_all))
-    n = len(texts)
-    out = np.zeros(n, dtype=np.int64)
-    if toks_all:
-        h = spark_xxhash64_str(toks_all, extra_int_seed=0)
-        bits = np.unpackbits(h.view(np.uint8).reshape(-1, 8),
-                             axis=1, bitorder="little").astype(np.int32)
-        csum = np.vstack([np.zeros((1, 64), dtype=np.int64),
-                          np.cumsum(bits, axis=0, dtype=np.int64)])
-        s = np.asarray(starts)
-        cnt_set = csum[s[1:]] - csum[s[:-1]]          # [n, 64] set-bit counts
-        n_tok = (s[1:] - s[:-1]).reshape(-1, 1)
-        pos = (2 * cnt_set) > n_tok                   # sum of ±1 votes > 0
-        out = np.packbits(pos, axis=1,
-                          bitorder="little").view("<u8").ravel().view(np.int64)
-    res = pd.array(out, dtype="Int64")
-    res[np.asarray(null_mask)] = None
-    return pd.Series(res)
+        n = len(texts)
+        out = np.zeros(n, dtype=np.int64)
+        if toks_all:
+            h = _hash64_batch(toks_all, oracle_safe)(0)
+            bits = np.unpackbits(h.view(np.uint8).reshape(-1, 8),
+                                 axis=1, bitorder="little").astype(np.int32)
+            csum = np.vstack([np.zeros((1, 64), dtype=np.int64),
+                              np.cumsum(bits, axis=0, dtype=np.int64)])
+            s = np.asarray(starts)
+            cnt_set = csum[s[1:]] - csum[s[:-1]]      # [n, 64] set-bit counts
+            n_tok = (s[1:] - s[:-1]).reshape(-1, 1)
+            pos = (2 * cnt_set) > n_tok               # sum of ±1 votes > 0
+            out = np.packbits(pos, axis=1, bitorder="little"
+                              ).view("<u8").ravel().view(np.int64)
+        res = pd.array(out, dtype="Int64")
+        res[np.asarray(null_mask, dtype=bool)] = None
+        return pd.Series(res)
+
+    return kernel
 
 
 def simhash64(text: Column, oracle_safe: bool = False) -> Column:
     """64-bit SimHash over whitespace tokens.
 
-    Per token: 64-bit hash; per bit: +1 if set else -1; sum over tokens;
-    simhash bit j = 1 iff sum_j > 0.
+    Per token: 64-bit ``_hash64(token, 0)``; per bit: +1 if set else -1;
+    sum over tokens; simhash bit j = 1 iff sum_j > 0.
 
-    ``oracle_safe=True`` (the DuckDB-parity md5 flavor) keeps the
-    expression form: one ``aggregate`` with a ``zip_with`` accumulator.
-    The xxhash64 production flavor goes through a vectorized Arrow batch
-    kernel instead (r10): the interpreted higher-order lambdas cost
-    ~0.3 µs per element-op — ×64 bits × tokens per doc they dominated the
-    map — while the kernel's bucketed numpy XXH64
-    (``functions.xxh64``, bit-exact vs ``F.xxhash64``, pinned by
-    tests/test_xxh64.py) and bit-matrix vote runs the whole batch in C.
-    Same values — pinned by tests/test_r10_optimizations.py.
+    Both flavors run the same vectorized Arrow batch kernel
+    (``_simhash64_kernel``); ``oracle_safe`` only picks its token hash.
+    The interpreted form it replaced (one ``aggregate`` with a 64-wide
+    ``zip_with`` accumulator) cost ~0.3 µs per element-op — ×64 bits ×
+    tokens per doc — while the kernel runs the whole batch's bit-matrix
+    vote in numpy. Same values in both flavors — pinned by
+    tests/test_r10_optimizations.py.
     """
-    from ..functions import let
-
-    if not oracle_safe:
-        kern = pandas_udf(_simhash64_kernel, "long")
-        return kern(text)
-
-    toks = tokens_col(text)
-    # hash each token ONCE (transform), then fan out to 64 bits from the
-    # lambda variable — referencing a lambda var is free, re-evaluating an
-    # inlined hash expression 64× is not (see functions.let docstring)
-    hashes = F.transform(toks, lambda t: _hash64(t, 0, oracle_safe))
-
-    def bits_of(h: Column) -> Column:
-        # shift amounts must be python ints → unroll the 64 bits
-        return F.array(*[
-            (F.shiftright(h, j).bitwiseAND(F.lit(1)) * 2 - 1).cast("long")
-            for j in range(64)])
-
-    counts = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0).cast("long"), 64),
-        lambda acc, h: F.zip_with(acc, bits_of(h), lambda x, y: x + y))
-    bit_vals = [(1 << j) if j < 63 else -(1 << 63) for j in range(64)]
-    pow2 = F.array(*[F.lit(v).cast("long") for v in bit_vals])
-
-    def fold(c: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(c, pow2,
-                       lambda cnt, v: F.when(cnt > 0, v)
-                       .otherwise(F.lit(0).cast("long"))),
-            F.lit(0).cast("long"),
-            lambda a, b: a.bitwiseOR(b))
-
-    return let(counts, fold)
+    return pandas_udf(_simhash64_kernel(oracle_safe), "long")(text)
 
 
 def hamming64(a: Column, b: Column) -> Column:

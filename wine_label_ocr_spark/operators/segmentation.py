@@ -1,6 +1,6 @@
 """Stage 1 — document segmentation (the "detect" of detect-then-read).
 
-One ``mapInPandas`` over Arrow batches turns each page ``(url, warc_ts,
+One ``mapInArrow`` over Arrow batches turns each page ``(url, warc_ts,
 html BINARY, lang)`` into its segmented form: extracted main ``text``,
 candidate span structs with geometry features, and the fields whose
 inputs only exist pre-segmentation (year cascade over the whole visible
@@ -58,49 +58,18 @@ SEGMENT_DDL = (
 _CANONICAL_RE = re.compile(r'<link\s+rel="canonical"\s+href="([^"]+)"')
 
 
-def _segment_batches(batches: Iterable) -> Iterator:
-    """Legacy pandas form (kept as the equivalence reference for tests)."""
-    import pandas as pd
-
-    cols = ["url", "warc_ts", "lang", "text", "title_raw", "vintage",
-            "barcode", "method", "charset", "n_blocks", "kept_blocks",
-            "raw_chars", "fingerprint", "spans"]
-    for pdf in batches:
-        rows = []
-        http_charsets = (pdf["http_charset"] if "http_charset" in pdf.columns
-                         else [None] * len(pdf))
-        for url, ts, payload, lang, hcs in zip(pdf["url"], pdf["warc_ts"],
-                                               pdf["html"], pdf["lang"],
-                                               http_charsets):
-            if payload is None:
-                payload = b""
-            elif not isinstance(payload, bytes):
-                payload = bytes(payload)  # bytearray/memoryview only — no copy for bytes
-            r = extract(payload, url, None if hcs is None else str(hcs))
-            m = _CANONICAL_RE.search(r["head_raw"]) if r["head_raw"] else None
-            rows.append((
-                url, ts, lang, r["text"], r["title"], r["year"],
-                m.group(1) if m else None, r["method"], r["charset"],
-                r["n_blocks"], r["kept_blocks"], len(r["raw_text"]),
-                r["fingerprint"],
-                [(s["start"], s["end"], s["tag"], s["cx"], s["cy"], s["area"],
-                  s["aspect_ratio"], s["solidity"], s["extent"], s["score"])
-                 for s in r["spans"]]))
-        yield pd.DataFrame(rows, columns=cols)
-
-
 def _segment_batches_arrow(batches: Iterable) -> Iterator:
     """Arrow-native segmentation kernel (guide §4.1/§4.2).
 
-    The pandas form above paid ~160 µs/doc of pure boundary overhead on a
-    ~260 µs/doc kernel (measured at r10 on the bench corpus): one Python
-    tuple per row, a ``pd.DataFrame`` transpose per batch, and Spark's
-    pandas→Arrow coercion of the nested ``spans`` column on the way back.
-    This form builds the output ``pyarrow.RecordBatch`` directly — flat
-    per-column Python lists, one ``pa.array`` C-level conversion each, and
-    the spans struct assembled from flat arrays + offsets (no per-row
-    nested objects). Values are IDENTICAL (same ``extract`` kernel; pinned
-    by tests/test_r10_optimizations.py::test_segment_arrow_matches_pandas).
+    The ``mapInPandas`` form it replaced paid ~160 µs/doc of pure boundary
+    overhead on a ~260 µs/doc kernel (measured at r10 on the bench
+    corpus): one Python tuple per row, a ``pd.DataFrame`` transpose per
+    batch, and Spark's pandas→Arrow coercion of the nested ``spans``
+    column on the way back. This form builds the output
+    ``pyarrow.RecordBatch`` directly — flat per-column Python lists, one
+    ``pa.array`` C-level conversion each. Every column equals
+    ``oracle.extract`` run per row outside Spark (pinned by
+    tests/test_r10_optimizations.py::test_segment_matches_oracle_extract).
     """
     import pyarrow as pa
 

@@ -42,7 +42,8 @@ def get_spark(app: str = "wine_label_ocr_spark", master: str | None = None,
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # zstd parquet output: ~10% faster than snappy on the 1M-record
         # flagship write AND smaller files for every downstream scan
-        # (guide §6; measured r10, tools/bench_extract_parts.py host)
+        # (guide §6; measured r10 — perfbench's traced run reports the
+        # write as its ``table.*`` layers)
         .config("spark.sql.parquet.compression.codec", "zstd")
         # ~4k rows/batch pipelines UDF input/output against JVM work for
         # this engine's ~2.6KB payloads (measured best at local[32])

@@ -114,8 +114,7 @@ def incremental_dedup_stream(stream_df: DataFrame, prior_fps: DataFrame,
     so it composes with ``dedup_stream`` (which handles within-stream
     dups) for the full ingest chain. Batch-equivalence is pytest-pinned
     per micro-batch."""
-    from ..operators.dedupe import content_key, lsh_bands, minhash_signature, shingles
-    rpb = n_perm // n_bands
+    from ..operators.dedupe import _minhash_bands, content_key
     exact_fps = (prior_fps.filter(F.col("kind") == "exact")
                  .select(F.col("fp").alias("_fp_exact")).distinct())
     keyed = stream_df.withColumn("_ck", content_key(F.col(text_col)))
@@ -124,13 +123,12 @@ def incremental_dedup_stream(stream_df: DataFrame, prior_fps: DataFrame,
            .filter(F.col("_fp_exact").isNull())
            .drop("_fp_exact"))
     out = out.withColumn(
-        "_bands", lsh_bands(minhash_signature(
-            shingles(F.col(text_col), k), n_perm, oracle_safe),
-            n_bands, rpb))
+        "_bands", _minhash_bands(F.col(text_col), k, n_perm, n_bands,
+                                 oracle_safe))
     for b in range(n_bands):
         slice_b = (prior_fps.filter(F.col("kind") == f"band:{b}")
                    .select(F.col("fp").alias(f"_fp_b{b}")).distinct())
-        bh = F.get(F.col("_bands"), b)["band_hash"]
+        bh = F.get(F.col("_bands"), b)
         out = (out.join(slice_b, bh == slice_b[f"_fp_b{b}"], "left_outer")
                .filter(F.col(f"_fp_b{b}").isNull())
                .drop(f"_fp_b{b}"))
