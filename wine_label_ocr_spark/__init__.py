@@ -10,12 +10,12 @@ pipeline over tables of Common-Crawl-style web pages
 * stage 1 (``operators.segmentation``): lexer-built block list with
   text-density / link-density features (the analog of
   ``hybrid.py:102-146`` heuristic region detection + ``hybrid.py:189-227``
-  connected components), one ``mapInPandas`` over Arrow batches;
+  connected components), one ``mapInArrow`` over Arrow batches;
 * stage 2 (``operators.extraction``): block classification + field
   extraction (title ≈ maker name, year ≈ vintage) in native
   ``pyspark.sql.functions`` (the analog of
   ``final_run_ocr.py:299-378``);
-* dedup ingest (``operators.dedup``): exact key, then blocked fuzzy
+* dedup ingest (``operators.dedupe``): exact key, then blocked fuzzy
   (the analog of ``scan_and_store.py:121-164``);
 * similarity suite (``operators.similarity``): the analog of
   ``similarity_functions/*``.
@@ -24,4 +24,13 @@ Everything is DataFrame-first; heavy per-document work is vectorized
 pandas/Arrow UDFs (no per-row Python UDFs anywhere).
 """
 
+import os as _os
+
 __version__ = "0.1.0"
+
+# Inside a Spark Python worker (the daemon exports the factory secret to
+# every worker it forks), stop each task start from re-parsing pyspark.zip.
+if "PYTHON_WORKER_FACTORY_SECRET" in _os.environ:
+    from wine_label_ocr_spark import _zipdir
+
+    _zipdir.install()

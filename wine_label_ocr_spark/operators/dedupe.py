@@ -699,9 +699,10 @@ def incremental_dedup(new_docs: DataFrame, prior_fps: DataFrame,
 def _simhash64_kernel(oracle_safe: bool):
     """Batch SimHash kernel in the ``_hash64`` flavor ``oracle_safe``
     selects: one ``_hash64_batch`` pass (seed 0) over every token of the
-    batch, bit-unpack to [T,64], per-doc prefix-sum difference for the ±1
-    bit votes, pack the sign bits back to int64. Tokens are Java-``\\s``
-    runs. A doc with no tokens hashes to 0; NULL text to NULL.
+    batch, bit-unpack to uint8 [T,64], per-doc segment sum of set bits
+    (``np.add.reduceat`` over the docs with tokens) for the ±1 bit votes,
+    pack the sign bits back to int64. Tokens are Java-``\\s`` runs. A doc
+    with no tokens hashes to 0; NULL text to NULL.
     """
     import re
 
@@ -726,12 +727,13 @@ def _simhash64_kernel(oracle_safe: bool):
         if toks_all:
             h = _hash64_batch(toks_all, oracle_safe)(0)
             bits = np.unpackbits(h.view(np.uint8).reshape(-1, 8),
-                                 axis=1, bitorder="little").astype(np.int32)
-            csum = np.vstack([np.zeros((1, 64), dtype=np.int64),
-                              np.cumsum(bits, axis=0, dtype=np.int64)])
+                                 axis=1, bitorder="little")
             s = np.asarray(starts)
-            cnt_set = csum[s[1:]] - csum[s[:-1]]      # [n, 64] set-bit counts
             n_tok = (s[1:] - s[:-1]).reshape(-1, 1)
+            has_tok = n_tok[:, 0] > 0
+            cnt_set = np.zeros((n, 64), dtype=np.int64)  # set-bit counts
+            cnt_set[has_tok] = np.add.reduceat(bits, s[:-1][has_tok], axis=0,
+                                               dtype=np.int64)
             pos = (2 * cnt_set) > n_tok               # sum of ±1 votes > 0
             out = np.packbits(pos, axis=1, bitorder="little"
                               ).view("<u8").ravel().view(np.int64)

@@ -2,7 +2,7 @@
 
 The Spark restatement of the reference's flagship pipeline
 ``WineTracker.run()`` (SURVEY.md §3.1): one lazy DataFrame program —
-stage-1 segmentation ``mapInPandas`` pipelined with stage-2 native
+stage-1 segmentation ``mapInArrow`` pipelined with stage-2 native
 extraction in a single task (no shuffle anywhere in the extract path),
 then an explicit append action. The reference's disk-path handoff between
 stages (``Photo_Stitch.py:403-423`` → ``WineTracker.py:42,46``)

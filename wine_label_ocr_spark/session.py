@@ -19,7 +19,11 @@ def get_spark(app: str = "wine_label_ocr_spark", master: str | None = None,
     * Arrow enabled (every UDF in this engine is pandas/Arrow-vectorized);
     * shuffle partitions sized to cores, not the 200 default;
     * python worker reuse (lazy per-worker init amortized, the analog of the
-      reference's lazy model singletons, final_run_ocr.py:41-80).
+      reference's lazy model singletons, final_run_ocr.py:41-80). Reuse
+      does not amortize what the worker redoes at every task start: its
+      ``importlib.invalidate_caches()`` re-parsed pyspark.zip's directory
+      (~240 ms per task on a 4-CPU host), which ``_zipdir`` skips while the
+      archive is unchanged.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"

@@ -1,7 +1,7 @@
 """The flagship extraction pipeline as a Structured Streaming query.
 
 The batch plan (``plans.pipeline.extract_records``) is a pure map —
-parquet scan → ``mapInPandas`` segmentation → native field extraction,
+parquet scan → ``mapInArrow`` segmentation → native field extraction,
 zero shuffles — which is exactly the shape Structured Streaming lifts
 verbatim: the SAME DataFrame program runs over a file-source stream with
 no operator changes, so stream output ≡ batch output on the same pages by
