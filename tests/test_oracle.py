@@ -10,8 +10,8 @@ from wine_label_ocr_spark.fixtures import make_page
 
 def test_byte_identity_over_fixture_corpus():
     """The north-rule gate at the pure-Python level: the oracle recovers the
-    generator's ground-truth text/title/year exactly, across all page kinds
-    (html / pdf / degraded / latin-1)."""
+    generator's ground-truth text/title/year/canonical link exactly, across
+    all page kinds (html / pdf / degraded / latin-1)."""
     kinds = set()
     for i in range(1500):
         p = make_page(i)
@@ -19,6 +19,7 @@ def test_byte_identity_over_fixture_corpus():
         assert r["text"] == p["text"], (i, p["kind"])
         assert r["title"] == p["title"], (i, p["kind"])
         assert r["year"] == p["year"], (i, p["kind"])
+        assert r["barcode"] == p["canonical"], (i, p["kind"])
         kinds.add(p["kind"])
     assert kinds == {"html", "pdf", "degraded"}
 

@@ -384,7 +384,7 @@ def test_segment_matches_oracle_extract(spark):
             "text": o["text"], "title_raw": o["title"], "vintage": o["year"],
             "barcode": p["canonical"], "method": o["method"],
             "charset": o["charset"], "n_blocks": o["n_blocks"],
-            "kept_blocks": o["kept_blocks"], "raw_chars": len(o["raw_text"]),
+            "kept_blocks": o["kept_blocks"], "raw_chars": o["raw_chars"],
             "fingerprint": o["fingerprint"],
             "spans": [(sp["start"], sp["end"], sp["tag"], sp["cx"], sp["cy"],
                        sp["area"], sp["aspect_ratio"], sp["solidity"],
@@ -394,6 +394,37 @@ def test_segment_matches_oracle_extract(spark):
         assert have == want, (i, p["kind"])
     # every SEGMENT_DDL column was compared
     assert set(want) | {"url", "warc_ts", "lang"} == set(seg.columns)
+
+
+def test_segment_kernel_empty_batch_and_null_html(spark):
+    """The stage-1 kernel called directly: a zero-row batch gives zero rows
+    under the SEGMENT_DDL names, and a NULL ``html`` row carries the
+    ``oracle.extract(b"", url)`` record."""
+    import datetime
+
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+    from wine_label_ocr_spark import oracle
+    from wine_label_ocr_spark.operators.segmentation import (
+        SEGMENT_DDL, _segment_batches_arrow)
+    schema = to_arrow_schema(DataType.fromDDL(SEGMENT_DDL))
+    in_schema = pa.schema([("url", pa.string()), ("warc_ts", pa.timestamp("us")),
+                           ("html", pa.binary()), ("lang", pa.string())])
+    ts = datetime.datetime(2024, 1, 2, 3, 4, 5)
+    empty = pa.RecordBatch.from_pylist([], schema=in_schema)
+    null = pa.RecordBatch.from_pylist(
+        [{"url": "http://x.test/a", "warc_ts": ts, "html": None, "lang": "en"}],
+        schema=in_schema)
+    out = list(_segment_batches_arrow(schema, [empty, null]))
+    assert [b.num_rows for b in out] == [0, 1]
+    assert out[0].schema.names == schema.names
+    row = out[1].to_pylist()[0]
+    o = oracle.extract(b"", "http://x.test/a")
+    want = {"url": "http://x.test/a", "warc_ts": ts, "lang": "en",
+            "title_raw": o["title"], "vintage": o["year"]}
+    want.update({k: o[k] for k in schema.names if k not in want})
+    assert row == want
 
 
 def test_fuzzy_kernel_empty_pair(spark):

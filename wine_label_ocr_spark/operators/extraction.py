@@ -1,19 +1,17 @@
 """Stage 2 — field extraction ("read") in native pyspark.sql.functions.
 
 Everything here is JVM-side, whole-stage-codegen'd column arithmetic — no
-Python. Reference analogs (SURVEY.md §2.4): year/regex extract E4
-(``final_run_ocr.py:153-185``), escalating fallback E5
-(``final_run_ocr.py:187-297``), maker normalization E7
+Python. Reference analogs (SURVEY.md §2.4): maker normalization E7
 (``final_run_ocr.py:353-359``), year cast E10, CustomID concat E11
 (``final_run_ocr.py:436``), content-hash id E12
-(``scan_and_store.py:49-52``), metadata sidecar extract E15
-(``QRCodeScanner.py:60-108`` analog).
+(``scan_and_store.py:49-52``).
 
-The E5 fallback cascade ("search the whole page only when the primary
-region yielded nothing", final_run_ocr.py:343-349) is expressed as a
-per-row-lazy ``coalesce`` — in generated code, the second regex only
-evaluates on rows where the first missed, which is genuine work-skipping
-without a second pass over the expensive stage-1 output (SURVEY.md §4).
+The year extract E4 with its E5 fallback cascade
+(``final_run_ocr.py:153-297``) and the metadata sidecar extract E15
+(``QRCodeScanner.py:60-108`` analog) read inputs that only exist before
+segmentation (the whole visible page, the head markup), so
+``oracle.extract`` resolves them in stage 1 and they arrive here as the
+``vintage`` and ``barcode`` columns.
 """
 
 from __future__ import annotations
@@ -21,30 +19,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..oracle import YEAR_MAX, YEAR_MIN, YEAR_PATTERNS
-
-
-def year_from(col: Column) -> Column:
-    """E4 — ordered-pattern year extraction, identical to oracle.extract_year.
-
-    Pattern priority first, position-within-document second, with the
-    1900–2030 range check applied per candidate (not just to the winner):
-    ``regexp_extract_all`` keeps candidates in document order, ``filter``
-    applies the range gate, ``element_at(.., 1)`` is first-hit-wins.
-    """
-    per_pattern = [
-        F.get(
-            F.filter(
-                F.transform(
-                    F.regexp_extract_all(col, F.lit(pat), 1),
-                    lambda x: x.cast("int"),
-                ),
-                lambda y: (y >= YEAR_MIN) & (y <= YEAR_MAX),
-            ),
-            0,  # F.get is null-on-missing (ANSI-safe), first-hit-wins
-        )
-        for pat in YEAR_PATTERNS
-    ]
-    return F.coalesce(*per_pattern)
 
 
 def normalize_maker_col(col: Column) -> Column:
@@ -66,12 +40,6 @@ def custom_id_col(maker: Column, vintage: Column) -> Column:
 def rec_id_col(key: Column) -> Column:
     """E12 — ``sha1(key)[:12]`` (scan_and_store.py:49-52)."""
     return F.when(key.isNotNull(), F.substring(F.sha1(key), 1, 12))
-
-
-def barcode_col(head_raw: Column) -> Column:
-    """E15 — metadata sidecar identity: canonical-link extract, first hit."""
-    c = F.regexp_extract(head_raw, r'<link\s+rel="canonical"\s+href="([^"]+)"', 1)
-    return F.nullif(c, F.lit(""))
 
 
 # buckets the reference's candidate pool skips (final_run_ocr.py:364-366)
@@ -112,11 +80,9 @@ def extract_fields(seg: DataFrame) -> DataFrame:
     """Segmented pages → typed record columns (E6 dispatch analog).
 
     ``vintage`` (E4/E5 cascade over main + whole-page text) and
-    ``barcode`` (E15 canonical link) arrive pre-resolved from stage 1 —
-    their raw inputs never cross the Arrow boundary (see
-    segmentation module docstring); ``year_from``/``barcode_col`` below
-    are the native-expression forms of the same semantics, used by the
-    driver-gate queries.
+    ``barcode`` (E15 canonical link) arrive resolved by
+    ``oracle.extract`` in stage 1; their raw inputs never cross the Arrow
+    boundary (see the segmentation module docstring).
     """
     out = seg.withColumn("maker_name", normalize_maker_col(F.col("title_raw")))
     out = out.withColumn("custom_id",

@@ -125,11 +125,3 @@ def head_meta(df: DataFrame, id_col: str = "url",
         nofollow.alias("robots_nofollow"),
     )
 
-
-def nofollow_urls(df: DataFrame, id_col: str = "url",
-                  html_col: str = "html") -> DataFrame:
-    """The page-url set whose outlinks a polite crawler must drop —
-    feed to ``crawl_cycle(nofollow_pages=...)``. Pure projection."""
-    return (head_meta(df, id_col, html_col)
-            .filter(F.col("robots_nofollow"))
-            .select("url"))

@@ -29,7 +29,7 @@ kernels for Pillow/ffmpeg with no plan changes.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -2186,34 +2186,26 @@ def decode_gif_frames(payload: bytes, max_frames: int = 64):
         return None  # tolerant parse (ST8): undecodable → None
 
 
-def gif_frames(df: DataFrame, id_col: str = "url",
-               payload_col: str = "payload",
-               max_frames: int = 64) -> DataFrame:
-    """Animated-GIF payloads → ONE ROW PER COMPOSITED FRAME:
-    ``(id, frame_idx, n_frames, height, width, sum_r, sum_g, sum_b,
-    dhash, decode_ok)`` via one Arrow-batched ``mapInPandas`` (pure map
-    — inherits partitioning, zero Exchange; the explode happens inside
-    the Python kernel, so a 64-frame GIF costs one input row and 64
-    output rows, no shuffle). Channel sums are EXACT integers (the
-    value-oracle currency); ``dhash`` is the per-frame perceptual hash,
-    ready for ``frame_sample_plan`` + ``image_near_dup`` keyframe
-    dedup. Undecodable payloads come back as one ``decode_ok=false``
-    row (ST8 policy)."""
+def _frame_rows(df: DataFrame, id_col: str, payload_col: str,
+                max_frames: int, decode: Callable, count: Callable) -> DataFrame:
+    """The one-row-per-composited-frame kernel behind ``gif_frames`` and
+    ``webp_frames``: ``decode(payload, max_frames=)`` gives the frames,
+    ``count(payload)`` the true structural frame total."""
     def run(batches: Iterable) -> Iterator:
         import pandas as pd
         for pdf in batches:
             out = []
             for key, payload in zip(pdf[id_col], pdf[payload_col]):
-                fr = decode_gif_frames(payload, max_frames=max_frames)
+                fr = decode(payload, max_frames=max_frames)
                 if fr is None:
                     out.append((key, None, None, None, None,
                                 None, None, None, None, False))
                     continue
                 # n_frames is the TRUE structural count even when the
                 # emitted rows are capped at max_frames (no-silent-cap:
-                # a 100-frame GIF yields 64 rows that SAY n_frames=100,
+                # a 100-frame animation yields 64 rows that SAY n_frames=100,
                 # so frame_sample_plan sees the real total)
-                n = gif_frame_count(payload) or len(fr)
+                n = count(payload) or len(fr)
                 for k, arr in enumerate(fr):
                     h, w, _ = arr.shape
                     sums = arr.sum(axis=(0, 1), dtype="int64")
@@ -2228,6 +2220,23 @@ def gif_frames(df: DataFrame, id_col: str = "url",
         run, schema=f"{id_col} string, frame_idx int, n_frames int, "
                     "height int, width int, sum_r bigint, sum_g bigint, "
                     "sum_b bigint, dhash bigint, decode_ok boolean")
+
+
+def gif_frames(df: DataFrame, id_col: str = "url",
+               payload_col: str = "payload",
+               max_frames: int = 64) -> DataFrame:
+    """Animated-GIF payloads → ONE ROW PER COMPOSITED FRAME:
+    ``(id, frame_idx, n_frames, height, width, sum_r, sum_g, sum_b,
+    dhash, decode_ok)`` via one Arrow-batched ``mapInPandas`` (pure map
+    — inherits partitioning, zero Exchange; the explode happens inside
+    the Python kernel, so a 64-frame GIF costs one input row and 64
+    output rows, no shuffle). Channel sums are EXACT integers (the
+    value-oracle currency); ``dhash`` is the per-frame perceptual hash,
+    ready for ``frame_sample_plan`` + ``image_near_dup`` keyframe
+    dedup. Undecodable payloads come back as one ``decode_ok=false``
+    row (ST8 policy)."""
+    return _frame_rows(df, id_col, payload_col, max_frames,
+                       decode_gif_frames, gif_frame_count)
 
 
 def parse_mp4_header(payload: bytes) -> dict | None:
@@ -3373,31 +3382,8 @@ def webp_frames(df: DataFrame, id_col: str = "url",
     no-silent-cap contract), so ``frame_sample_plan`` sees the real
     total for both animated formats. Undecodable payloads come back as
     one ``decode_ok=false`` row (ST8 policy)."""
-    def run(batches: Iterable) -> Iterator:
-        import pandas as pd
-        for pdf in batches:
-            out = []
-            for key, payload in zip(pdf[id_col], pdf[payload_col]):
-                fr = decode_webp_frames(payload, max_frames=max_frames)
-                if fr is None:
-                    out.append((key, None, None, None, None,
-                                None, None, None, None, False))
-                    continue
-                n = webp_frame_count(payload) or len(fr)
-                for k, arr in enumerate(fr):
-                    h, w, _ = arr.shape
-                    sums = arr.sum(axis=(0, 1), dtype="int64")
-                    out.append((key, k, n, h, w,
-                                int(sums[0]), int(sums[1]), int(sums[2]),
-                                dhash64_raster(arr), True))
-            yield pd.DataFrame(out, columns=[
-                id_col, "frame_idx", "n_frames", "height", "width",
-                "sum_r", "sum_g", "sum_b", "dhash", "decode_ok"])
-
-    return df.select(id_col, payload_col).mapInPandas(
-        run, schema=f"{id_col} string, frame_idx int, n_frames int, "
-                    "height int, width int, sum_r bigint, sum_g bigint, "
-                    "sum_b bigint, dhash bigint, decode_ok boolean")
+    return _frame_rows(df, id_col, payload_col, max_frames,
+                       decode_webp_frames, webp_frame_count)
 
 
 def encode_webp_animated(frames, durations_ms, loop_count: int = 0,

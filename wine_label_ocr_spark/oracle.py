@@ -114,6 +114,9 @@ _TAG_RE = re.compile(
 )
 _CHARSET_RE = re.compile(rb"charset\s*=\s*[\"']?([A-Za-z0-9_-]+)")
 _TITLE_RE = re.compile(r"(?is)<title[^>]*>(.*?)</title>")
+# E15 — metadata sidecar identity: the first canonical link in the first
+# 2 KB of the decoded page (the head markup).
+_CANONICAL_RE = re.compile(r'<link\s+rel="canonical"\s+href="([^"]+)"')
 
 # PDF branch (r9: full content-stream text extraction). A text object is
 # `BT … ET`; inside it the show operators are `(s) Tj`, `(s) '`,
@@ -738,12 +741,14 @@ def extract(payload: bytes, url: str,
             http_charset: str | None = None) -> dict[str, Any]:
     """The oracle: one document in, the canonical record out.
 
-    Returns ``{text, title, maker_name, year, spans, fingerprint, method,
-    charset, n_blocks, kept_blocks, raw_text}``. ``text`` is the
-    byte-identity target; ``raw_text`` is the full visible text (used by the
-    year fallback cascade, E5 analog). ``http_charset`` is the transport's
-    charset claim (WARC HTTP envelope), which outranks in-document
-    declarations — see ``detect_charset``.
+    Returns ``{url, text, title, maker_name, year, custom_id, rec_id,
+    barcode, spans, fingerprint, method, charset, n_blocks, kept_blocks,
+    raw_chars}``. ``text`` is the byte-identity target; ``year`` falls back
+    from ``text`` to the full visible text (E5 cascade), whose length is
+    ``raw_chars``; ``barcode`` is the E15 canonical link (``None`` for
+    PDFs). ``http_charset`` is the transport's charset claim (WARC HTTP
+    envelope), which outranks in-document declarations — see
+    ``detect_charset``.
     """
     if payload[:5] == b"%PDF-":
         paras = [normalize_ws(p) for p in _pdf_paragraphs(payload)]
@@ -761,7 +766,7 @@ def extract(payload: bytes, url: str,
         } for i, p in enumerate(paras)]
         spans = _spans_from_kept(kept, max(len(paras), 1), paras)
         raw_text = text
-        head_raw = ""
+        barcode = None
         method, charset, n_blocks = "pdf", "binary", len(paras)
     else:
         charset = detect_charset(payload, http_charset)
@@ -776,7 +781,8 @@ def extract(payload: bytes, url: str,
         title = normalize_ws(_htmlmod.unescape(tm.group(1))) if tm else None
         spans = _spans_from_kept(kept, max(len(blocks), 1), texts)
         raw_text = "\n".join(b["text"] for b in blocks)
-        head_raw = decoded[:2048]
+        cm = _CANONICAL_RE.search(decoded, 0, 2048)
+        barcode = cm.group(1) if cm else None
         method, n_blocks = "html", len(blocks)
 
     # E5 cascade: main text first, whole visible page as fallback.
@@ -793,12 +799,12 @@ def extract(payload: bytes, url: str,
         "year": year,
         "custom_id": custom_id,
         "rec_id": rec_id(custom_id) if custom_id else None,
+        "barcode": barcode,
         "spans": spans,
         "fingerprint": fingerprint_spans(spans),
         "method": method,
         "charset": charset,
         "n_blocks": n_blocks,
         "kept_blocks": len(spans),
-        "raw_text": raw_text,
-        "head_raw": head_raw,
+        "raw_chars": len(raw_text),
     }

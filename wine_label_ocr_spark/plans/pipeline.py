@@ -11,21 +11,17 @@ disappears entirely.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..operators.extraction import extract_fields, to_records
 from ..operators.segmentation import segment
 
 
-def extract_records(pages: DataFrame, repartition: int | None = None) -> DataFrame:
+def extract_records(pages: DataFrame) -> DataFrame:
     """The flagship query.
 
-    ``repartition`` (url-hash layout, SURVEY.md §4) is optional and off by
-    default: the extract path is a pure map, so inheriting the scan's
-    partitioning avoids a shuffle. Set it only when the *output* table
-    needs a specific layout (e.g. before a bucketed write).
+    The extract path is a pure map, so it inherits the scan's
+    partitioning and adds no shuffle. A caller whose *output* table needs
+    a specific layout repartitions the result itself.
     """
-    df = pages
-    if repartition:
-        df = df.repartition(repartition, F.xxhash64("url"))
-    return to_records(extract_fields(segment(df)))
+    return to_records(extract_fields(segment(pages)))

@@ -34,9 +34,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..sources.table import ManifestTable
 
+# one metrics-table row per bucket, as built on the driver; the append
+# stamps it with ``committed_ts timestamp``
 METRICS_DDL = ("run_id string, bucket int, n_pages bigint, n_records bigint, "
-               "n_with_vintage bigint, n_bytes_text bigint, wall_sec double, "
-               "committed_ts timestamp")
+               "n_with_vintage bigint, n_bytes_text bigint, wall_sec double")
 
 
 class ResumableRun:
@@ -68,8 +69,6 @@ class ResumableRun:
 
     def _rollback_bucket(self, bucket: int) -> None:
         """Drop any committed-but-unmarked snapshot for this bucket."""
-        m = self.records._load()
-        changed = False
         for tbl in (self.records, self.metrics):
             m = tbl._load()
             snaps = [s for s in m["snapshots"]
@@ -82,10 +81,7 @@ class ResumableRun:
                     s["files"] = [f for f in s["files"] if f not in drop_files]
                 m["snapshots"] = snaps
                 m["current"] = snaps[-1]["id"] if snaps else None
-                tbl._commit(m)
-                changed = True
-        if changed:
-            pass  # data files are orphaned, not deleted — vacuum is separate
+                tbl._commit(m)  # data files are orphaned; vacuum is separate
 
     # -- the run ---------------------------------------------------------------
 
@@ -130,10 +126,8 @@ class ResumableRun:
             mrow = [(self.run_id, b, int(stats["n_pages"]),
                      int(stats["n_records"]), int(stats["n_with_vintage"] or 0),
                      int(stats["n_bytes_text"] or 0), float(wall))]
-            mdf = spark.createDataFrame(
-                mrow, "run_id string, bucket int, n_pages bigint, n_records bigint, "
-                      "n_with_vintage bigint, n_bytes_text bigint, wall_sec double"
-            ).withColumn("committed_ts", F.current_timestamp())
+            mdf = spark.createDataFrame(mrow, METRICS_DDL) \
+                .withColumn("committed_ts", F.current_timestamp())
             self.metrics.append(mdf, meta={"run_id": self.run_id, "bucket": b})
             self._write_marker(b, {"run_id": self.run_id, "bucket": b,
                                    "n_records": int(stats["n_records"]),

@@ -113,18 +113,16 @@ class ManifestTable:
     # -- write -------------------------------------------------------------
 
     def _write_files(self, df: DataFrame,
-                     partition_by: list[str] | None = None
-                     ) -> tuple[list[str], int]:
+                     partition_by: list[str] | None = None) -> list[str]:
         out = os.path.join(self.data_dir, f"commit-{uuid.uuid4().hex}")
         w = df.write.mode("errorifexists")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(out)
-        files = sorted(
+        return sorted(
             os.path.join(root, f)
             for root, _, names in os.walk(out)
             for f in names if f.endswith(".parquet"))
-        return files, len(files)
 
     @staticmethod
     def partition_values(files: list[str],
@@ -202,7 +200,7 @@ class ManifestTable:
         live in the PATH, not the file bytes, and ``partition_values``
         recovers the file→partition index for storage-partitioned
         probes."""
-        files, _ = self._write_files(df, partition_by)
+        files = self._write_files(df, partition_by)
         m = self._load()
         prev = self.current_files() if m["current"] is not None else []
         col, stats = self._snapshot_stats(files, stats_col)
@@ -222,7 +220,7 @@ class ManifestTable:
     def overwrite(self, df: DataFrame, meta: dict[str, Any] | None = None,
                   stats_col: str | None = None, op: str = "overwrite",
                   partition_by: list[str] | None = None) -> int:
-        files, _ = self._write_files(df, partition_by)
+        files = self._write_files(df, partition_by)
         m = self._load()
         col, _ = self._snapshot_stats([], stats_col)
         stats = self._file_stats(files, col) if col else {}
