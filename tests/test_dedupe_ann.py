@@ -2116,36 +2116,11 @@ def test_webp_meta_prefix_codes():
 # kernels must hash-match each gate's oracle SQL (tools/check_oracle.py)
 # ---------------------------------------------------------------------------
 
-def _check_oracle():
-    import importlib.util
-    from pathlib import Path
-    path = Path(__file__).resolve().parents[1] / "tools" / "check_oracle.py"
-    spec = importlib.util.spec_from_file_location("check_oracle", path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-@pytest.fixture(scope="module")
-def oracle_db():
-    C = _check_oracle()
-    con = C.open_duckdb(SF)
-    yield C, con
-    con.close()
-
-
 @pytest.mark.parametrize("name", [
     "minhash_lsh", "near_dup_components", "simhash_fingerprints",
     "simhash_pairs", "incremental_dedup", "curation_funnel"])
-def test_dedup_gate_matches_oracle(spark, oracle_db, name):
-    import __spark_entry__ as E
-    C, con = oracle_db
-    sdf = E.queries()[name](spark, SF)
-    scols, srows = C.spark_rows(sdf)
-    dcols, drows = C.duck_rows(con, E.oracle_sql()[name])
-    assert sorted(scols) == sorted(dcols)
-    assert len(srows) == len(drows)
-    assert C.value_hash(scols, srows) == C.value_hash(dcols, drows)
+def test_dedup_gate_matches_oracle(oracle_gate, name):
+    sdf = oracle_gate(name)
     if name in ("minhash_lsh", "simhash_fingerprints"):
         # the gated md5 flavor runs the production Arrow kernel
         plan = sdf._jdf.queryExecution().executedPlan().toString()

@@ -1,10 +1,16 @@
-"""Stage 2 — field extraction ("read") in native pyspark.sql.functions.
+"""Stage 2 — field extraction ("read") as native Spark SQL expressions.
 
 Everything here is JVM-side, whole-stage-codegen'd column arithmetic — no
 Python. Reference analogs (SURVEY.md §2.4): maker normalization E7
 (``final_run_ocr.py:353-359``), year cast E10, CustomID concat E11
 (``final_run_ocr.py:436``), content-hash id E12
 (``scan_and_store.py:49-52``).
+
+Stage 2 is SQL text (``_FIELDS_SQL``) because one ``selectExpr`` is one
+py4j round trip and one analysis, where every ``pyspark.sql.functions``
+Column builder is a round trip and every ``withColumn`` an analysis
+(~1,000 round trips, ~0.2 s of driver wall per build on a 4-CPU host).
+``_sql_str`` quotes its string literals from the oracle's constants.
 
 The year extract E4 with its E5 fallback cascade
 (``final_run_ocr.py:153-297``) and the metadata sidecar extract E15
@@ -18,28 +24,23 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..oracle import YEAR_MAX, YEAR_MIN, YEAR_PATTERNS
+from ..oracle import MAKER_STRIP, YEAR_MAX, YEAR_MIN, YEAR_PATTERNS
+
+_WS = r"\s+"
+
+
+def _sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal under the default parser
+    (``spark.sql.parser.escapedStringLiterals=false``: backslash escapes)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def normalize_maker_col(col: Column) -> Column:
     """E7 — upper, whitelist ``A-Z0-9 &'-``, collapse ws, NULL if empty."""
     s = F.upper(col)
-    s = F.regexp_replace(s, r"[^A-Z0-9 &'-]", "")
-    s = F.trim(F.regexp_replace(s, r"\s+", " "))
+    s = F.regexp_replace(s, MAKER_STRIP, "")
+    s = F.trim(F.regexp_replace(s, _WS, " "))
     return F.nullif(s, F.lit(""))
-
-
-def custom_id_col(maker: Column, vintage: Column) -> Column:
-    """E11 — ``maker|vintage`` only when both present (final_run_ocr.py:436)."""
-    return F.when(
-        maker.isNotNull() & vintage.isNotNull(),
-        F.concat_ws("|", maker, vintage.cast("string")),
-    )
-
-
-def rec_id_col(key: Column) -> Column:
-    """E12 — ``sha1(key)[:12]`` (scan_and_store.py:49-52)."""
-    return F.when(key.isNotNull(), F.substring(F.sha1(key), 1, 12))
 
 
 # buckets the reference's candidate pool skips (final_run_ocr.py:364-366)
@@ -76,65 +77,57 @@ def best_maker_from_raw(raw: Column) -> Column:
                          .otherwise(best))
 
 
+# Stage-2 columns in output order; ``custom_id`` and ``rec_id`` read the
+# ``maker_name`` and ``custom_id`` of the same list (lateral column aliases).
+_FIELDS_SQL = (
+    # E7 — upper, whitelist ``A-Z0-9 &'-``, collapse ws, NULL if empty
+    f"nullif(trim(regexp_replace(regexp_replace(upper(title_raw), "
+    f"{_sql_str(MAKER_STRIP)}, ''), {_sql_str(_WS)}, ' ')), '') AS maker_name",
+    # E11 — ``maker|vintage`` only when both present (final_run_ocr.py:436)
+    "CASE WHEN maker_name IS NOT NULL AND vintage IS NOT NULL "
+    "THEN concat_ws('|', maker_name, CAST(vintage AS STRING)) END AS custom_id",
+    # E12 — ``sha1(key)[:12]`` (scan_and_store.py:49-52)
+    "CASE WHEN custom_id IS NOT NULL "
+    "THEN substring(sha1(custom_id), 1, 12) END AS rec_id",
+    # BlobData-analog struct (FIXTURES.md §3)
+    "named_struct("
+    "'roi_bbox', CASE WHEN size(spans) > 0 THEN array(get(spans, 0).start, "
+    "get(spans, size(spans) - 1).`end`) ELSE array(0, 0) END, "
+    "'roi_shape', array(n_blocks, length(text)), "
+    "'mask_info', named_struct('method', method, 'foreground_ratio', "
+    "length(text) / greatest(raw_chars, 1), 'note', charset), "
+    "'blob_count', kept_blocks, 'fingerprint', fingerprint, 'spans', spans"
+    ") AS blob_data",
+    # `raw` candidate buckets, the ocr_raw analog (final_run_ocr.py:325-340):
+    # the raw title, every in-range year candidate and the top 3 blocks.
+    # The year pattern needs a literal "19" or "20", so the oracle's own
+    # substring probe gates the regex (NULL text still gives NULL).
+    "map('title', array(named_struct('text', coalesce(title_raw, ''), "
+    "'conf', 1.0D)), "
+    "'year_candidates', IF(text IS NULL OR contains(text, '19') "
+    "OR contains(text, '20'), filter(transform("
+    f"regexp_extract_all(text, {_sql_str(YEAR_PATTERNS[1])}, 1), "
+    "x -> named_struct('text', x, 'conf', 1.0D)), "
+    f"s -> CAST(s.text AS INT) >= {YEAR_MIN} "
+    f"AND CAST(s.text AS INT) <= {YEAR_MAX}), array()), "
+    "'blocks', transform(slice(spans, 1, 3), s -> named_struct("
+    "'text', substring(text, s.start + 1, 40), 'conf', s.score))"
+    ") AS raw",
+)
+
+
 def extract_fields(seg: DataFrame) -> DataFrame:
     """Segmented pages → typed record columns (E6 dispatch analog).
+
+    One ``selectExpr`` of ``_FIELDS_SQL``: one py4j round trip and one
+    analysis, not one per ``withColumn`` and Column builder.
 
     ``vintage`` (E4/E5 cascade over main + whole-page text) and
     ``barcode`` (E15 canonical link) arrive resolved by
     ``oracle.extract`` in stage 1; their raw inputs never cross the Arrow
     boundary (see the segmentation module docstring).
     """
-    out = seg.withColumn("maker_name", normalize_maker_col(F.col("title_raw")))
-    out = out.withColumn("custom_id",
-                         custom_id_col(F.col("maker_name"), F.col("vintage")))
-    out = out.withColumn("rec_id", rec_id_col(F.col("custom_id")))
-    # BlobData-analog struct (FIXTURES.md §3) assembled natively.
-    out = out.withColumn(
-        "blob_data",
-        F.struct(
-            F.when(
-                F.size("spans") > 0,
-                F.array(F.get("spans", 0)["start"],
-                        F.get("spans", F.size("spans") - 1)["end"]),
-            ).otherwise(F.array(F.lit(0), F.lit(0))).alias("roi_bbox"),
-            F.array(F.col("n_blocks"), F.length("text")).alias("roi_shape"),
-            F.struct(
-                F.col("method").alias("method"),
-                (F.length("text") /
-                 F.greatest(F.col("raw_chars"), F.lit(1))).alias("foreground_ratio"),
-                F.col("charset").alias("note"),
-            ).alias("mask_info"),
-            F.col("kept_blocks").alias("blob_count"),
-            F.col("fingerprint").alias("fingerprint"),
-            F.col("spans").alias("spans"),
-        ),
-    )
-    # `raw` candidate buckets — the ocr_raw analog (final_run_ocr.py:325-340,
-    # persisted in cellar.jsonl): MAP<bucket, ARRAY<STRUCT<text, conf>>>.
-    # Buckets: the raw title candidate, every in-range year candidate (conf =
-    # pattern priority, 1.0 primary / 0.5 fallback), and the top block texts
-    # scored by the block scorer.
-    year_cands = F.filter(
-        F.transform(
-            F.regexp_extract_all("text", F.lit(YEAR_PATTERNS[1]), 1),
-            lambda x: F.struct(x.alias("text"), F.lit(1.0).alias("conf"))),
-        lambda s: (s["text"].cast("int") >= YEAR_MIN)
-        & (s["text"].cast("int") <= YEAR_MAX))
-    block_cands = F.transform(
-        F.slice(F.col("spans"), 1, 3),
-        lambda s: F.struct(
-            F.substring("text", s["start"] + 1, F.lit(40)).alias("text"),
-            s["score"].alias("conf")))
-    out = out.withColumn(
-        "raw",
-        F.create_map(
-            F.lit("title"),
-            F.array(F.struct(F.coalesce(F.col("title_raw"), F.lit(""))
-                             .alias("text"), F.lit(1.0).alias("conf"))),
-            F.lit("year_candidates"), year_cands,
-            F.lit("blocks"), block_cands,
-        ))
-    return out
+    return seg.selectExpr("*", *_FIELDS_SQL)
 
 
 RECORD_COLUMNS = ["url", "warc_ts", "custom_id", "maker_name", "vintage",
@@ -144,4 +137,4 @@ RECORD_COLUMNS = ["url", "warc_ts", "custom_id", "maker_name", "vintage",
 
 def to_records(extracted: DataFrame) -> DataFrame:
     """Final record projection (FIXTURES.md §2 / WineTracker.py:22-29 analog)."""
-    return extracted.select(*RECORD_COLUMNS)
+    return extracted.selectExpr(*RECORD_COLUMNS)

@@ -86,7 +86,8 @@ YEAR_PATTERNS = (
 )
 
 # Maker charset whitelist — final_run_ocr.py:355 ALLOWED = "A-Z0-9 &'-".
-_MAKER_STRIP_RE = re.compile(r"[^A-Z0-9 &'-]")
+MAKER_STRIP = r"[^A-Z0-9 &'-]"
+_MAKER_STRIP_RE = re.compile(MAKER_STRIP)
 _WS_RE = re.compile(r"\s+")
 _ALNUM_RE = re.compile(r"[A-Za-z0-9]")
 
