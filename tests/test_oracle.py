@@ -57,6 +57,52 @@ def test_extract_year_ordered_patterns():
     assert oracle.extract_year("") is None
 
 
+def _page(title, body):
+    head = f"<title>{title}</title>" if title is not None else ""
+    return (f"<html><head>{head}</head><body><p>{body}</p></body>"
+            "</html>").encode()
+
+
+def test_extract_record_ids():
+    """E7 maker from the title, E11 ``maker|year`` only when both exist,
+    E12 ``sha1(custom_id)[:12]``, on whole records."""
+    import hashlib
+
+    def ids(title, body):
+        r = oracle.extract(_page(title, body), "u")
+        return r["maker_name"], r["custom_id"], r["rec_id"]
+
+    assert ids("Château Margaux!  Grand  Vin", "Chateau red wine, 3 bottles "
+               "and a long tail of text") == ("CHTEAU MARGAUX GRAND VIN",
+                                              None, None)
+    assert ids("opus one", "Bottled in 2045 and 1999; lot 12019.") == (
+        "OPUS ONE", "OPUS ONE|1999",
+        hashlib.sha1(b"OPUS ONE|1999").hexdigest()[:12])
+    assert ids(None, "Vintage 1985 reserve") == (None, None, None)
+    assert ids("A&amp;B Wines - 'Cuvée'", "short") == (
+        "A&B WINES - 'CUVE'", None, None)
+
+
+def test_extract_year_candidates():
+    """The ``raw`` year bucket: every in-range bare-year match in the main
+    text, as matched, in document order; the whole-page fallback feeds
+    ``year`` only."""
+    from wine_label_ocr_spark.fixtures import _make_pdf
+
+    def cands(payload):
+        return oracle.extract(payload, "u")["year_candidates"]
+
+    assert cands(_page("t", "Chateau red wine, 3 bottles and a long tail")) == []
+    assert cands(_page("t", "Bottled in 2045 and 1999; lot 12019.")) == ["1999"]
+    assert cands(_make_pdf(["Domaine X 2010 release notes for the trade",
+                            "lot 1899 and 2031 and 2030"], "Domaine X")) \
+        == ["2010", "2030"]
+    nav = _page("t", "A main paragraph with plenty of words but no date")
+    nav = nav.replace(b"<body>", b"<body><nav>since 1987</nav>")
+    r = oracle.extract(nav, "u")
+    assert r["year"] == 1987 and r["year_candidates"] == []
+
+
 def test_fingerprint_sorted_and_pinned():
     # W1: fingerprint is invariant under span reordering (hybrid.py:234)
     spans = [

@@ -382,6 +382,8 @@ def test_segment_matches_oracle_extract(spark):
         assert r["warc_ts"] == inp["warc_ts"] and r["lang"] == inp["lang"]
         want = {
             "text": o["text"], "title_raw": o["title"], "vintage": o["year"],
+            "maker_name": o["maker_name"], "custom_id": o["custom_id"],
+            "rec_id": o["rec_id"], "year_candidates": o["year_candidates"],
             "barcode": p["canonical"], "method": o["method"],
             "charset": o["charset"], "n_blocks": o["n_blocks"],
             "kept_blocks": o["kept_blocks"], "raw_chars": o["raw_chars"],

@@ -2,9 +2,10 @@
 
 One ``mapInArrow`` over Arrow batches turns each page ``(url, warc_ts,
 html BINARY, lang)`` into its segmented form: extracted main ``text``,
-candidate span structs with geometry features, and the fields whose
-inputs only exist pre-segmentation (year cascade over the whole visible
-page, canonical-link metadata from the head markup).
+candidate span structs with geometry features, and every record field
+(maker name, year cascade over the whole visible page, year candidates,
+custom and content-hash ids, canonical-link metadata from the head
+markup). Stage 2 only reshapes these columns.
 
 Reference analogs (SURVEY.md §2.3): heuristic region detect D2
 (``hybrid.py:102-146``), connected-component labeling D4
@@ -13,9 +14,9 @@ charset/rotation search D7 (``hybrid.py:148-170``), the E5 fallback
 cascade (``final_run_ocr.py:187-297``: main text first, whole page on
 miss), and the PDF/layout branch (SURVEY.md §2.11). The UDF *shares the
 oracle's code path* — one implementation of the lexer/gate/cascade/
-fingerprint exists in the repo (SURVEY.md §7.3.1), and every computed
-column is a key of the ``oracle.extract`` record, so Spark output is
-byte-identical by construction, verified by golden tests.
+record fields/fingerprint exists in the repo (SURVEY.md §7.3.1), and
+every computed column is a key of the ``oracle.extract`` record, so
+Spark output is byte-identical by construction, verified by golden tests.
 
 Scale notes:
 
@@ -46,9 +47,10 @@ SPAN_DDL = ("array<struct<start:int,`end`:int,tag:string,cx:double,cy:double,"
 
 SEGMENT_DDL = (
     "url string, warc_ts timestamp, lang string, "
-    "text string, title_raw string, vintage int, barcode string, "
-    "method string, charset string, n_blocks int, kept_blocks int, "
-    f"raw_chars int, fingerprint string, spans {SPAN_DDL}"
+    "text string, title_raw string, maker_name string, vintage int, "
+    "year_candidates array<string>, custom_id string, rec_id string, "
+    "barcode string, method string, charset string, n_blocks int, "
+    f"kept_blocks int, raw_chars int, fingerprint string, spans {SPAN_DDL}"
 )
 
 # input columns carried through unchanged; every other SEGMENT_DDL column

@@ -42,6 +42,7 @@ from __future__ import annotations
 import hashlib
 import html as _htmlmod
 import re
+from collections.abc import Iterator
 from typing import Any
 
 # --------------------------------------------------------------------------
@@ -78,8 +79,9 @@ _TAG_ACTION.update(dict.fromkeys(SKIP_CONTAINERS, _ACT_SKIP))
 
 # Ordered year patterns — the analog of the 4 ordered regex patterns in
 # _extract_year_from_text (final_run_ocr.py:153-185): labeled contexts first,
-# bare 4-digit fallback last. Keep these expressible in BOTH Python `re` and
-# Java regex (the Spark pipeline uses the same strings via regexp_extract).
+# bare 4-digit fallback last. Python `re` semantics, as in the reference:
+# `\d` also matches non-ASCII decimal digits ("20٢٣" is 2023), which Java
+# regex's `\d` does not — so no engine but Python may evaluate them.
 YEAR_PATTERNS = (
     r"(?i)(?:vintage|copyright|©|\(c\))\s*:?\s*((?:19|20)\d{2})",
     r"(?<![0-9])((?:19|20)\d{2})(?![0-9])",
@@ -187,6 +189,22 @@ def normalize_maker(s: str | None) -> str | None:
 _YEAR_RES = tuple(re.compile(p) for p in YEAR_PATTERNS)
 
 
+def _may_hold_year(text: str) -> bool:
+    # both patterns require a literal "19"/"20" decade prefix — absent
+    # those substrings no candidate exists, and the two C-level probes
+    # beat the regex scan ~30× (65% of bench main texts have neither)
+    return "19" in text or "20" in text
+
+
+def _years(pattern: re.Pattern, text: str) -> Iterator[tuple[int, str]]:
+    """``(year, matched string)`` of every in-range match of ``pattern``
+    over ``text``, in document order (final_run_ocr.py:161 range check)."""
+    for m in pattern.finditer(text):
+        y = int(m.group(1))
+        if YEAR_MIN <= y <= YEAR_MAX:
+            yield y, m.group(1)
+
+
 def extract_year(text: str) -> int | None:
     """E4 — ordered-pattern year extraction with range check.
 
@@ -198,21 +216,14 @@ def extract_year(text: str) -> int | None:
     C-level substring probe gates it (same hit set — profiled ~12% of
     the extract kernel on marker-free documents).
     """
-    # both patterns require a literal "19"/"20" decade prefix — absent
-    # those substrings no candidate exists, and the two C-level probes
-    # beat the regex scan ~30× (65% of bench main texts have neither)
-    if "19" not in text and "20" not in text:
+    if not _may_hold_year(text):
         return None
     tl = text.lower()
     if ("vintage" in tl or "copyright" in tl or "©" in tl or "(c)" in tl):
-        for m in _YEAR_RES[0].finditer(text):
-            y = int(m.group(1))
-            if YEAR_MIN <= y <= YEAR_MAX:
-                return y
-    for m in _YEAR_RES[1].finditer(text):
-        y = int(m.group(1))
-        if YEAR_MIN <= y <= YEAR_MAX:
+        for y, _ in _years(_YEAR_RES[0], text):
             return y
+    for y, _ in _years(_YEAR_RES[1], text):
+        return y
     return None
 
 
@@ -742,11 +753,13 @@ def extract(payload: bytes, url: str,
             http_charset: str | None = None) -> dict[str, Any]:
     """The oracle: one document in, the canonical record out.
 
-    Returns ``{url, text, title, maker_name, year, custom_id, rec_id,
-    barcode, spans, fingerprint, method, charset, n_blocks, kept_blocks,
-    raw_chars}``. ``text`` is the byte-identity target; ``year`` falls back
-    from ``text`` to the full visible text (E5 cascade), whose length is
-    ``raw_chars``; ``barcode`` is the E15 canonical link (``None`` for
+    Returns ``{url, text, title, maker_name, year, year_candidates,
+    custom_id, rec_id, barcode, spans, fingerprint, method, charset,
+    n_blocks, kept_blocks, raw_chars}``. ``text`` is the byte-identity
+    target; ``year`` falls back from ``text`` to the full visible text (E5
+    cascade), whose length is ``raw_chars``; ``year_candidates`` are the
+    in-range ``YEAR_PATTERNS[1]`` matches in ``text`` as matched strings,
+    in document order; ``barcode`` is the E15 canonical link (``None`` for
     PDFs). ``http_charset`` is the transport's charset claim (WARC HTTP
     envelope), which outranks in-document declarations — see
     ``detect_charset``.
@@ -790,6 +803,9 @@ def extract(payload: bytes, url: str,
     year = extract_year(text)
     if year is None:
         year = extract_year(raw_text)
+    # the `raw` year bucket: every in-range bare-year match in main text
+    cands = ([s for _, s in _years(_YEAR_RES[1], text)]
+             if _may_hold_year(text) else [])
     maker = normalize_maker(title)
     custom_id = f"{maker}|{year}" if (maker is not None and year is not None) else None
     return {
@@ -798,6 +814,7 @@ def extract(payload: bytes, url: str,
         "title": title,
         "maker_name": maker,
         "year": year,
+        "year_candidates": cands,
         "custom_id": custom_id,
         "rec_id": rec_id(custom_id) if custom_id else None,
         "barcode": barcode,
