@@ -2118,7 +2118,8 @@ def test_webp_meta_prefix_codes():
 
 @pytest.mark.parametrize("name", [
     "minhash_lsh", "near_dup_components", "simhash_fingerprints",
-    "simhash_pairs", "incremental_dedup", "curation_funnel"])
+    "simhash_pairs", "incremental_dedup", "curation_funnel",
+    "decontamination"])
 def test_dedup_gate_matches_oracle(oracle_gate, name):
     sdf = oracle_gate(name)
     if name in ("minhash_lsh", "simhash_fingerprints"):

@@ -5,6 +5,7 @@ Pure-Python properties of the frozen kernels; no Spark session needed.
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from wine_label_ocr_spark import oracle
@@ -162,3 +163,115 @@ def test_lexer_linear_on_truncated_tag():
     assert time.time() - t0 < 5.0, "lexer non-linear on truncated tags"
     # the text before the truncated tag still lexes
     assert any(b["text"] == "kept" for b in oracle.lex_blocks(docs[4]))
+
+
+# ---------------------------------------------------------------------------
+# dedup sketch kernels: byte spans of one UTF-8 buffer vs a list of str
+# ---------------------------------------------------------------------------
+
+JAVA_WS = r"[ \t\n\x0b\f\r]+"  # Java regex \s: ASCII only
+
+# the six Java-\s separators, three Unicode spaces Java does not split on,
+# multibyte characters, and few letters so that grams repeat
+ws_text_st = st.text(
+    alphabet=" \t\n\x0b\x0c\r\u00a0\u2003\u3000ab\u5b57\u00e9\U0001f389",
+    max_size=40)
+batch_st = st.lists(st.one_of(st.none(), ws_text_st), max_size=8)
+
+
+def _ref_tokens(s: str) -> list[str]:
+    import re
+    return [t for t in re.split(JAVA_WS, s) if t]
+
+
+def _ref_grams(s: str, k: int) -> list[str]:
+    toks = _ref_tokens(s)
+    if len(toks) < k:
+        return [" ".join(toks)]
+    return [" ".join(toks[i:i + k]) for i in range(len(toks) - k + 1)]
+
+
+def _ref_hash(strs: list[str], seed: int, oracle_safe: bool) -> list[int]:
+    """``dedupe._hash64`` of each str, one str at a time."""
+    from hashlib import md5
+
+    import numpy as np
+
+    from wine_label_ocr_spark.functions.xxh64 import spark_xxhash64_str
+    if oracle_safe:
+        return [int(md5(f"{s}#{seed}".encode()).hexdigest()[:15], 16)
+                for s in strs]
+    return [int(v) for v in spark_xxhash64_str(strs, seed).view(np.int64)]
+
+
+@pytest.mark.parametrize("k", [1, 3, 5])
+@given(batch_st)
+@settings(max_examples=150, deadline=None)
+def test_gram_spans_match_str_join(k, texts):
+    from wine_label_ocr_spark.operators.dedupe import _gram_spans
+    buf, starts, lens, offs, n_tok, nulls = _gram_spans(texts, k)
+    assert nulls.tolist() == [t is None for t in texts]
+    docs = [t for t in texts if t is not None]
+    ends = list(offs[1:]) + [len(lens)]
+    for j, t in enumerate(docs):
+        got = [buf[a:a + n].decode()
+               for a, n in zip(starts[offs[j]:ends[j]], lens[offs[j]:ends[j]])]
+        assert got == _ref_grams(t, k), repr(t)
+        assert n_tok[j] == len(_ref_tokens(t))
+
+
+def _ref_null_xxhash(p: int) -> int:
+    """``xxhash64(NULL, lit(p))``: the null input is skipped, leaving
+    hashInt(p) from seed 42 (pinned against Spark in test_xxh64.py)."""
+    import numpy as np
+
+    from wine_label_ocr_spark.functions.xxh64 import xxh64_int
+    return int(xxh64_int(p, np.uint64(42)).view(np.int64))
+
+
+@pytest.mark.parametrize("oracle_safe", [False, True], ids=["xxhash", "md5"])
+@pytest.mark.parametrize("k", [1, 3, 5])
+@given(batch_st)
+@settings(max_examples=60, deadline=None)
+def test_minhash_kernel_matches_str_reference(k, oracle_safe, texts):
+    from hashlib import md5
+
+    import pandas as pd
+
+    from wine_label_ocr_spark.operators.dedupe import _minhash_bands_kernel
+    n_perm, n_bands = 8, 4
+    got = _minhash_bands_kernel(k, n_perm, n_bands, oracle_safe)(
+        pd.Series(texts, dtype=object))
+    for t, bands in zip(texts, got):
+        if t is None:
+            sig = ([2 ** 63 - 1] * n_perm if oracle_safe
+                   else [_ref_null_xxhash(p) for p in range(n_perm)])
+        else:
+            grams = _ref_grams(t, k)
+            sig = [min(_ref_hash(grams, p, oracle_safe))
+                   for p in range(n_perm)]
+        rpb = n_perm // n_bands
+        want = [md5(",".join(map(str, sig[b * rpb:(b + 1) * rpb])).encode())
+                .hexdigest() for b in range(n_bands)]
+        assert list(bands) == want, repr(t)
+
+
+@pytest.mark.parametrize("oracle_safe", [False, True], ids=["xxhash", "md5"])
+@given(batch_st)
+@settings(max_examples=100, deadline=None)
+def test_simhash_kernel_matches_str_reference(oracle_safe, texts):
+    import pandas as pd
+
+    from wine_label_ocr_spark.operators.dedupe import _simhash64_kernel
+    got = _simhash64_kernel(oracle_safe)(pd.Series(texts, dtype=object))
+    for t, sh in zip(texts, got):
+        if t is None:
+            assert sh is pd.NA, repr(t)
+            continue
+        hashes = _ref_hash(_ref_tokens(t), 0, oracle_safe)
+        bits = 0
+        for j in range(64):
+            votes = sum(1 if (h >> j) & 1 else -1 for h in hashes)
+            bits |= (votes > 0) << j
+        want = bits - (1 << 64) if bits >= 1 << 63 else bits
+        assert int(sh) == want, repr(t)

@@ -1,17 +1,27 @@
 """Regenerate PLANS.md — formatted physical plans of the headline queries.
 
-Usage: python tools/gen_plans.py   (writes /root/repo/PLANS.md)
+Usage::
+
+    python tools/gen_plans.py                      # every section
+    python tools/gen_plans.py minhash_lsh ...      # only these sections
+
+A section's name is the first word of its title (``minhash_lsh``,
+``decontamination``, ``flagship``, ...). Named sections are re-rendered
+in place in the existing PLANS.md and every other section is kept as it
+is, so a plan change in one query does not renumber the expression ids
+of all the others. PLANS.md is written in the repository root.
 
 Each section pairs a plan with the property tests/test_plans.py pins, so
-the judge (and future rounds) can re-audit plan quality without rerunning
-anything.
+plan quality can be re-audited without rerunning anything.
 """
 
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 SF = "/root/testdata/sf0.001"
 
@@ -23,7 +33,11 @@ tests/test_plans.py pins. Regenerate after any plan-shape change.
 """
 
 
-def main() -> None:
+def section_name(title: str) -> str:
+    return title.split()[0].lower()
+
+
+def main(names: list[str]) -> None:
     from pyspark.sql import functions as F
 
     import __spark_entry__ as E
@@ -46,9 +60,11 @@ def main() -> None:
 
     sections = [
         ("Flagship extract pipeline (pages → spans → fields → records)",
-         "Zero Exchange (pinned): scan → ONE MapInPandas → codegen'd native "
-         "extraction. The pure-map shape is what makes the N→4N scaling "
-         "efficiency hold — no cross-executor coordination at all.",
+         "Zero Exchange (pinned): scan → ONE MapInArrow (every record "
+         "field, computed by `oracle.extract`) → one native projection "
+         "that packs `blob_data` and `raw`. The pure-map shape is what "
+         "makes the N→4N scaling efficiency hold — no cross-executor "
+         "coordination at all.",
          extract_records(pages_spark(spark, 10, partitions=2))),
         ("lineitem_agg — filter pushdown + partial aggregation",
          "PushedFilters on l_shipdate reach the parquet scan (pinned); "
@@ -60,9 +76,13 @@ def main() -> None:
          "the orders side never shuffles for the join.",
          E.q_orders_by_segment(spark, SF)),
         ("minhash_lsh — narrow-row band shuffle",
-         "The (band, band_hash) exchanges carry only (id, band, hash) — the "
-         "wide shingle arrays stay out of the shuffle (pinned) and rejoin "
-         "by id for surviving pairs only. Window = the max_bucket skew guard.",
+         "One Arrow kernel (ArrowEvalPython) gives the band hashes; the "
+         "(band, band_hash) exchange carries only (id, band, hash) — the "
+         "text stays out of the shuffle (pinned) and rejoins by id for "
+         "candidate pairs only. One aggregation per bucket drops oversized "
+         "buckets (the max_bucket skew guard) and emits the id pairs. The "
+         "verify binds each side's tokens and shingles with `let`: one "
+         "split per text per evaluation (pinned).",
          minhash_lsh_pairs(docs, n_perm=8, n_bands=2, oracle_safe=False)),
         ("fuzzy_blocked_join — bounded blocks, explicit co-partitioning",
          "Window count = block-size skew guard (oversized blocks dropped, "
@@ -258,14 +278,28 @@ def main() -> None:
              docs)),
     ]
 
+    known = {section_name(title) for title, _, _ in sections}
+    unknown = sorted(set(names) - known)
+    if unknown:
+        raise SystemExit(f"unknown sections {unknown}; known: {sorted(known)}")
+    path = ROOT / "PLANS.md"
+    # the current text of each section, by name ("## " opens a section)
+    kept = {}
+    if names:
+        for chunk in path.read_text(encoding="utf-8").split("\n## ")[1:]:
+            kept[section_name(chunk)] = f"\n## {chunk.rstrip()}\n"
     out = [HEADER]
     for title, note, df in sections:
+        name = section_name(title)
+        if name in kept and name not in names:
+            out.append(kept[name])
+            continue
         out.append(f"\n## {title}\n\n{note}\n\n```\n{plan(df)}\n```\n")
-    with open("/root/repo/PLANS.md", "w", encoding="utf-8") as f:
-        f.write("".join(out))
-    print("wrote PLANS.md")
+        print("rendered", name)
+    path.write_text("".join(out), encoding="utf-8")
+    print("wrote", path)
     spark.stop()
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

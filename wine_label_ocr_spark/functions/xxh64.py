@@ -13,10 +13,15 @@ one string hash with seed 42 chained into one long hash. Evaluating that
 chain per element through Catalyst's *interpreted* higher-order lambdas
 measured ~0.3-0.5 µs of expression overhead per call — ×(shingles ×
 permutations) per document it dominates the MinHash/SimHash maps. Here
-the same bits come out of numpy: inputs are bucketed by byte length so
-each bucket is a dense ``[m, L]`` uint8 matrix processed with fixed
-control flow (stripes / 8-byte / 4-byte / tail reads at static offsets),
-and the long chain is pure uint64 vector arithmetic.
+the same bits come out of numpy, and the strings are never Python
+objects: ``xxh64_spans`` hashes byte spans ``(start, length)`` of one
+UTF-8 buffer (a batch's tokens or k-grams), bucketed by length so each
+bucket is a dense ``[m, L]`` uint8 gather processed with fixed control
+flow (stripes / 8-byte / 4-byte / tail reads at static offsets).
+``xxh64_strings`` is the same body behind an encode-and-join of a
+string list. The int chain is pure uint64 vector arithmetic;
+``xxh64_int_chain`` runs it in place for one seed vector and many
+values (the MinHash permutations).
 
 Bit-parity with Spark is pinned by tests/test_xxh64.py over lengths
 0..100, unicode, and the chained form.
@@ -32,6 +37,7 @@ _P3 = np.uint64(0x165667B19E3779F9)
 _P4 = np.uint64(0x85EBCA77C2B2AE63)
 _P5 = np.uint64(0x27D4EB2F165667C5)
 _SPARK_SEED = np.uint64(42)
+_MASK64 = (1 << 64) - 1
 
 
 def _rotl(x: np.ndarray, r: int) -> np.ndarray:
@@ -140,16 +146,50 @@ def xxh64_int(value, seed) -> np.ndarray:
         return _fmix(h)
 
 
-def xxh64_strings(strs: list, seed=_SPARK_SEED) -> np.ndarray:
-    """XXH64 of each python string's UTF-8 bytes (Spark string path).
+def xxh64_int_chain(seed):
+    """``value -> xxh64_int(value, seed)`` for one fixed ``[m]`` uint64
+    ``seed`` vector and a scalar int ``value`` per call (one MinHash
+    permutation each).
 
-    Buckets by byte length so every bucket runs the fixed-length
-    vectorized kernel; returns ``[n]`` uint64 in input order.
+    The value-free term ``seed + P5 + 4`` is computed once; every call
+    then runs in place in two reused ``[m]`` buffers, so the returned
+    array is overwritten by the next call.
     """
-    n = len(strs)
+    with np.errstate(over="ignore"):
+        base = np.asarray(seed, dtype=np.uint64) + _P5 + np.uint64(4)
+    h = np.empty_like(base)
+    t = np.empty_like(base)
+
+    def at(value) -> np.ndarray:
+        v = np.uint64(((int(value) & 0xFFFFFFFF) * int(_P1)) & _MASK64)
+        np.bitwise_xor(base, v, out=h)
+        np.left_shift(h, np.uint64(23), out=t)            # rotl 23
+        np.right_shift(h, np.uint64(41), out=h)
+        np.bitwise_or(h, t, out=h)
+        np.multiply(h, _P2, out=h)
+        np.add(h, _P3, out=h)
+        for shift, prime in ((33, _P2), (29, _P3), (32, None)):  # fmix
+            np.right_shift(h, np.uint64(shift), out=t)
+            np.bitwise_xor(h, t, out=h)
+            if prime is not None:
+                np.multiply(h, prime, out=h)
+        return h
+
+    return at
+
+
+def xxh64_spans(buf: bytes, starts, lens, seed=_SPARK_SEED) -> np.ndarray:
+    """XXH64 of each byte span ``buf[starts[i]:starts[i] + lens[i]]``.
+
+    Buckets the spans by length and gathers each bucket into a dense
+    ``[m, L]`` matrix for the fixed-length vectorized kernel; returns
+    ``[n]`` uint64 in span order.
+    """
+    data = np.frombuffer(buf, dtype=np.uint8)
+    starts = np.asarray(starts, dtype=np.int64)
+    lens = np.asarray(lens, dtype=np.int64)
+    n = len(lens)
     out = np.zeros(n, dtype=np.uint64)
-    bs = [s.encode("utf-8") for s in strs]
-    lens = np.fromiter((len(b) for b in bs), dtype=np.int64, count=n)
     order = np.argsort(lens, kind="stable")
     sorted_lens = lens[order]
     start = 0
@@ -161,11 +201,19 @@ def xxh64_strings(strs: list, seed=_SPARK_SEED) -> np.ndarray:
             out[idx] = xxh64_fixed(np.zeros((len(idx), 0), dtype=np.uint8),
                                    seed)
         else:
-            M = np.frombuffer(b"".join(bs[i] for i in idx),
-                              dtype=np.uint8).reshape(len(idx), int(L))
-            out[idx] = xxh64_fixed(M, seed)
+            M = np.lib.stride_tricks.sliding_window_view(data, int(L))
+            out[idx] = xxh64_fixed(M[starts[idx]], seed)
         start = stop
     return out
+
+
+def xxh64_strings(strs: list, seed=_SPARK_SEED) -> np.ndarray:
+    """XXH64 of each python string's UTF-8 bytes (Spark string path):
+    ``xxh64_spans`` over the strings' encodings joined into one buffer.
+    """
+    bs = [s.encode("utf-8") for s in strs]
+    lens = np.fromiter(map(len, bs), dtype=np.int64, count=len(bs))
+    return xxh64_spans(b"".join(bs), np.cumsum(lens) - lens, lens, seed)
 
 
 def spark_xxhash64_str(strs: list, extra_int_seed: int | None = None

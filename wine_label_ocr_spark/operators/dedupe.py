@@ -27,6 +27,14 @@ n_bands (8-16), all of it shuffled once on (band_idx, band_hash). Hot
 buckets (boilerplate dups) are bounded by ``max_bucket`` to keep the
 pair join from exploding on skew — the explicit skew handling the north
 rule asks for.
+
+Both sketch kernels and the Jaccard verify are linear in document
+length. The kernels never build a Python string per token or shingle:
+a batch is one UTF-8 buffer and each gram is a byte span of it
+(``_gram_spans``), hashed in place. The verify binds each side's token
+and shingle arrays with ``functions.let``, so a text is split once per
+Jaccard evaluation: a column referenced inside a per-position
+``transform`` lambda is evaluated again for every position.
 """
 
 from __future__ import annotations
@@ -34,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..functions import let
 from .textops import tokens_col
 
 
@@ -45,12 +54,14 @@ def _hash64(col: Column, seed: int, oracle_safe: bool) -> Column:
     return F.xxhash64(col, F.lit(seed))
 
 
-def _hash64_batch(strs: list, oracle_safe: bool):
-    """Batch twin of ``_hash64`` over non-NULL strings: returns
-    ``seed -> int64[len(strs)]``, the bits ``_hash64`` gives each string.
+def _hash64_batch(buf: bytes, starts, lens, oracle_safe: bool):
+    """Batch twin of ``_hash64`` over the strings whose UTF-8 bytes are
+    the spans ``buf[starts[i]:starts[i] + lens[i]]``: returns
+    ``seed -> int64[len(lens)]``, the bits ``_hash64`` gives each string.
 
-    xxhash64 flavor: one vectorized string pass (seed 42), each seed then
-    chained through hashInt. md5 flavor: each string's UTF-8 bytes are
+    xxhash64 flavor: one vectorized span pass (seed 42), each seed then
+    chained through hashInt in place (``xxh64_int_chain``: the returned
+    array is overwritten by the next call). md5 flavor: each span is
     hashed once and a copy is extended with ``#<seed>``; the first 15 hex
     digits of the digest are its top 60 bits.
     """
@@ -59,7 +70,9 @@ def _hash64_batch(strs: list, oracle_safe: bool):
     if oracle_safe:
         from hashlib import md5
 
-        prefixes = [md5(s.encode()) for s in strs]
+        mv = memoryview(buf)
+        prefixes = [md5(mv[a:a + n])
+                    for a, n in zip(starts.tolist(), lens.tolist())]
 
         def at(seed: int):
             suffix = f"#{seed}".encode()
@@ -73,10 +86,56 @@ def _hash64_batch(strs: list, oracle_safe: bool):
 
         return at
 
-    from ..functions.xxh64 import spark_xxhash64_str, xxh64_int
+    from ..functions.xxh64 import xxh64_int_chain, xxh64_spans
 
-    h0 = spark_xxhash64_str(strs)
-    return lambda seed: xxh64_int(seed, h0).view(np.int64)
+    at = xxh64_int_chain(xxh64_spans(buf, starts, lens))
+    return lambda seed: at(seed).view(np.int64)
+
+
+def _gram_spans(texts, k: int):
+    """Word k-grams of a batch of texts as byte spans of ONE UTF-8 buffer.
+
+    Each non-NULL text is encoded, its tokens are re-joined by single
+    spaces, and the texts are joined by spaces into ``buf``. Tokens come
+    from ``bytes.split()``, which splits on exactly Java's ``\\s``
+    (``[ \\t\\n\\x0b\\f\\r]``, ASCII only): UTF-8 encodes every other code
+    point, U+00A0 and U+3000 included, in bytes ≥ 0x80, so those stay
+    inside tokens. Token ends are the buffer's space positions, and a
+    k-gram is the span from token i's start to token i+k-1's end —
+    exactly the bytes of ``" ".join(toks[i:i + k])``. A text of fewer
+    than k tokens has one gram, its whole join (the empty span for a
+    text with no token).
+
+    Returns ``(buf, starts, lens, offs, n_tok, nulls)``: the grams of the
+    j-th non-NULL text are spans ``offs[j]`` up to ``offs[j + 1]`` (each
+    text has at least one), ``n_tok`` counts its tokens and ``nulls``
+    marks the NULL rows of ``texts``.
+    """
+    import numpy as np
+
+    nulls = np.fromiter((t is None for t in texts), dtype=bool,
+                        count=len(texts))
+    docs = [b" ".join(t.encode().split()) for t in texts if t is not None]
+    buf = b" ".join(docs)
+    dlen = np.fromiter(map(len, docs), dtype=np.int64, count=len(docs))
+    dstart = np.cumsum(dlen + 1) - (dlen + 1)
+    dend = dstart + dlen
+    sp = np.flatnonzero(np.frombuffer(buf, dtype=np.uint8) == 32)
+    t_start = np.concatenate(([0], sp + 1))
+    t_end = np.concatenate((sp, [len(buf)]))
+    tok = t_end > t_start           # an empty doc leaves an empty run
+    t_start, t_end = t_start[tok], t_end[tok]
+    t_off = np.searchsorted(t_start, dstart)
+    n_tok = np.searchsorted(t_start, dend) - t_off
+    n_gram = np.maximum(n_tok - (k - 1), 1)
+    offs = np.cumsum(n_gram) - n_gram
+    doc = np.repeat(np.arange(len(docs)), n_gram)
+    starts, ends = dstart[doc], dend[doc]   # short texts: the whole join
+    full = n_tok[doc] >= k
+    first = (t_off[doc] + np.arange(len(doc)) - offs[doc])[full]
+    starts[full] = t_start[first]
+    ends[full] = t_end[first + (k - 1)]
+    return buf, starts, ends - starts, offs, n_tok, nulls
 
 
 def content_key(text: Column) -> Column:
@@ -127,23 +186,34 @@ def exact_dedup_ids(df: DataFrame, text_col: str = "text",
 
 
 def shingles(text: Column, k: int = 3) -> Column:
-    """Distinct word k-grams (array<string>)."""
-    toks = tokens_col(text)
-    n = F.size(toks)
-    return F.when(n >= k, F.array_distinct(F.transform(
-        F.sequence(F.lit(1), n - F.lit(k - 1)),
-        lambda i: F.array_join(F.slice(toks, i, k), " "),
-    ))).otherwise(F.array(F.array_join(toks, " ")))
+    """Distinct word k-grams (array<string>); fewer than k tokens give
+    one gram, their whole join.
+
+    The token array is bound once with ``let``: a column referenced
+    inside the per-position ``transform`` lambda is evaluated again for
+    every position, which would split the text once per shingle
+    (quadratic in document length).
+    """
+    def grams(toks: Column) -> Column:
+        n = F.size(toks)
+        return F.when(n >= k, F.array_distinct(F.transform(
+            F.sequence(F.lit(1), n - F.lit(k - 1)),
+            lambda i: F.array_join(F.slice(toks, i, k), " "),
+        ))).otherwise(F.array(F.array_join(toks, " ")))
+
+    return let(tokens_col(text), grams)
 
 
 _LONG_MAX = 9223372036854775807
 
 
 def jaccard(sh_a: Column, sh_b: Column) -> Column:
-    """Exact n-gram Jaccard on distinct shingle arrays."""
-    inter = F.size(F.array_intersect(sh_a, sh_b))
-    union = F.size(F.array_union(sh_a, sh_b))
-    return inter / F.greatest(union, F.lit(1))
+    """Exact n-gram Jaccard on distinct shingle arrays. Both arrays are
+    bound with ``let``, so each is computed once per evaluation, not once
+    for the intersection and again for the union."""
+    return let(sh_a, lambda a: let(sh_b, lambda b: F.size(
+        F.array_intersect(a, b)) / F.greatest(
+            F.size(F.array_union(a, b)), F.lit(1))))
 
 
 def _minhash_bands_kernel(k: int, n_perm: int, n_bands: int,
@@ -156,22 +226,23 @@ def _minhash_bands_kernel(k: int, n_perm: int, n_bands: int,
     per-permutation signed min of ``_hash64(shingle, p)``, then per band
     ``md5(",".join(signed signature slice))`` — the construction the
     DuckDB twins of ``minhash_lsh`` / ``incremental_dedup`` spell out.
+    Shingles are never Python strings: ``_gram_spans`` gives their byte
+    spans in one UTF-8 buffer and ``_hash64_batch`` hashes the spans.
 
     NULL text has the one-shingle array ``[NULL]``: ``xxhash64`` skips the
     null input, leaving ``hashInt(p, 42)`` per permutation, while the md5
     hash is NULL and ``least()`` skips it, leaving ``LONG_MAX``.
 
     Memory: the signature is one per-permutation ``np.minimum.reduceat``
-    over the flat shingle hashes — never a ``[shingles × n_perm]`` matrix.
+    over the flat shingle hashes — never a ``[shingles × n_perm]`` matrix;
+    the spans cost two int64 per shingle.
     """
-    import re
     from hashlib import md5
 
     import numpy as np
 
     from ..functions.xxh64 import _SPARK_SEED, xxh64_int
 
-    split = re.compile(r"[ \t\n\x0b\f\r]+").split
     rpb = n_perm // n_bands
     null_sig = (np.full(n_perm, _LONG_MAX, dtype=np.int64) if oracle_safe
                 else xxh64_int(np.arange(n_perm), _SPARK_SEED).view(np.int64))
@@ -179,43 +250,21 @@ def _minhash_bands_kernel(k: int, n_perm: int, n_bands: int,
     def kernel(texts):
         import pandas as pd
 
-        shingles_flat: list[str] = []
-        starts = []
-        null_mask = []
-        for t in texts:
-            starts.append(len(shingles_flat))
-            null_mask.append(t is None)
-            if t is None:
-                continue
-            toks = [tok for tok in split(t) if tok]
-            if len(toks) >= k:
-                shingles_flat.extend(
-                    " ".join(toks[i:i + k])
-                    for i in range(len(toks) - k + 1))
-            else:
-                shingles_flat.append(" ".join(toks))
-        n = len(texts)
-        sigs = np.empty((n, n_perm), dtype=np.int64)
-        nulls = np.asarray(null_mask, dtype=bool)
-        valid = np.nonzero(~nulls)[0]
-        if len(valid):
+        buf, starts, lens, offs, _, nulls = _gram_spans(texts, k)
+        sigs = np.empty((len(texts), n_perm), dtype=np.int64)
+        if len(offs):
             # every non-null doc has ≥ 1 shingle (empty text → [""]), so
-            # the valid docs' segments tile the flat array with no empty
-            # segment — reduceat is safe on their start offsets
-            hash_at = _hash64_batch(shingles_flat, oracle_safe)
-            s_valid = np.asarray(starts)[valid]
+            # its segment of the flat hashes is never empty — reduceat is
+            # safe on the segment offsets
+            hash_at = _hash64_batch(buf, starts, lens, oracle_safe)
+            valid = ~nulls
             for p in range(n_perm):
-                sigs[valid, p] = np.minimum.reduceat(hash_at(p), s_valid)
+                sigs[valid, p] = np.minimum.reduceat(hash_at(p), offs)
         sigs[nulls] = null_sig
-        out = []
-        for i in range(n):
-            row = sigs[i]
-            out.append([
-                md5(",".join(str(int(v))
-                             for v in row[b * rpb:(b + 1) * rpb])
-                    .encode()).hexdigest()
-                for b in range(n_bands)])
-        return pd.Series(out)
+        return pd.Series([
+            [md5(",".join(map(str, row[b * rpb:(b + 1) * rpb])).encode())
+             .hexdigest() for b in range(n_bands)]
+            for row in sigs.tolist()])
 
     return kernel
 
@@ -292,6 +341,10 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
     # it was broadcasting the CORPUS text table instead (guide §3.1 —
     # estimates after aggregates are badly wrong) — wrong at any scale
     # and measured 3× slower at sf1.0 from per-run corpus broadcasts.
+    # The threshold filter is pushed into the join condition: the Jaccard
+    # is evaluated there for every candidate pair and again in the
+    # Project for the pairs that pass, each time splitting each text once
+    # (tests/test_plans.py::test_minhash_verify_splits_each_text_once).
     txt_a = df.select(F.col(id_col).alias("id_a"), F.col(text_col).alias("_ta"))
     txt_b = df.select(F.col(id_col).alias("id_b"), F.col(text_col).alias("_tb"))
     half = txt_a.join(F.broadcast(pairs), "id_a")  # ≤ |pairs| rows out
@@ -446,8 +499,6 @@ def winnow_fingerprints(df: DataFrame, id_col: str = "doc_id",
     selected (doc, pos, fp) — per-doc duplicates removed in the array
     (overlapping windows reselect the same gram), no shuffle needed.
     """
-    from ..functions import let
-
     toks = tokens_col(F.col(text_col))
 
     def fps_of(t: Column) -> Column:
@@ -698,47 +749,31 @@ def incremental_dedup(new_docs: DataFrame, prior_fps: DataFrame,
 
 def _simhash64_kernel(oracle_safe: bool):
     """Batch SimHash kernel in the ``_hash64`` flavor ``oracle_safe``
-    selects: one ``_hash64_batch`` pass (seed 0) over every token of the
-    batch, bit-unpack to uint8 [T,64], per-doc segment sum of set bits
-    (``np.add.reduceat`` over the docs with tokens) for the ±1 bit votes,
-    pack the sign bits back to int64. Tokens are Java-``\\s`` runs. A doc
-    with no tokens hashes to 0; NULL text to NULL.
+    selects: one ``_hash64_batch`` pass (seed 0) over the byte spans of
+    every token of the batch (``_gram_spans`` with k = 1), bit-unpack to
+    uint8 [T,64], per-doc segment sum of set bits (``np.add.reduceat``)
+    for the ±1 bit votes, pack the sign bits back to int64. Tokens are
+    Java-``\\s`` runs. A doc with no tokens hashes to 0 (its one empty
+    gram casts no vote); NULL text to NULL.
     """
-    import re
-
     import numpy as np
-
-    split = re.compile(r"[ \t\n\x0b\f\r]+").split
 
     def kernel(texts):
         import pandas as pd
 
-        toks_all: list[str] = []
-        starts = []
-        null_mask = []
-        for t in texts:
-            null_mask.append(t is None)
-            starts.append(len(toks_all))
-            if t is not None:
-                toks_all.extend(tok for tok in split(t) if tok)
-        starts.append(len(toks_all))
-        n = len(texts)
-        out = np.zeros(n, dtype=np.int64)
-        if toks_all:
-            h = _hash64_batch(toks_all, oracle_safe)(0)
+        buf, starts, lens, offs, n_tok, nulls = _gram_spans(texts, 1)
+        out = np.zeros(len(texts), dtype=np.int64)
+        if len(offs):
+            h = _hash64_batch(buf, starts, lens, oracle_safe)(0)
             bits = np.unpackbits(h.view(np.uint8).reshape(-1, 8),
                                  axis=1, bitorder="little")
-            s = np.asarray(starts)
-            n_tok = (s[1:] - s[:-1]).reshape(-1, 1)
-            has_tok = n_tok[:, 0] > 0
-            cnt_set = np.zeros((n, 64), dtype=np.int64)  # set-bit counts
-            cnt_set[has_tok] = np.add.reduceat(bits, s[:-1][has_tok], axis=0,
-                                               dtype=np.int64)
-            pos = (2 * cnt_set) > n_tok               # sum of ±1 votes > 0
-            out = np.packbits(pos, axis=1, bitorder="little"
-                              ).view("<u8").ravel().view(np.int64)
+            cnt_set = np.add.reduceat(bits, offs, axis=0, dtype=np.int64)
+            pos = (2 * cnt_set) > n_tok[:, None]     # sum of ±1 votes > 0
+            pos[n_tok == 0] = False
+            out[~nulls] = np.packbits(pos, axis=1, bitorder="little"
+                                      ).view("<u8").ravel().view(np.int64)
         res = pd.array(out, dtype="Int64")
-        res[np.asarray(null_mask, dtype=bool)] = None
+        res[nulls] = None
         return pd.Series(res)
 
     return kernel
