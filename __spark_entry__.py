@@ -265,6 +265,31 @@ def q_extract_pdf_pipeline(spark, sf):
         "text")
 
 
+def _warc_shard_dir(root: str, sf: str, tag: str) -> str:
+    """Cache dir for ``q_warc_extract``'s shards of ``sf`` under ``root``:
+    ``wlos_warc_<md5(sf)[:8]>_<tag>``, so the dirs of one ``sf`` share a
+    prefix and differ only in the content tag."""
+    import os
+    sf_key = hashlib.md5(sf.encode()).hexdigest()[:8]
+    return os.path.join(root, f"wlos_warc_{sf_key}_{tag}")
+
+
+def _prune_warc_shards(shard_dir: str) -> list[str]:
+    """Remove the published shard dirs of the same ``sf`` with another tag
+    (caches of an older renderer, writer or fixture), after ``shard_dir``
+    was published. Staging dirs (``.stage-``) of in-flight runs and the
+    dirs of other ``sf`` values are left alone. Returns the removed names."""
+    import os
+    import shutil
+    root, name = os.path.split(shard_dir)
+    prefix = name[:name.rindex("_") + 1]
+    stale = [d for d in os.listdir(root) if d.startswith(prefix)
+             and d != name and ".stage-" not in d]
+    for d in stale:
+        shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+    return stale
+
+
 def q_warc_extract(spark, sf):
     """WARC ingestion under the correctness gate: documents rendered as
     pages → exported with the DISTRIBUTED gzip shard writer (the
@@ -299,7 +324,7 @@ def q_warc_extract(spark, sf):
                   + inspect.getsource(_fx.documents_as_pages)
                   + inspect.getsource(_warc_mod))
                  .encode()).hexdigest()[:10]
-    shard_dir = os.path.join(tempfile.gettempdir(), f"wlos_warc_{tag}")
+    shard_dir = _warc_shard_dir(tempfile.gettempdir(), sf, tag)
     if not os.path.isdir(shard_dir):
         # distributed export into a run-private staging dir, then ONE
         # atomic directory rename publishes it — concurrent runs race on
@@ -323,6 +348,8 @@ def q_warc_extract(spark, sf):
                 shutil.rmtree(staging, ignore_errors=True)  # lost the race
             else:
                 raise  # a real failure (EXDEV/EACCES/ENOSPC), not the race
+        else:
+            _prune_warc_shards(shard_dir)
     pages = read_warc(spark, os.path.join(shard_dir, "*.warc.gz"))
     rec = extract_fields(segment(pages))
     return rec.select(

@@ -291,3 +291,124 @@ def test_pdf_raw_body_scanned_when_decode_lacks_bt():
     raw = b"BT (kept) Tj ET ~>"
     body = b"%PDF-1.4\nstream\n" + raw + b"\nendstream"
     assert oracle.extract(body, "u")["text"] == "kept"
+
+
+# ---------------------------------------------------------------------------
+# golden record digest: every key of every record, pinned by one sha256
+# ---------------------------------------------------------------------------
+
+_P = ("<p>A long enough paragraph of real words so the block passes the "
+      "gate, {}.</p>")
+
+# (payload, http_charset) documents that drive the lexer, year, charset and
+# PDF paths beyond what make_page renders
+_GOLDEN_EDGE_DOCS = [
+    # mixed-case and closing tags, a closing self-closed link, a
+    # self-closed skip container, a closing tag with trailing space
+    ("<HTML><BODY><DIV>" + _P.format("first") + "</A/><SCRIPT/>"
+     "text after a self-closed script tag is long enough to keep"
+     "<Nav >menu Nav Items here</Nav ><P>Closing upper-case paragraph "
+     "with vintage 1999 in it</P></BODY></HTML>", None),
+    ("<div><a href='/x'>linked words inside a div block</a> and plain "
+     "words that follow the link</a/></A></div><A>x</A>", None),
+    # unclosed tags, comments, CDATA, doctype, entities
+    ("<!DOCTYPE html><p>before the cut, plenty of words to keep <a href=\""
+     + "x" * 300, None),
+    ("<p>open paragraph with words <b>bold <i>nested unclosed text here "
+     "and more words", None),
+    ("<!-- <p>hidden comment paragraph 2001</p> --><![CDATA[<p>cdata "
+     "1999</p>]]>" + _P.format("after comment and cdata"), None),
+    ("<p>Entities &amp; &eacute;t&eacute; &#169; 2011 &copy;2012 &lt;p&gt; "
+     "&nbsp;&#x41;&#65;&bogus; enough words here</p>", None),
+    # latin-1 by declaration, by transport, and a transport claim that
+    # disagrees with the bytes
+    ("<meta charset=\"iso-8859-1\"><p>Château été réserve"
+     " spéciale, millésime 1998 dégustée ici</p>"
+     .encode("latin-1"), None),
+    ("<p>Château été réserve spéciale 1997 with "
+     "words</p>".encode("latin-1"), "ISO-8859-1"),
+    ("<p>Château été réserve spéciale 1996 with "
+     "words</p>".encode("latin-1"), "utf-8"),
+    ("<p>Château body text under a windows-1252 claim, 1995 "
+     "€</p>".encode("cp1252"), "windows-1252"),
+    # labeled years: dotless/dotted i, (C), ©, copyright, labeled year
+    # glued to a digit, out-of-range labeled then in-range bare
+    ("<title>Domaine Vi</title>" + _P.format("vıntage 2019 then 1988"),
+     None),
+    ("<title>Domaine Vi</title>" + _P.format("1987 first, VİNTAGE:2018"),
+     None),
+    (_P.format("1985 vıntage 2019, see the vintage notes"), None),
+    (_P.format("born 1985, (C) 2019 reserved"), None),
+    (_P.format("born 1985, (c)2017 and ©2016"), None),
+    ("<footer>©2019 host</footer>" + _P.format("no year in main"), None),
+    (_P.format("born 1985, COPYRIGHT : 2014 and vintage 20195"), None),
+    (_P.format("vintage 1899 then 2020 and vintage 2031"), None),
+    # bare years: glued digits, non-ASCII digits, out of range
+    (_P.format("lot 12019 and id 20191 and 1899 and 2031"), None),
+    (_P.format("bottled 20٢٣ and ١٩٩٩ and 19"),
+     None),
+    (_P.format("year 1900 and 2030, again 1900"), None),
+    ("<nav>since 1987</nav>" + _P.format("no date in the main text"), None),
+    # one bare year in the main text outranks a labeled year elsewhere
+    ("<footer>© 2001 host</footer>" + _P.format("made in 1999"), None),
+    # no kept block at all; empty; whitespace only
+    ("<p>tiny</p><nav>1990</nav>", None),
+    ("", None),
+    ("  \n\t ", None),
+]
+
+_GOLDEN_EDGE_PDFS = [
+    b"%PDF-1.4\nBT (nested (paren (deep)) text with 2001 in it) Tj ET",
+    b"%PDF-1.4\nBT (esc \\( \\) \\\\ \\101\\12 \\n done 1999) Tj ET",
+    b"%PDF-1.4\nBT (truncated literal never closed 2002",
+    b"%PDF-1.4\nBT (ok) Tj ET BT (trailing backslash \\",
+    b"%PDF-1.4\n1 0 obj << /Title (T\\(1\\)) >> endobj\n"
+    b"BT [ (wo) -50 (rd) -250 ((x)) ] TJ (a) ' 1 2 (b) \" ET",
+    b"%PDF-1.4\n( BT junk ET ) BT (real (one) ) Tj ET BT ((((",
+]
+
+
+def _golden_docs():
+    from wine_label_ocr_spark.fixtures import _make_pdf
+    for i in range(3000):
+        p = make_page(i)
+        yield p["html"], p["url"], None
+    for k, (doc, cs) in enumerate(_GOLDEN_EDGE_DOCS):
+        payload = doc if isinstance(doc, bytes) else doc.encode("utf-8")
+        yield payload, f"u/edge/{k}", cs
+    for k, payload in enumerate(_GOLDEN_EDGE_PDFS):
+        yield payload, f"u/pdf/{k}", None
+    paras = ["Chateau (nested (parens)) \\ back 2015", "second 1999"]
+    for flavor in range(7):
+        yield _make_pdf(paras, "Tît (le)", flavor=flavor), \
+            f"u/flavor/{flavor}", None
+
+
+def _canon(v):
+    if isinstance(v, float):
+        return repr(v)
+    if isinstance(v, dict):
+        return {k: _canon(x) for k, x in v.items()}
+    if isinstance(v, list):
+        return [_canon(x) for x in v]
+    return v
+
+
+def test_extract_records_golden_digest():
+    """Every key of every ``extract`` record, spans and fingerprint
+    included, over make_page(0..2999) plus the edge documents above, hashed
+    as canonical JSON (sorted keys, floats as ``repr``). A kernel change
+    that keeps this digest keeps every record identical."""
+    import hashlib
+    import json
+    h = hashlib.sha256()
+    n = 0
+    for payload, url, cs in _golden_docs():
+        rec = oracle.extract(payload, url, cs)
+        h.update(json.dumps(_canon(rec), sort_keys=True,
+                            ensure_ascii=False).encode("utf-8"))
+        h.update(b"\n")
+        n += 1
+    assert n == 3000 + len(_GOLDEN_EDGE_DOCS) + len(_GOLDEN_EDGE_PDFS) + 7
+    assert h.hexdigest() == (
+        "5925c7a8c331f960edda5b3a648cf1516c22bd92f7ed09e4345e267a1765f3ee")

@@ -166,6 +166,117 @@ def test_lexer_linear_on_truncated_tag():
 
 
 # ---------------------------------------------------------------------------
+# extract kernel rewrites vs the plain forms they replace
+# ---------------------------------------------------------------------------
+
+# the year patterns as first written: the rewritten YEAR_PATTERNS must
+# match exactly the same spans with the same groups
+_PLAIN_YEAR_PATTERNS = (
+    r"(?i)(?:vintage|copyright|©|\(c\))\s*:?\s*((?:19|20)\d{2})",
+    r"(?<![0-9])((?:19|20)\d{2})(?![0-9])",
+)
+_year_piece = st.one_of(
+    st.sampled_from(["vintage", "Vintage", "VINTAGE", "vıntage", "VİNTAGE",
+                     "vintag", "intage", "copyright", "Copyright",
+                     "COPYRİGHT", "copyrıght", "opyright", "©", "(c)",
+                     "(C)", "(c", "c)", "(", ")", "19", "20", "2019", "1899",
+                     "2031", "20٢٣", "١٩", " ", "  ", "\t", "\n", " ",
+                     ":", " : "]),
+    st.text(alphabet="0123456789٠١٢٣٩vVcCıİiI©():\t \n", max_size=6))
+
+
+@given(st.lists(_year_piece, max_size=30))
+@settings(max_examples=400, deadline=None)
+def test_year_patterns_match_plain_forms(pieces):
+    import re
+    text = "".join(pieces)
+    for new, plain in zip(oracle.YEAR_PATTERNS, _PLAIN_YEAR_PATTERNS):
+        got = [(m.span(), m.groups()) for m in re.finditer(new, text)]
+        want = [(m.span(), m.groups()) for m in re.finditer(plain, text)]
+        assert got == want, (plain, text)
+
+
+# the tag pattern as first written (4 groups: closing slash, name,
+# attributes, self-close slash)
+_PLAIN_TAG_RE = (
+    r"<!--.*?-->|<!\[CDATA\[.*?\]\]>|<!DOCTYPE[^>]*>"
+    r"|<(/?)([a-zA-Z][a-zA-Z0-9-]*)"
+    r"((?:[^>\"'/]++|/(?!>)|\"[^\"]*+\"|'[^']*+')*?)(/?)>")
+
+
+@given(st.lists(_soup_piece, max_size=60))
+@settings(max_examples=200, deadline=None)
+def test_tag_split_matches_plain_form(pieces):
+    """Same split points, and the 2-group split carries the same closing
+    flag, name and self-close flag as the 4-group one."""
+    import re
+    doc = "".join(pieces)
+    got = oracle._TAG_RE.split(doc)
+    want = re.compile(_PLAIN_TAG_RE, re.DOTALL).split(doc)
+    assert got[::3] == want[::5]
+    for name, slash, (w1, w2, _, w4) in zip(
+            got[1::3], got[2::3],
+            zip(want[1::5], want[2::5], want[3::5], want[4::5])):
+        if w2 is None:
+            assert name is None and slash is None
+        else:
+            assert name == w1 + w2 and slash == w4
+
+
+def _plain_scan_literal(data: bytes, start: int) -> tuple[bytes, int]:
+    depth, i, n = 1, start, len(data)
+    while i < n:
+        c = data[i]
+        if c == 0x5C:
+            i += 2
+            continue
+        if c == 0x28:
+            depth += 1
+        elif c == 0x29:
+            depth -= 1
+            if depth == 0:
+                return data[start:i], i + 1
+        i += 1
+    return data[start:n], n
+
+
+@given(st.lists(st.sampled_from([b"(", b")", b"\\", b"a", b"xy", b"\n",
+                                 b"\\(", b"\\)", b"\\\\", b"\xff"]),
+                max_size=40),
+       st.integers(0, 45))
+@settings(max_examples=400, deadline=None)
+def test_pdf_scan_literal_matches_byte_loop(pieces, start):
+    data = b"".join(pieces)
+    start = min(start, len(data))
+    assert oracle._pdf_scan_literal(data, start) == \
+        _plain_scan_literal(data, start)
+
+
+@given(st.text(alphabet=st.characters(exclude_categories=()), max_size=200))
+@settings(max_examples=400, deadline=None)
+def test_alnum_count_matches_regex(text):
+    import re
+    assert oracle._alnum_count(text) == len(re.findall(r"[A-Za-z0-9]", text))
+
+
+def test_year_and_pdf_scans_linear_on_runs():
+    """100k-character runs of each pattern's start characters (decade
+    prefixes, ©, a keyword cut one short, open parens) stay linear
+    through the year scans, the lexer and the PDF literal scanner."""
+    import time
+    runs = ["19" * 50_000, "©" * 100_000, "vintag" * 16_667,
+            "(" * 100_000, "(c" * 50_000, "copyrigh " * 11_111]
+    t0 = time.time()
+    for run in runs:
+        assert oracle.extract_year(run) is None
+        r = oracle.extract(("<p>" + run + "</p>").encode("utf-8"), "u")
+        assert r["year"] is None
+    r = oracle.extract(b"%PDF-1.4\nBT " + b"(" * 100_000, "u")
+    assert r["text"] == ""
+    assert time.time() - t0 < 5.0, "year or PDF scan non-linear on runs"
+
+
+# ---------------------------------------------------------------------------
 # dedup sketch kernels: byte spans of one UTF-8 buffer vs a list of str
 # ---------------------------------------------------------------------------
 

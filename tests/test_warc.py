@@ -292,3 +292,26 @@ def test_wat_sidecar_roundtrip(spark, tmp_path):
     hm2 = env2["Payload-Metadata"]["HTTP-Response-Metadata"]["HTML-Metadata"]
     assert hm2["Head"]["Title"] is None
     assert hm2["Links"] == []
+
+
+def test_warc_gate_shard_dirs_pruned_per_sf(tmp_path):
+    """The warc_extract gate names its shard cache per sf and, after
+    publishing a new one, removes only the same sf's other tags: other sf
+    values and in-flight staging dirs stay."""
+    import os
+
+    import __spark_entry__ as E
+
+    def shard_dir(sf, tag):
+        return E._warc_shard_dir(str(tmp_path), sf, tag)
+
+    new = shard_dir("/data/sf0.01", "bbbbbbbbbb")
+    old = shard_dir("/data/sf0.01", "aaaaaaaaaa")
+    other_sf = shard_dir("/data/sf0.001", "aaaaaaaaaa")
+    staging = old + ".stage-0123"
+    for d in (new, old, other_sf, staging):
+        os.mkdir(d)
+        open(os.path.join(d, "part-0.warc.gz"), "wb").close()
+    assert E._prune_warc_shards(new) == [os.path.basename(old)]
+    assert sorted(os.listdir(tmp_path)) == sorted(
+        os.path.basename(d) for d in (new, other_sf, staging))

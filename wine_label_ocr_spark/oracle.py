@@ -69,29 +69,48 @@ BLOCK_TAGS = frozenset({
 })
 
 # one-probe dispatch table for the lexer hot loop; insertion order gives
-# the original precedence skip > a > boiler > block (later writes win)
+# the original precedence skip > a > boiler > block (later writes win).
+# _TAG_RE's name group carries a closing tag's "/" ("/div"), so every name
+# also has a "/name" key mapped to the negated action: the sign of one
+# lookup says whether the tag closes
 _ACT_BLOCK, _ACT_LINK, _ACT_SKIP, _ACT_BOILER = 1, 2, 3, 4
 _TAG_ACTION: dict[str, int] = {}
 _TAG_ACTION.update(dict.fromkeys(BLOCK_TAGS, _ACT_BLOCK))
 _TAG_ACTION.update(dict.fromkeys(BOILER_CONTAINERS, _ACT_BOILER))
 _TAG_ACTION["a"] = _ACT_LINK
 _TAG_ACTION.update(dict.fromkeys(SKIP_CONTAINERS, _ACT_SKIP))
+_TAG_ACTION.update({"/" + t: -a for t, a in _TAG_ACTION.items()})
 
 # Ordered year patterns — the analog of the 4 ordered regex patterns in
 # _extract_year_from_text (final_run_ocr.py:153-185): labeled contexts first,
 # bare 4-digit fallback last. Python `re` semantics, as in the reference:
 # `\d` also matches non-ASCII decimal digits ("20٢٣" is 2023), which Java
 # regex's `\d` does not — so no engine but Python may evaluate them.
+#
+# Both are written so `re` can skip ahead to a possible match start: sre
+# scans for a pattern's leading literal or case-sensitive charset, but a
+# pattern that starts with a lookbehind or a `(?i)` alternation is tried
+# at every position (measured ~3x slower on the same texts). Their match
+# sets and groups are those of the plain forms
+#   r"(?i)(?:vintage|copyright|©|\(c\))\s*:?\s*((?:19|20)\d{2})"
+#   r"(?<![0-9])((?:19|20)\d{2})(?![0-9])"
+# (tests/test_properties.py compares them on generated text):
+# * labeled: the first character is the case-sensitive set [vVcC©(] — no
+#   other character case-folds to v, c, © or ( — and a lookbehind on it
+#   picks the branch; `(?i:…)` keeps re's folds for the rest of the
+#   keyword, so "vıntage" (dotless i) still matches;
+# * bare: the lookbehind moves after the literal decade prefix, where
+#   `(?<![0-9]..)` tests the same character (the one before the "19"/"20").
 YEAR_PATTERNS = (
-    r"(?i)(?:vintage|copyright|©|\(c\))\s*:?\s*((?:19|20)\d{2})",
-    r"(?<![0-9])((?:19|20)\d{2})(?![0-9])",
+    r"[vVcC©(](?:(?<=[vV])(?i:intage)|(?<=[cC])(?i:opyright)|(?<=©)"
+    r"|(?<=\()[cC]\))\s*:?\s*((?:19|20)\d{2})",
+    r"((?:19|20)(?<![0-9]..)\d{2})(?![0-9])",
 )
 
 # Maker charset whitelist — final_run_ocr.py:355 ALLOWED = "A-Z0-9 &'-".
 MAKER_STRIP = r"[^A-Z0-9 &'-]"
 _MAKER_STRIP_RE = re.compile(MAKER_STRIP)
 _WS_RE = re.compile(r"\s+")
-_ALNUM_RE = re.compile(r"[A-Za-z0-9]")
 
 # Attribute section: plain-char RUNS are consumed atomically
 # ([^>"'/]++, with a lone / allowed when not closing the tag) instead of
@@ -109,10 +128,15 @@ _ALNUM_RE = re.compile(r"[A-Za-z0-9]")
 # regression test pins the timing). Residual worst case is the unavoidable
 # scan-to-failure per unclosed tag open: linear per open, quadratic only
 # on degenerate all-`<a ` documents.
+#
+# Two capture groups, so re.split yields 3 items per tag (text, name,
+# self-close flag) instead of 5: the name group holds a closing tag's "/"
+# ("/div", looked up directly in _TAG_ACTION) and the attribute section
+# is not captured (nothing reads it).
 _TAG_RE = re.compile(
     r"<!--.*?-->|<!\[CDATA\[.*?\]\]>|<!DOCTYPE[^>]*>"
-    r"|<(/?)([a-zA-Z][a-zA-Z0-9-]*)"
-    r"((?:[^>\"'/]++|/(?!>)|\"[^\"]*+\"|'[^']*+')*?)(/?)>",
+    r"|<(/?[a-zA-Z][a-zA-Z0-9-]*)"
+    r"(?:[^>\"'/]++|/(?!>)|\"[^\"]*+\"|'[^']*+')*?(/?)>",
     re.DOTALL,
 )
 _CHARSET_RE = re.compile(rb"charset\s*=\s*[\"']?([A-Za-z0-9_-]+)")
@@ -205,26 +229,30 @@ def _years(pattern: re.Pattern, text: str) -> Iterator[tuple[int, str]]:
             yield y, m.group(1)
 
 
+def _labeled_year(text: str) -> int | None:
+    """First in-range hit of the labeled pattern, when a lowercase marker
+    is present. The gate is part of the definition, not only a shortcut:
+    "vıntage 2019" matches the pattern (re folds ı to i) but has no
+    "vintage" marker, so it counts only as a bare year."""
+    tl = text.lower()
+    if ("vintage" in tl or "copyright" in tl or "©" in tl or "(c)" in tl):
+        for y, _ in _years(_YEAR_RES[0], text):
+            return y
+    return None
+
+
 def extract_year(text: str) -> int | None:
     """E4 — ordered-pattern year extraction with range check.
 
     Mirrors ``_extract_year_from_text`` (final_run_ocr.py:153-185): try each
     pattern in priority order; the first in-range hit wins.
-
-    The priority pattern's ``(?i)`` alternation is the expensive scan;
-    it can only match when one of its literal markers is present, so a
-    C-level substring probe gates it (same hit set — profiled ~12% of
-    the extract kernel on marker-free documents).
     """
     if not _may_hold_year(text):
         return None
-    tl = text.lower()
-    if ("vintage" in tl or "copyright" in tl or "©" in tl or "(c)" in tl):
-        for y, _ in _years(_YEAR_RES[0], text):
-            return y
-    for y, _ in _years(_YEAR_RES[1], text):
-        return y
-    return None
+    y = _labeled_year(text)
+    if y is None:
+        y = next((y for y, _ in _years(_YEAR_RES[1], text)), None)
+    return y
 
 
 _CHARSET_ALIASES = {
@@ -327,25 +355,31 @@ def _pdf_unhex(h: bytes) -> str:
         return ""
 
 
+_PDF_LIT_STOP_RE = re.compile(rb"[()\\]")
+
+
 def _pdf_scan_literal(data: bytes, start: int) -> tuple[bytes, int]:
     """Scan a literal string from the byte after its opening '(' —
     balanced unescaped parens nest (§7.3.4.2). Returns (raw escaped
     bytes, index after the closing paren); a truncated string ends at
-    EOF. One forward pass, no backtracking."""
-    depth, i, n = 1, start, len(data)
-    while i < n:
+    EOF. One forward pass, no backtracking: each step jumps to the next
+    '(', ')' or backslash (an escape skips the byte after it)."""
+    depth, i = 1, start
+    search = _PDF_LIT_STOP_RE.search
+    while (m := search(data, i)) is not None:
+        i = m.start()
         c = data[i]
         if c == 0x5C:
             i += 2
             continue
         if c == 0x28:
             depth += 1
-        elif c == 0x29:
+        else:
             depth -= 1
             if depth == 0:
                 return data[start:i], i + 1
         i += 1
-    return data[start:n], n
+    return data[start:], len(data)
 
 
 def _pdf_piece_paragraphs(piece: bytes) -> list[str]:
@@ -505,7 +539,8 @@ def lex_blocks(decoded: str) -> list[dict[str, Any]]:
 
     Returns raw blocks with per-block stats, the analog of
     ``connectedComponentsWithStats`` per-blob stats (hybrid.py:189-227):
-    ``{text, n_chars, link_chars, boiler, tag}``. Order is document order.
+    ``{text, n_chars, link_chars, boiler, tag, block_index}``, in document
+    order; ``block_index`` is the block's position in the returned list.
     """
     blocks: list[dict[str, Any]] = []
     # current block accumulator: list of (raw_text, is_link)
@@ -538,6 +573,7 @@ def lex_blocks(decoded: str) -> list[dict[str, Any]]:
                     "link_chars": len(text) if seg_link else 0,
                     "boiler": seg_boiler,
                     "tag": cur_tag,
+                    "block_index": len(blocks),
                 })
         else:
             raw = "".join([t for t, _ in segs])
@@ -556,6 +592,7 @@ def lex_blocks(decoded: str) -> list[dict[str, Any]]:
                     "link_chars": link_chars,
                     "boiler": seg_boiler,
                     "tag": cur_tag,
+                    "block_index": len(blocks),
                 })
         segs.clear()
         seg_boiler = False
@@ -568,19 +605,18 @@ def lex_blocks(decoded: str) -> list[dict[str, Any]]:
     act_get = _TAG_ACTION.get
     segs_append = segs.append  # one list object for the whole document
     # ONE C-level split pass instead of finditer: parts is
-    # [text, g1, g2, g3, g4, text, g1, ...] — the inter-tag text arrives
+    # [text, name, slash, text, name, ...] — the inter-tag text arrives
     # as list elements (no match objects, no span()/groups() calls, no
     # slicing), same match set and groups by construction (re.split
-    # splits on every _TAG_RE match and interleaves its 4 groups)
+    # splits on every _TAG_RE match and interleaves its 2 groups)
     parts = _TAG_RE.split(decoded)
     last = len(parts) - 1
     idx = 0
     while idx < last:
         pre = parts[idx]
-        g1 = parts[idx + 1]
-        g2 = parts[idx + 2]
-        g4 = parts[idx + 4]
-        idx += 5
+        name = parts[idx + 1]
+        slash = parts[idx + 2]
+        idx += 3
         if pre and skip_depth == 0:
             # not-isspace() ≡ strip() truthiness for non-empty strings,
             # without allocating the stripped copy
@@ -594,20 +630,22 @@ def lex_blocks(decoded: str) -> list[dict[str, Any]]:
                 segs_append((pre, link_depth > 0))
                 if link_depth > 0:
                     seg_link = True
-        if g2 is None:
+        if name is None:
             continue  # comment / doctype / CDATA
-        # dispatch keys are lowercase: a direct hit means g2 IS already
+        # dispatch keys are lowercase: a direct hit means name IS already
         # canonical — skips the ~1.5M/20k-doc str.lower() allocations
         # the all-lowercase markup of real pages was paying
-        action = act_get(g2)
+        action = act_get(name)
         if action is not None:
-            tag = g2
+            tag = name
         else:
-            tag = g2.lower()
+            tag = name.lower()
             action = act_get(tag)
             if action is None:
                 continue  # transparent tag (span/b/em/...)
-        closing, selfclosed = g1 == "/", g4 == "/"
+        closing, selfclosed = action < 0, slash == "/"
+        if closing:
+            action = -action  # tag is "/name", read only when opening
         if action == _ACT_BLOCK:
             if segs:
                 flush(tag if not closing else cur_tag)
@@ -658,10 +696,17 @@ def score_block(n_chars: int, link_density: float, text_density: float) -> float
     )
 
 
-# deletion table for counting [A-Za-z0-9] without allocating a match list;
-# len(text) - len(text.translate(...)) == len(_ALNUM_RE.findall(text))
-_ALNUM_DELETE = {ord(c): None for c in
-                 "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789"}
+# [A-Za-z0-9] is counted on the UTF-8 bytes: the bytes deleted by
+# bytes.translate(None, _ALNUM_BYTES) are exactly the ASCII letters and
+# digits, since no byte of a multibyte UTF-8 sequence is ASCII. Equal to
+# len(re.findall(r"[A-Za-z0-9]", text)), ~3.5x cheaper than str.translate
+# with a deletion dict.
+_ALNUM_BYTES = b"ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789"
+
+
+def _alnum_count(text: str) -> int:
+    e = text.encode("utf-8", "surrogatepass")
+    return len(e) - len(e.translate(None, _ALNUM_BYTES))
 
 
 def _features(b: dict[str, Any]) -> tuple[float, float]:
@@ -671,9 +716,7 @@ def _features(b: dict[str, Any]) -> tuple[float, float]:
         return cached
     n = max(b["n_chars"], 1)
     link_density = min(b["link_chars"] / n, 1.0)
-    text = b["text"]
-    n_alnum = len(text) - len(text.translate(_ALNUM_DELETE))
-    text_density = n_alnum / n
+    text_density = _alnum_count(b["text"]) / n
     b["_feat"] = (link_density, text_density)
     return b["_feat"]
 
@@ -721,7 +764,8 @@ def rec_id(key: str) -> str:
 def _spans_from_kept(kept: list[dict[str, Any]], n_blocks_total: int,
                      texts: list[str]) -> list[dict[str, Any]]:
     """Build span structs over the joined main text (FIXTURES.md §3 schema)."""
-    total_len = len("\n\n".join(texts))
+    # length of "\n\n".join(texts), without building it again
+    total_len = sum(map(len, texts)) + 2 * (len(texts) - 1)
     spans = []
     offset = 0
     denom_idx = max(n_blocks_total - 1, 1)
@@ -786,9 +830,9 @@ def extract(payload: bytes, url: str,
         charset = detect_charset(payload, http_charset)
         decoded = payload.decode(charset, "replace")
         blocks = lex_blocks(decoded)
-        for i, b in enumerate(blocks):
-            b["block_index"] = i
-        kept = [b for b in blocks if keep_block(b)]
+        # keep_block's two cheap rejections, checked before the call
+        kept = [b for b in blocks if not b["boiler"]
+                and b["n_chars"] >= MIN_BLOCK_CHARS and keep_block(b)]
         texts = [b["text"] for b in kept]
         text = "\n\n".join(texts)
         tm = _TITLE_RE.search(decoded)
@@ -799,13 +843,19 @@ def extract(payload: bytes, url: str,
         barcode = cm.group(1) if cm else None
         method, n_blocks = "html", len(blocks)
 
-    # E5 cascade: main text first, whole visible page as fallback.
-    year = extract_year(text)
+    # E5 cascade: main text first, whole visible page as fallback. One
+    # bare-pattern scan of the main text gives both the `raw` year bucket
+    # (every in-range match, as matched) and extract_year's fallback hit.
+    year = None
+    cands: list[str] = []
+    if _may_hold_year(text):
+        hits = list(_years(_YEAR_RES[1], text))
+        cands = [s for _, s in hits]
+        year = _labeled_year(text)
+        if year is None and hits:
+            year = hits[0][0]
     if year is None:
         year = extract_year(raw_text)
-    # the `raw` year bucket: every in-range bare-year match in main text
-    cands = ([s for _, s in _years(_YEAR_RES[1], text)]
-             if _may_hold_year(text) else [])
     maker = normalize_maker(title)
     custom_id = f"{maker}|{year}" if (maker is not None and year is not None) else None
     return {
