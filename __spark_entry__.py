@@ -1,9 +1,9 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-``entry(spark)`` runs the flagship extraction pipeline (pages → spans →
-fields → records) over the sf0.001 ``documents`` table rendered as
-boilerplated web pages. ``queries()``/``oracle_sql()`` cover the operator
-inventory of SURVEY.md §2, checked side-by-side against DuckDB at sf0.01.
+``entry(spark)`` runs the flagship extraction pipeline (pages → records)
+over the sf0.001 ``documents`` table rendered as boilerplated web pages.
+``queries()``/``oracle_sql()`` cover the operator inventory of SURVEY.md
+§2, checked side-by-side against DuckDB at sf0.01.
 
 Alignment rules used throughout (Spark ↔ DuckDB):
 
@@ -38,16 +38,15 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0.
 
     documents → rendered pages (url, warc_ts, html, text, lang) →
-    two-stage extraction → records, with a per-url byte-identity flag
+    ``extract_records`` → records, with a per-url byte-identity flag
     against the carried ground truth.
     """
     from wine_label_ocr_spark.fixtures import documents_as_pages
-    from wine_label_ocr_spark.operators.extraction import extract_fields
-    from wine_label_ocr_spark.operators.segmentation import segment
+    from wine_label_ocr_spark.plans.pipeline import extract_records
 
     pages = documents_as_pages(spark, SF_DEFAULT)
     truth = pages.select("url", F.col("text").alias("truth_text"))
-    rec = extract_fields(segment(pages)).select(
+    rec = extract_records(pages).select(
         "url", "warc_ts", "lang", "text", "maker_name", "vintage",
         "custom_id", "rec_id", "fingerprint")
     return (
@@ -234,14 +233,13 @@ def q_fuzzy_blocked_join(spark, sf):  # J2/J3/J6 — blocked fuzzy theta join
 # ---------------------------------------------------------------------------
 
 def q_extract_fields_pipeline(spark, sf):
-    """Full two-stage pipeline over documents rendered as web pages; the
+    """Full extract pipeline over documents rendered as web pages; the
     DuckDB oracle reconstructs the expected fields from documents directly.
     This puts byte-identity itself under the driver's correctness gate."""
     from wine_label_ocr_spark.fixtures import documents_as_pages
-    from wine_label_ocr_spark.operators.extraction import extract_fields
-    from wine_label_ocr_spark.operators.segmentation import segment
+    from wine_label_ocr_spark.plans.pipeline import extract_records
 
-    rec = extract_fields(segment(documents_as_pages(spark, sf)))
+    rec = extract_records(documents_as_pages(spark, sf))
     return rec.select(
         F.regexp_extract("url", r"/doc/(\d+)", 1).cast("bigint").alias("doc_id"),
         "maker_name",
@@ -254,13 +252,12 @@ def q_extract_pdf_pipeline(spark, sf):
     """PDF layout-parse branch under the correctness gate: documents
     rendered as PDF payloads → same span schema → byte-identical text."""
     from wine_label_ocr_spark.fixtures import documents_as_pdf_pages
-    from wine_label_ocr_spark.operators.extraction import extract_fields
-    from wine_label_ocr_spark.operators.segmentation import segment
+    from wine_label_ocr_spark.plans.pipeline import extract_records
 
-    rec = extract_fields(segment(documents_as_pdf_pages(spark, sf)))
+    rec = extract_records(documents_as_pdf_pages(spark, sf))
     return rec.select(
         F.regexp_extract("url", r"/doc/(\d+)", 1).cast("bigint").alias("doc_id"),
-        F.col("method").alias("method"),
+        F.col("blob_data.mask_info.method").alias("method"),
         "maker_name",
         "text")
 
@@ -277,14 +274,18 @@ def _warc_shard_dir(root: str, sf: str, tag: str) -> str:
 def _prune_warc_shards(shard_dir: str) -> list[str]:
     """Remove the published shard dirs of the same ``sf`` with another tag
     (caches of an older renderer, writer or fixture), after ``shard_dir``
-    was published. Staging dirs (``.stage-``) of in-flight runs and the
-    dirs of other ``sf`` values are left alone. Returns the removed names."""
+    was published, and the published dirs of the older naming with no
+    ``sf`` key (``wlos_warc_<tag>``). Staging dirs (``.stage-``) of
+    in-flight runs and the dirs of other ``sf`` values are left alone.
+    Returns the removed names."""
     import os
+    import re
     import shutil
     root, name = os.path.split(shard_dir)
     prefix = name[:name.rindex("_") + 1]
-    stale = [d for d in os.listdir(root) if d.startswith(prefix)
-             and d != name and ".stage-" not in d]
+    stale = [d for d in os.listdir(root) if d != name and (
+        d.startswith(prefix) and ".stage-" not in d
+        or re.fullmatch(r"wlos_warc_[0-9a-f]{10}", d))]
     for d in stale:
         shutil.rmtree(os.path.join(root, d), ignore_errors=True)
     return stale
@@ -295,7 +296,7 @@ def q_warc_extract(spark, sf):
     pages → exported with the DISTRIBUTED gzip shard writer (the
     production sink — per-record gzip members, task-side atomic publish,
     no driver collect) → read back through the binaryFile scan → full
-    two-stage extraction. The oracle recomputes the expected fields from
+    extraction. The oracle recomputes the expected fields from
     documents directly, so a hash match proves the gzip WARC path is
     byte-faithful end-to-end."""
     import hashlib as _h
@@ -303,8 +304,7 @@ def q_warc_extract(spark, sf):
     import tempfile
 
     from wine_label_ocr_spark.fixtures import documents_as_pages
-    from wine_label_ocr_spark.operators.extraction import extract_fields
-    from wine_label_ocr_spark.operators.segmentation import segment
+    from wine_label_ocr_spark.plans.pipeline import extract_records
     from wine_label_ocr_spark.sources.warc import read_warc, write_warc_shards
 
     # cache key covers the renderer's source, the WARC writer/reader
@@ -351,7 +351,7 @@ def q_warc_extract(spark, sf):
         else:
             _prune_warc_shards(shard_dir)
     pages = read_warc(spark, os.path.join(shard_dir, "*.warc.gz"))
-    rec = extract_fields(segment(pages))
+    rec = extract_records(pages)
     return rec.select(
         F.regexp_extract("url", r"/doc/(\d+)", 1).cast("bigint").alias("doc_id"),
         "maker_name",

@@ -91,100 +91,70 @@ def test_raw_candidate_buckets(records):
     assert row["text"].startswith(raw["blocks"][0]["text"][:10])
 
 
-def test_best_maker_from_raw(spark):
-    """E9 — pooled-candidate argmax mirrors _extract_best_maker_from_raw
-    (final_run_ocr.py:361-373): reserved buckets skipped, len>=3 / '.'
-    gate, normalize, longest wins with FIRST-wins tie-break."""
-    from pyspark.sql import functions as F
-    from wine_label_ocr_spark.operators.extraction import best_maker_from_raw
-    ddl = "raw map<string, array<struct<text:string, conf:double>>>"
-    mk = lambda *ts: [{"text": t, "conf": 1.0} for t in ts]  # noqa: E731
-    rows = [
-        # named bucket first; "ZZ" gated (len<3); "." gated; ties: first wins
-        ({"maker_name_candidates": mk("opus one"),
-          "vintage_candidates": mk("SHOULD NOT APPEAR EVER"),
-          "blocks": mk("ZZ", ".", "chateau margaux", "ABCDEFGH MARGAUX")},),
-        # normalization may shrink a longer raw string below a shorter one
-        ({"maker_name_candidates": mk("aaa bbb"),
-          "blocks": mk("@@@@@@@@@@@@@@@@x!")},),
-        ({"maker_name_candidates": [], "blocks": mk("ZZ", ".")},),
-        # the len>=3 gate applies ONLY to non-reserved buckets — a 1-2 char
-        # maker_name candidate survives on truthiness alone
-        # (final_run_ocr.py:362 keeps `txt` with no length check)
-        ({"maker_name_candidates": mk("AB"), "blocks": mk("ZZ", ".")},),
-    ]
-    df = spark.createDataFrame(rows, ddl)
-    got = [r["best"] for r in
-           df.select(best_maker_from_raw(F.col("raw")).alias("best")).collect()]
-    # row 1: "CHATEAU MARGAUX" and "ABCDEFGH MARGAUX" both 15/16 chars;
-    # ABCDEFGH MARGAUX is longer (16) -> wins; reserved bucket excluded
-    assert got[0] == "ABCDEFGH MARGAUX"
-    # row 2: "@...x!" normalizes to "X" (len 1) -> "AAA BBB" wins
-    assert got[1] == "AAA BBB"
-    # row 3: everything gated -> NULL
-    assert got[2] is None
-    # row 4: short named candidate kept (reference parity)
-    assert got[3] == "AB"
-
-
 # ---------------------------------------------------------------------------
-# Stage 2 (extract_fields) pinned value by value on hand-built stage-1 rows
+# oracle.record pinned value by value on hand-built extract results
 # ---------------------------------------------------------------------------
 
 def _span(start, end, score):
-    return (start, end, "p", 0.5, 0.5, 10.0, 1.0, 1.0, 1.0, score)
+    return {"start": start, "end": end, "tag": "p", "cx": 0.5, "cy": 0.5,
+            "area": 10.0, "aspect_ratio": 1.0, "solidity": 1.0,
+            "extent": 1.0, "score": score}
 
 
-def test_extract_fields_values_pinned(spark):
-    """Every stage-2 struct on rows that hit each branch: no "19"/"20" in
-    the text, an out-of-range year next to an in-range one, NULL text,
-    NULL title, empty spans and a PDF row. The record fields are the
-    ``oracle.extract`` values of these rows and pass through unchanged."""
-    from datetime import datetime
+_EXTRACT_KEYS = ("text", "title", "maker_name", "year", "year_candidates",
+                 "custom_id", "rec_id", "barcode", "method", "charset",
+                 "n_blocks", "kept_blocks", "raw_chars", "fingerprint",
+                 "spans")
 
-    from wine_label_ocr_spark.operators.extraction import extract_fields
-    from wine_label_ocr_spark.operators.segmentation import SEGMENT_DDL
 
-    ts = datetime(2024, 1, 1)
+def test_record_values_pinned():
+    """``blob_data`` and ``raw`` on ``extract`` results that hit each
+    branch: no "19"/"20" in the text, an out-of-range year next to an
+    in-range one, no title, no span and a PDF. The ``extract`` fields pass
+    through unchanged."""
     t_none = "Chateau red wine, 3 bottles and a long tail of text"
     t_years = "Bottled in 2045 and 1999; lot 12019."
     t_null_title = "Vintage 1985 reserve"
     t_pdf = "Domaine X 2010 release notes for the trade"
-    rows = [
-        ("u/no-year", ts, "fr", t_none, "Château Margaux!  Grand  Vin",
-         "CHTEAU MARGAUX GRAND VIN", None, [], None, None,
-         "https://c/1", "html", "utf-8", 4, 2, 80, "fp1",
-         [_span(0, 10, 0.9), _span(12, 30, 0.7)]),
-        ("u/years", ts, "en", t_years, "opus one", "OPUS ONE", 1999,
-         ["1999"], "OPUS ONE|1999", "57bf28723bda", None, "html",
-         "latin-1", 1, 1, 0, "fp2", [_span(0, 36, 1.0)]),
-        ("u/null-text", ts, "en", None, "Ridge", "RIDGE", 2001, None,
-         "RIDGE|2001", "af1bb25e970d", None, "html", "utf-8",
-         0, 0, 0, "fp3", [_span(0, 5, 0.5)]),
-        ("u/null-title", ts, "en", t_null_title, None, None, 1985, ["1985"],
-         None, None, None, "html", "utf-8", 1, 1, 20, "fp4",
-         [_span(0, 20, 0.8)]),
-        ("u/no-spans", ts, "en", "short", "A&B Wines - 'Cuvée'",
-         "A&B WINES - 'CUVE'", None, [], None, None, None,
-         "html", "utf-8", 0, 0, 5, "fp5", []),
-        ("u/pdf", ts, "en", t_pdf, "Domaine X", "DOMAINE X", 2010, ["2010"],
-         "DOMAINE X|2010", "66dfbea4045d", None, "pdf", None,
-         4, 4, 42, "fp6", [_span(0, 9, 0.6), _span(10, 14, 0.4),
-                           _span(15, 22, 0.3), _span(23, 23, 0.1)]),
-    ]
-    seg = spark.createDataFrame(rows, SEGMENT_DDL)
-    got = {r["url"]: r for r in extract_fields(seg).collect()}
-    for r in seg.collect():
-        assert [got[r["url"]][c] for c in seg.columns] == list(r), r["url"]
+    rows = {
+        "u/no-year": (
+            t_none, "Château Margaux!  Grand  Vin",
+            "CHTEAU MARGAUX GRAND VIN", None, [], None, None,
+            "https://c/1", "html", "utf-8", 4, 2, 80, "fp1",
+            [_span(0, 10, 0.9), _span(12, 30, 0.7)]),
+        "u/years": (
+            t_years, "opus one", "OPUS ONE", 1999, ["1999"],
+            "OPUS ONE|1999", "57bf28723bda", None, "html", "latin-1", 1, 1,
+            0, "fp2", [_span(0, 36, 1.0)]),
+        "u/null-title": (
+            t_null_title, None, None, 1985, ["1985"], None, None, None,
+            "html", "utf-8", 1, 1, 20, "fp4", [_span(0, 20, 0.8)]),
+        "u/no-spans": (
+            "short", "A&B Wines - 'Cuvée'", "A&B WINES - 'CUVE'", None, [],
+            None, None, None, "html", "utf-8", 0, 0, 5, "fp5", []),
+        "u/pdf": (
+            t_pdf, "Domaine X", "DOMAINE X", 2010, ["2010"],
+            "DOMAINE X|2010", "66dfbea4045d", None, "pdf", None, 4, 4, 42,
+            "fp6", [_span(0, 9, 0.6), _span(10, 14, 0.4),
+                    _span(15, 22, 0.3), _span(23, 23, 0.1)]),
+    }
+    got = {}
+    for url, values in rows.items():
+        rec = dict(zip(_EXTRACT_KEYS, values), url=url)
+        r = oracle.record(rec)
+        assert {k: r[k] for k in ("custom_id", "maker_name", "barcode",
+                                  "fingerprint", "rec_id", "text")} == \
+            {k: rec[k] for k in ("custom_id", "maker_name", "barcode",
+                                 "fingerprint", "rec_id", "text")}, url
+        assert r["vintage"] == rec["year"], url
+        assert r["blob_data"]["spans"] == rec["spans"], url
+        assert list(r["raw"]) == ["title", "year_candidates", "blocks"]
+        got[url] = r
 
     def fields(url):
-        r = got[url]
-        blob = r["blob_data"].asDict(recursive=True)
+        blob = dict(got[url]["blob_data"])
         blob.pop("spans")
-        raw = (None if r["raw"] is None else
-               {k: None if v is None else [c.asDict() for c in v]
-                for k, v in r["raw"].items()})
-        return blob, raw
+        return blob, got[url]["raw"]
 
     def mask(method, ratio, note):
         return {"method": method, "foreground_ratio": ratio, "note": note}
@@ -206,12 +176,6 @@ def test_extract_fields_values_pinned(spark):
         {"title": cands(("opus one", 1.0)),
          "year_candidates": cands(("1999", 1.0)),
          "blocks": cands((t_years, 1.0))})
-    assert fields("u/null-text") == (
-        {"roi_bbox": [0, 5], "roi_shape": [0, None],
-         "mask_info": mask("html", None, "utf-8"),
-         "blob_count": 0, "fingerprint": "fp3"},
-        {"title": cands(("Ridge", 1.0)), "year_candidates": None,
-         "blocks": cands((None, 0.5))})
     assert fields("u/null-title") == (
         {"roi_bbox": [0, 20], "roi_shape": [1, len(t_null_title)],
          "mask_info": mask("html", 1.0, "utf-8"),
@@ -232,8 +196,6 @@ def test_extract_fields_values_pinned(spark):
          "year_candidates": cands(("2010", 1.0)),
          "blocks": cands((t_pdf[0:40], 0.6), (t_pdf[10:50], 0.4),
                          (t_pdf[15:55], 0.3))})
-    assert got["u/pdf"]["blob_data"]["spans"] == seg.filter(
-        "url = 'u/pdf'").first()["spans"]
 
 
 def test_unicode_digit_year_candidate(spark):
@@ -255,10 +217,11 @@ def test_unicode_digit_year_candidate(spark):
 
 
 def test_extract_records_plan_build_round_trips(spark):
-    """Building the extract plan stays a few py4j round trips: stage 2 is
-    one ``selectExpr``, not a ``withColumn`` chain of Column builders
-    (~1,000 round trips per build)."""
+    """Building the extract plan stays a few py4j round trips: the record
+    is finished inside the ``mapInArrow``, not by a ``withColumn`` chain
+    of Column builders (~1,000 round trips per build)."""
     import gc
+    import threading
 
     import py4j.clientserver as cs
 
@@ -271,9 +234,12 @@ def test_extract_records_plan_build_round_trips(spark):
     gc.collect()
     orig = cs.ClientServerConnection.send_command
     calls = [0]
+    build_thread = threading.get_ident()
 
+    # only the building thread's commands: py4j's finalizer thread sends
+    # the memory-delete commands of objects freed earlier whenever it runs
     def counting(self, *args, **kwargs):
-        calls[0] += 1
+        calls[0] += threading.get_ident() == build_thread
         return orig(self, *args, **kwargs)
 
     cs.ClientServerConnection.send_command = counting
@@ -289,3 +255,59 @@ def test_extract_records_plan_build_round_trips(spark):
     "warc_extract"])
 def test_extract_gate_matches_oracle(oracle_gate, name):
     oracle_gate(name)
+
+
+def _canon_row(v):
+    """Spark-collected value → JSON-able form: floats as ``repr``, rows and
+    maps as ``[key, value]`` pairs in their stored order."""
+    from datetime import datetime
+
+    from pyspark.sql import Row
+    if isinstance(v, float):
+        return repr(v)
+    if isinstance(v, Row):
+        return [[k, _canon_row(x)] for k, x in zip(v.__fields__, v)]
+    if isinstance(v, dict):
+        return [[k, _canon_row(x)] for k, x in v.items()]
+    if isinstance(v, list):
+        return [_canon_row(x) for x in v]
+    if isinstance(v, datetime):
+        return v.isoformat()
+    return v
+
+
+def test_extract_records_golden_digest(spark):
+    """Every column of every ``extract_records`` row (``blob_data`` and
+    ``raw`` included) over make_page(0..499) plus the oracle's edge HTML
+    documents (latin-1, ``http_charset``, no span, no title) and edge PDFs,
+    sorted by url and hashed as canonical JSON."""
+    import hashlib
+    import json
+    from datetime import datetime
+
+    from wine_label_ocr_spark.fixtures import _make_pdf
+    from test_oracle import _GOLDEN_EDGE_DOCS, _GOLDEN_EDGE_PDFS
+
+    ts = datetime(2024, 1, 1)
+    rows = [(p["url"], p["warc_ts"], p["html"], p["text"], p["lang"], None)
+            for p in map(make_page, range(500))]
+    for k, (doc, cs) in enumerate(_GOLDEN_EDGE_DOCS):
+        payload = doc if isinstance(doc, bytes) else doc.encode("utf-8")
+        rows.append((f"u/edge/{k}", ts, payload, None, "en", cs))
+    for k, payload in enumerate(_GOLDEN_EDGE_PDFS):
+        rows.append((f"u/pdf/{k}", ts, payload, None, "en", None))
+    paras = ["Chateau (nested (parens)) \\ back 2015", "second 1999"]
+    for flavor in range(7):
+        rows.append((f"u/flavor/{flavor}", ts,
+                     _make_pdf(paras, "Tît (le)", flavor=flavor), None, "fr",
+                     None))
+    pages = spark.createDataFrame(rows, PAGES_DDL + ", http_charset string")
+    got = sorted(extract_records(pages).collect(), key=lambda r: r["url"])
+    assert len(got) == len(rows)
+    h = hashlib.sha256()
+    for r in got:
+        h.update(json.dumps(_canon_row(r), ensure_ascii=False)
+                 .encode("utf-8"))
+        h.update(b"\n")
+    assert h.hexdigest() == (
+        "81a56522ee811b307affb1566e9e2366aaff14000f85e07a973f5956c78fd2f6")

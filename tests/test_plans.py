@@ -51,9 +51,10 @@ def test_extract_path_is_pure_map(spark):
     plan = plan_of(extract_records(pages_spark(spark, 10, partitions=2)))
     assert "Exchange" not in plan, plan
     # whole-stage codegen stays on (toString renders codegen stages as
-    # "*(n) " prefixes); stage 2 itself is one interpreted projection,
-    # because its struct packing uses `transform` lambdas
+    # "*(n) " prefixes) in the source's stage below the MapInArrow, which
+    # emits the finished record: no projection is left above it
     assert "*(" in plan, plan
+    assert plan.startswith("MapInArrow"), plan
 
 
 def test_native_ops_are_codegen(spark):

@@ -362,8 +362,20 @@ def test_myers_distances_match_dp():
 
 
 # ---------------------------------------------------------------------------
-# segmentation: every SEGMENT_DDL column vs oracle.extract run in-process
+# segmentation: every RECORD_DDL column vs oracle.record run in-process
 # ---------------------------------------------------------------------------
+
+def _plain(v):
+    """Spark-collected value with every ``Row`` turned into a dict."""
+    from pyspark.sql import Row
+    if isinstance(v, Row):
+        return {k: _plain(x) for k, x in v.asDict().items()}
+    if isinstance(v, dict):
+        return {k: _plain(x) for k, x in v.items()}
+    if isinstance(v, list):
+        return [_plain(x) for x in v]
+    return v
+
 
 def test_segment_matches_oracle_extract(spark):
     from wine_label_ocr_spark import oracle
@@ -377,31 +389,21 @@ def test_segment_matches_oracle_extract(spark):
     assert len(got) == n
     for i in range(n):
         p = make_page(i)
-        o = oracle.extract(p["html"], p["url"])
+        want = oracle.record(oracle.extract(p["html"], p["url"]))
         r, inp = got[p["url"]], inputs[p["url"]]
         assert r["warc_ts"] == inp["warc_ts"] and r["lang"] == inp["lang"]
-        want = {
-            "text": o["text"], "title_raw": o["title"], "vintage": o["year"],
-            "maker_name": o["maker_name"], "custom_id": o["custom_id"],
-            "rec_id": o["rec_id"], "year_candidates": o["year_candidates"],
-            "barcode": p["canonical"], "method": o["method"],
-            "charset": o["charset"], "n_blocks": o["n_blocks"],
-            "kept_blocks": o["kept_blocks"], "raw_chars": o["raw_chars"],
-            "fingerprint": o["fingerprint"],
-            "spans": [(sp["start"], sp["end"], sp["tag"], sp["cx"], sp["cy"],
-                       sp["area"], sp["aspect_ratio"], sp["solidity"],
-                       sp["extent"], sp["score"]) for sp in o["spans"]]}
-        have = {c: r[c] for c in want}
-        have["spans"] = [tuple(sp) for sp in r["spans"]]
+        assert want["barcode"] == p["canonical"], i
+        have = {c: _plain(r[c]) for c in want}
         assert have == want, (i, p["kind"])
-    # every SEGMENT_DDL column was compared
+        assert list(r["raw"]) == ["title", "year_candidates", "blocks"]
+    # every RECORD_DDL column was compared
     assert set(want) | {"url", "warc_ts", "lang"} == set(seg.columns)
 
 
 def test_segment_kernel_empty_batch_and_null_html(spark):
-    """The stage-1 kernel called directly: a zero-row batch gives zero rows
-    under the SEGMENT_DDL names, and a NULL ``html`` row carries the
-    ``oracle.extract(b"", url)`` record."""
+    """The extract kernel called directly: a zero-row batch gives zero rows
+    under the RECORD_DDL names, and a NULL ``html`` row carries the
+    ``oracle.record(oracle.extract(b"", url))`` record."""
     import datetime
 
     import pyarrow as pa
@@ -409,8 +411,8 @@ def test_segment_kernel_empty_batch_and_null_html(spark):
     from pyspark.sql.types import DataType
     from wine_label_ocr_spark import oracle
     from wine_label_ocr_spark.operators.segmentation import (
-        SEGMENT_DDL, _segment_batches_arrow)
-    schema = to_arrow_schema(DataType.fromDDL(SEGMENT_DDL))
+        RECORD_DDL, _segment_batches_arrow)
+    schema = to_arrow_schema(DataType.fromDDL(RECORD_DDL))
     in_schema = pa.schema([("url", pa.string()), ("warc_ts", pa.timestamp("us")),
                            ("html", pa.binary()), ("lang", pa.string())])
     ts = datetime.datetime(2024, 1, 2, 3, 4, 5)
@@ -422,10 +424,10 @@ def test_segment_kernel_empty_batch_and_null_html(spark):
     assert [b.num_rows for b in out] == [0, 1]
     assert out[0].schema.names == schema.names
     row = out[1].to_pylist()[0]
-    o = oracle.extract(b"", "http://x.test/a")
     want = {"url": "http://x.test/a", "warc_ts": ts, "lang": "en",
-            "title_raw": o["title"], "vintage": o["year"]}
-    want.update({k: o[k] for k in schema.names if k not in want})
+            **oracle.record(oracle.extract(b"", "http://x.test/a"))}
+    # pyarrow renders a map as its (key, value) pairs, in order
+    want["raw"] = list(want["raw"].items())
     assert row == want
 
 

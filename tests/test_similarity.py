@@ -217,8 +217,9 @@ def test_span_quality_gate_normalization():
 
 def test_span_similarity_join(spark):
     from wine_label_ocr_spark.fixtures import pages_spark
-    from wine_label_ocr_spark.operators.segmentation import segment
-    seg = segment(pages_spark(spark, 30, partitions=2)).select("url", "spans").cache()
+    from wine_label_ocr_spark.plans.pipeline import extract_records
+    seg = extract_records(pages_spark(spark, 30, partitions=2)) \
+        .select("url", "blob_data.spans").cache()
     # blocking is mandatory: omitting pair_cond must raise, not cross-join
     with pytest.raises(ValueError):
         S.span_similarity_join(seg, seg)

@@ -5,14 +5,14 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from wine_label_ocr_spark.fixtures import pages_spark
-from wine_label_ocr_spark.operators.segmentation import segment
+from wine_label_ocr_spark.plans.pipeline import extract_records
 from wine_label_ocr_spark.operators.stitch import stitch_views
 
 
 def test_stitch_rebases_offsets(spark):
-    seg = segment(pages_spark(spark, 20, partitions=2)) \
+    seg = extract_records(pages_spark(spark, 20, partitions=2)) \
         .withColumn("doc_key", F.regexp_extract("url", r"/p/(\d+)\.html", 1)) \
-        .select("doc_key", "text", "spans").cache()
+        .select("doc_key", "text", "blob_data.spans").cache()
     out = stitch_views(seg, seg).collect()
     assert len(out) == 20
     by_key = {r["doc_key"]: r for r in out}
@@ -33,9 +33,9 @@ def test_stitch_rebases_offsets(spark):
 
 
 def test_stitch_requires_both_views(spark):
-    seg = segment(pages_spark(spark, 10, partitions=2)) \
+    seg = extract_records(pages_spark(spark, 10, partitions=2)) \
         .withColumn("doc_key", F.regexp_extract("url", r"/p/(\d+)\.html", 1)) \
-        .select("doc_key", "text", "spans")
+        .select("doc_key", "text", "blob_data.spans")
     front = seg
     back = seg.limit(4)
     # inner join: only keys with both captures survive (Photo_Stitch.py:251-427)

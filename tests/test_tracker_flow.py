@@ -17,8 +17,7 @@ from pyspark.sql import functions as F
 from wine_label_ocr_spark import oracle
 from wine_label_ocr_spark.fixtures import make_page
 from wine_label_ocr_spark.operators import similarity as S
-from wine_label_ocr_spark.operators.extraction import extract_fields
-from wine_label_ocr_spark.operators.segmentation import segment
+from wine_label_ocr_spark.plans.pipeline import extract_records
 from wine_label_ocr_spark.sources.table import ManifestTable
 
 
@@ -66,12 +65,12 @@ def records(spark):
                      p["warc_ts"], other, None, p["lang"]))
     df = spark.createDataFrame(
         rows, "url string, warc_ts timestamp, html binary, text string, lang string")
-    return extract_fields(segment(df)).cache()
+    return extract_records(df).cache()
 
 
 def test_pair_verdicts(spark, records):
     rec = records.select("url", "maker_name", "vintage", "custom_id",
-                         "fingerprint", "spans")
+                         "fingerprint", "blob_data.spans")
     a = rec.filter(~F.col("url").startswith("https://mirror-")).alias("a")
     b = rec.filter(F.col("url").startswith("https://mirror-")).alias("b")
     pairs = a.join(b, F.col("b.url").contains(
@@ -132,7 +131,6 @@ def test_curate_crawl_end_to_end(spark, tmp_path):
     from wine_label_ocr_spark.fixtures import pages_pandas
     from wine_label_ocr_spark.plans.curate import curate_crawl
     from wine_label_ocr_spark.sources.warc import read_warc, write_warc
-    from wine_label_ocr_spark.plans.pipeline import extract_records
 
     pdf = pages_pandas(120)
     rows = pdf.to_dict("records")

@@ -43,12 +43,11 @@ def test_warc_pipeline_byte_identity(tmp_path, spark):
     """Pages read from WARC shards extract byte-identically — the engine
     consumes a crawl directly, not just parquet."""
     from pyspark.sql import functions as F
-    from wine_label_ocr_spark.operators.extraction import extract_fields
-    from wine_label_ocr_spark.operators.segmentation import segment
+    from wine_label_ocr_spark.plans.pipeline import extract_records
 
     pdf = _shards(tmp_path)
     pages = read_warc(spark, str(tmp_path / "*.warc"))
-    rec = extract_fields(segment(pages)).select("url", "text")
+    rec = extract_records(pages).select("url", "text")
     truth = {r["url"]: r["text"] for _, r in pdf.iterrows()}
     got = rec.collect()
     assert len(got) == N
@@ -200,10 +199,11 @@ def test_warc_http_charset_beats_meta(spark, tmp_path):
     rec = _cc_record(payload, charset="windows-1252")
     p = tmp_path / "cp1252.warc"
     p.write_bytes(rec)
-    from wine_label_ocr_spark.operators.segmentation import segment
+    from wine_label_ocr_spark.plans.pipeline import extract_records
     pages = read_warc(spark, str(p))
-    row = segment(pages).select("charset", "text").collect()[0]
-    assert row["charset"] == "cp1252"
+    row = extract_records(pages).select(
+        "blob_data.mask_info.note", "text").collect()[0]
+    assert row["note"] == "cp1252"
     assert "Ch\u00e2teau P\u00e9trus" in row["text"]
 
 
@@ -296,8 +296,9 @@ def test_wat_sidecar_roundtrip(spark, tmp_path):
 
 def test_warc_gate_shard_dirs_pruned_per_sf(tmp_path):
     """The warc_extract gate names its shard cache per sf and, after
-    publishing a new one, removes only the same sf's other tags: other sf
-    values and in-flight staging dirs stay."""
+    publishing a new one, removes the same sf's other tags and the
+    published dirs of the older naming with no sf key: other sf values
+    and in-flight staging dirs stay."""
     import os
 
     import __spark_entry__ as E
@@ -309,9 +310,12 @@ def test_warc_gate_shard_dirs_pruned_per_sf(tmp_path):
     old = shard_dir("/data/sf0.01", "aaaaaaaaaa")
     other_sf = shard_dir("/data/sf0.001", "aaaaaaaaaa")
     staging = old + ".stage-0123"
-    for d in (new, old, other_sf, staging):
+    legacy = str(tmp_path / "wlos_warc_cccccccccc")
+    legacy_staging = legacy + ".stage-4567"
+    for d in (new, old, other_sf, staging, legacy, legacy_staging):
         os.mkdir(d)
         open(os.path.join(d, "part-0.warc.gz"), "wb").close()
-    assert E._prune_warc_shards(new) == [os.path.basename(old)]
+    assert sorted(E._prune_warc_shards(new)) == sorted(
+        os.path.basename(d) for d in (old, legacy))
     assert sorted(os.listdir(tmp_path)) == sorted(
-        os.path.basename(d) for d in (new, other_sf, staging))
+        os.path.basename(d) for d in (new, other_sf, staging, legacy_staging))

@@ -12,8 +12,8 @@ Methodology (see memory: local-bench gotchas):
   maxPartitionBytes ⇒ same task boundaries), identical plan;
 * per level: warm-up on the full plan shape, then best-of-R reps (host
   VM noise is 2-3×; best-of filters neighbor interference);
-* job = production shape: parquet scan → stage-1 mapInPandas → stage-2
-  native exprs → noop sink.
+* job = production shape: parquet scan → one ``mapInArrow`` that emits
+  the finished record → noop sink.
 
 Usage: python tools/bench_scaling.py [n_pages] [reps] [N]
   N (default 2) → measures local[N] vs local[4N]. Pairs with larger N

@@ -59,12 +59,12 @@ def main(names: list[str]) -> None:
     q = emb.limit(3).select(F.col("vec_id").alias("q_id"), "embedding")
 
     sections = [
-        ("Flagship extract pipeline (pages → spans → fields → records)",
-         "Zero Exchange (pinned): scan → ONE MapInArrow (every record "
-         "field, computed by `oracle.extract`) → one native projection "
-         "that packs `blob_data` and `raw`. The pure-map shape is what "
-         "makes the N→4N scaling efficiency hold — no cross-executor "
-         "coordination at all.",
+        ("Flagship extract pipeline (pages → records)",
+         "Zero Exchange (pinned): scan → ONE MapInArrow that emits the "
+         "finished record (every column computed by `oracle.extract` and "
+         "packed by `oracle.record`), with no projection above it "
+         "(pinned). The pure-map shape is what makes the N→4N scaling "
+         "efficiency hold — no cross-executor coordination at all.",
          extract_records(pages_spark(spark, 10, partitions=2))),
         ("lineitem_agg — filter pushdown + partial aggregation",
          "PushedFilters on l_shipdate reach the parquet scan (pinned); "

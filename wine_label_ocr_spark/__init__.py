@@ -7,14 +7,14 @@ extraction + fuzzy dedup against a JSONL store) becomes a two-stage DOM
 pipeline over tables of Common-Crawl-style web pages
 ``(url, warc_ts, html, text, lang)``:
 
-* stage 1 (``operators.segmentation``): lexer-built block list with
-  text-density / link-density features (the analog of
-  ``hybrid.py:102-146`` heuristic region detection + ``hybrid.py:189-227``
-  connected components), one ``mapInArrow`` over Arrow batches;
-* stage 2 (``operators.extraction``): block classification + field
-  extraction (title ≈ maker name, year ≈ vintage) in native
-  ``pyspark.sql.functions`` (the analog of
-  ``final_run_ocr.py:299-378``);
+* stage 1: lexer-built block list with text-density / link-density
+  features (the analog of ``hybrid.py:102-146`` heuristic region
+  detection + ``hybrid.py:189-227`` connected components);
+* stage 2: block classification + field extraction (title ≈ maker name,
+  year ≈ vintage; the analog of ``final_run_ocr.py:299-378``);
+* both stages are ``oracle.extract`` + ``oracle.record``, run by one
+  ``mapInArrow`` over Arrow batches (``operators.segmentation.segment``)
+  that emits the finished record;
 * dedup ingest (``operators.dedupe``): exact key, then blocked fuzzy
   (the analog of ``scan_and_store.py:121-164``);
 * similarity suite (``operators.similarity``): the analog of

@@ -1,11 +1,13 @@
-"""Stage 1 — document segmentation (the "detect" of detect-then-read).
+"""The extract stage: segmentation and field extraction (the "detect"
+and the "read" of detect-then-read) in one ``mapInArrow``.
 
 One ``mapInArrow`` over Arrow batches turns each page ``(url, warc_ts,
-html BINARY, lang)`` into its segmented form: extracted main ``text``,
-candidate span structs with geometry features, and every record field
-(maker name, year cascade over the whole visible page, year candidates,
-custom and content-hash ids, canonical-link metadata from the head
-markup). Stage 2 only reshapes these columns.
+html BINARY, lang)`` into its finished record (``RECORD_DDL``, FIXTURES.md
+§2): extracted main ``text``, every record field (maker name, year
+cascade over the whole visible page, custom and content-hash ids,
+canonical-link metadata from the head markup), the ``blob_data`` struct
+with the candidate spans and their geometry features, and the ``raw``
+candidate buckets.
 
 Reference analogs (SURVEY.md §2.3): heuristic region detect D2
 (``hybrid.py:102-146``), connected-component labeling D4
@@ -15,13 +17,14 @@ cascade (``final_run_ocr.py:187-297``: main text first, whole page on
 miss), and the PDF/layout branch (SURVEY.md §2.11). The UDF *shares the
 oracle's code path* — one implementation of the lexer/gate/cascade/
 record fields/fingerprint exists in the repo (SURVEY.md §7.3.1), and
-every computed column is a key of the ``oracle.extract`` record, so
-Spark output is byte-identical by construction, verified by golden tests.
+every computed column is a key of ``oracle.record(oracle.extract(..))``,
+so Spark output is byte-identical by construction, verified by golden
+tests.
 
 Scale notes:
 
-* the UDF is a pure map — no shuffle is introduced; Catalyst pipelines it
-  with downstream native projections into one stage;
+* the UDF is a pure map — no shuffle is introduced, and no projection
+  is needed above it;
 * the Arrow output is deliberately SLIM: the full visible text and the
   raw head markup stay inside ``oracle.extract`` and never cross the
   boundary — only their resolved products (``vintage``, ``barcode``,
@@ -39,34 +42,36 @@ from pyspark.sql import DataFrame
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import DataType
 
-from ..oracle import extract
+from ..oracle import extract, record
 
 SPAN_DDL = ("array<struct<start:int,`end`:int,tag:string,cx:double,cy:double,"
             "area:double,aspect_ratio:double,solidity:double,extent:double,"
             "score:double>>")
 
-SEGMENT_DDL = (
-    "url string, warc_ts timestamp, lang string, "
-    "text string, title_raw string, maker_name string, vintage int, "
-    "year_candidates array<string>, custom_id string, rec_id string, "
-    "barcode string, method string, charset string, n_blocks int, "
-    f"kept_blocks int, raw_chars int, fingerprint string, spans {SPAN_DDL}"
+RECORD_DDL = (
+    "url string, warc_ts timestamp, custom_id string, maker_name string, "
+    "vintage int, barcode string, fingerprint string, rec_id string, "
+    "text string, lang string, blob_data struct<roi_bbox:array<int>,"
+    "roi_shape:array<int>,mask_info:struct<method:string,"
+    "foreground_ratio:double,note:string>,blob_count:int,fingerprint:string,"
+    f"spans:{SPAN_DDL}>, raw map<string,array<struct<text:string,"
+    "conf:double>>>"
 )
 
-# input columns carried through unchanged; every other SEGMENT_DDL column
-# is the ``oracle.extract`` record key of the same name, except these two
+# input columns carried through unchanged; every other RECORD_DDL column
+# is the ``oracle.record`` key of the same name
 _PASSED = ("url", "warc_ts", "lang")
-_RECORD_KEY = {"title_raw": "title", "vintage": "year"}
 
 
 def _segment_batches_arrow(schema, batches: Iterable) -> Iterator:
-    """Arrow-native segmentation kernel: ``oracle.extract`` per row, then a
-    transpose of its records into ``schema`` (``SEGMENT_DDL`` as Arrow).
+    """Arrow-native extraction kernel: ``oracle.record(oracle.extract(..))``
+    per row, then a transpose of the records into ``schema``
+    (``RECORD_DDL`` as Arrow).
 
     The kernel builds the output ``pyarrow.RecordBatch`` itself — one
-    ``pa.array`` C-level conversion per column, spans straight from the
-    oracle's dicts — because the ``mapInPandas`` form it replaced paid
-    ~160 µs/doc of pure boundary overhead on a ~260 µs/doc kernel
+    ``pa.array`` C-level conversion per column, nested structs straight
+    from the oracle's dicts — because the ``mapInPandas`` form it replaced
+    paid ~160 µs/doc of pure boundary overhead on a ~260 µs/doc kernel
     (measured at r10 on the bench corpus): one Python tuple per row, a
     ``pd.DataFrame`` transpose per batch, and Spark's pandas→Arrow
     coercion of the nested ``spans`` column on the way back.
@@ -74,30 +79,30 @@ def _segment_batches_arrow(schema, batches: Iterable) -> Iterator:
     import pyarrow as pa
 
     # resolved once: a pyarrow Field builds a new str on every ``.name``
-    columns = [(f.name, _RECORD_KEY.get(f.name, f.name), f.type)
-               for f in schema]
+    columns = [(f.name, f.type) for f in schema]
     for batch in batches:
         hcss = (batch.column("http_charset").to_pylist()
                 if "http_charset" in batch.schema.names
                 else [None] * batch.num_rows)
-        recs = [extract(html or b"", url, hcs) for url, html, hcs in zip(
-            batch.column("url").to_pylist(),
-            batch.column("html").to_pylist(), hcss)]
+        recs = [record(extract(html or b"", url, hcs)) for url, html, hcs
+                in zip(batch.column("url").to_pylist(),
+                       batch.column("html").to_pylist(), hcss)]
         yield pa.RecordBatch.from_arrays(
             [batch.column(name) if name in _PASSED else
-             pa.array([r[key] for r in recs], typ)
-             for name, key, typ in columns],
+             pa.array([r[name] for r in recs], typ)
+             for name, typ in columns],
             names=schema.names)
 
 
 def segment(pages: DataFrame) -> DataFrame:
-    """pages(url, warc_ts, html, lang[, text]) → segmented DataFrame.
+    """pages(url, warc_ts, html, lang[, text][, http_charset]) → records
+    (``RECORD_DDL``).
 
     The ground-truth ``text`` column (if present) is dropped first — the
     pipeline must *recover* it, never read it.
     """
-    schema = to_arrow_schema(DataType.fromDDL(SEGMENT_DDL))
+    schema = to_arrow_schema(DataType.fromDDL(RECORD_DDL))
     cols = [c for c in ("url", "warc_ts", "html", "lang", "http_charset")
             if c in pages.columns]
     return pages.select(*cols).mapInArrow(
-        functools.partial(_segment_batches_arrow, schema), schema=SEGMENT_DDL)
+        functools.partial(_segment_batches_arrow, schema), schema=RECORD_DDL)

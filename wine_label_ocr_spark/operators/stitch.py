@@ -33,9 +33,10 @@ def _rebase(spans: Column, offset: Column) -> Column:
 
 def stitch_views(front: DataFrame, back: DataFrame,
                  key: str = "doc_key") -> DataFrame:
-    """Merge two segmented views per key into one stitched record.
+    """Merge two extracted views per key into one stitched record.
 
-    Inputs: segmented frames with (``key``, text, spans, kept_blocks).
+    Inputs: frames with (``key``, text, spans), e.g. ``extract_records``
+    output with ``blob_data.spans`` selected.
     Output: one row per key present in BOTH views (the reference requires
     both captures before proceeding, Photo_Stitch.py:251-427) with
     ``text`` = front ⊕ "\\n\\n" ⊕ back and spans concatenated, back's

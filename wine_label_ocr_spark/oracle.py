@@ -30,7 +30,10 @@ Structure mirrors the reference's detect-then-read pipeline:
                              (``hybrid.py:229-242``), with pinned float
                              formatting for determinism;
 * PDF branch               — payloads starting with ``%PDF`` route through a
-                             layout parse emitting the same span schema.
+                             layout parse emitting the same span schema;
+* record packing           — ``record`` turns an ``extract`` result into
+                             the finished record columns (``blob_data``,
+                             ``raw``), which Spark emits as they are.
 
 DO NOT change the constants or the normalization order here without
 regenerating every golden fixture: byte-identity tests in
@@ -108,8 +111,7 @@ YEAR_PATTERNS = (
 )
 
 # Maker charset whitelist — final_run_ocr.py:355 ALLOWED = "A-Z0-9 &'-".
-MAKER_STRIP = r"[^A-Z0-9 &'-]"
-_MAKER_STRIP_RE = re.compile(MAKER_STRIP)
+_MAKER_STRIP_RE = re.compile(r"[^A-Z0-9 &'-]")
 _WS_RE = re.compile(r"\s+")
 
 # Attribute section: plain-char RUNS are consumed atomically
@@ -875,4 +877,47 @@ def extract(payload: bytes, url: str,
         "n_blocks": n_blocks,
         "kept_blocks": len(spans),
         "raw_chars": len(raw_text),
+    }
+
+
+def record(rec: dict[str, Any]) -> dict[str, Any]:
+    """The finished record (FIXTURES.md §2) of one ``extract`` result: every
+    record column except the page's own ``url``, ``warc_ts`` and ``lang``,
+    under its record name (``vintage`` is ``year``).
+
+    ``blob_data`` is the BlobData-analog struct (FIXTURES.md §3): the span
+    extent, ``[n_blocks, len(text)]``, the mask info (method, kept share of
+    the visible text, charset), the kept-block count, the fingerprint and
+    the spans. ``raw`` is the ocr_raw analog (final_run_ocr.py:325-340): the
+    candidate buckets ``title``, ``year_candidates`` and ``blocks`` (the
+    first 40 characters of the top 3 spans), in that order.
+    """
+    text, spans = rec["text"], rec["spans"]
+    return {
+        "custom_id": rec["custom_id"],
+        "maker_name": rec["maker_name"],
+        "vintage": rec["year"],
+        "barcode": rec["barcode"],
+        "fingerprint": rec["fingerprint"],
+        "rec_id": rec["rec_id"],
+        "text": text,
+        "blob_data": {
+            "roi_bbox": ([spans[0]["start"], spans[-1]["end"]] if spans
+                         else [0, 0]),
+            "roi_shape": [rec["n_blocks"], len(text)],
+            "mask_info": {
+                "method": rec["method"],
+                "foreground_ratio": len(text) / max(rec["raw_chars"], 1),
+                "note": rec["charset"]},
+            "blob_count": rec["kept_blocks"],
+            "fingerprint": rec["fingerprint"],
+            "spans": spans,
+        },
+        "raw": {
+            "title": [{"text": rec["title"] or "", "conf": 1.0}],
+            "year_candidates": [{"text": c, "conf": 1.0}
+                                for c in rec["year_candidates"]],
+            "blocks": [{"text": text[s["start"]:s["start"] + 40],
+                        "conf": s["score"]} for s in spans[:3]],
+        },
     }
