@@ -59,26 +59,6 @@ def test_crawl_cycle_composed_contracts(spark):
                for r in sched)
 
 
-def test_crawl_cycle_broadcast_candidates_plan_and_equivalence(spark):
-    """The incremental-crawl membership plan (broadcast_candidates=True)
-    must schedule EXACTLY what the default anti-join schedules, and its
-    plan must never shuffle the seen store: the store side reaches both
-    membership joins as a scan feeding BroadcastHashJoins — zero
-    fp-keyed Exchange (the default anti-join shuffles the whole store,
-    measured ~store-size per cycle at 1M pages, BENCH.md r8)."""
-    pages, robots, seen = _inputs(spark)
-    # materialize the store as production has it (a parquet scan, not a
-    # derivation carrying its own distinct-exchange)
-    seen = spark.createDataFrame(seen.collect(), "fp bigint")
-    base = sorted(r["url"] for r in crawl_cycle(pages, robots, seen).collect())
-    bc = crawl_cycle(pages, robots, seen, broadcast_candidates=True)
-    assert sorted(r["url"] for r in bc.collect()) == base
-    plan = bc._jdf.queryExecution().executedPlan().toString()
-    assert "hashpartitioning(fp" not in plan
-    assert "hashpartitioning(_fp" not in plan
-    assert plan.count("BroadcastHashJoin") >= 2
-
-
 def test_crawl_cycle_funnel_counts(spark):
     pages, robots, seen = _inputs(spark)
     got = {r["stage"]: r["n_urls"]
@@ -245,34 +225,6 @@ def test_crawl_schedule_stream_seq_continues_across_batches(spark,
     batch1 = {by_seq[0]["url"], by_seq[1]["url"]}
     assert batch1 == {"https://s.com/one/a", "https://s.com/one/b"} or \
         batch1 == {"https://s.com/two/a", "https://s.com/two/b"}
-
-
-def test_robots_map_flavor_equals_groupby_flavor(spark):
-    """The map-flavored verdict (array_max over struct(rule_len,
-    allow)) must agree with the certified groupBy flavor on every
-    wildcard/anchor/specificity shape."""
-    from wine_label_ocr_spark.operators.robots import (
-        parse_robots_rules, robots_allowed, robots_allowed_map,
-        robots_rules_by_host)
-    robots = spark.createDataFrame(
-        [("h0.com", "User-agent: *\nDisallow: /private/\nAllow: /private/ok\n"),
-         ("h1.com:8080", "User-agent: *\nDisallow: /\n"),
-         ("h5.com", "User-agent: *\nDisallow: /*.pdf$\n"
-                    "Allow: /docs/keep*\nDisallow: /docs/\n"),
-         ("h6.com", "User-agent: *\nDisallow: /a/*/secret\n"
-                    "Disallow: /public/x$\nDisallow: /priv$\n")],
-        "host string, robots_txt string")
-    rules = parse_robots_rules(robots)
-    urls = spark.createDataFrame(
-        [(f"https://h{h}.com{p}",) for h in range(8)
-         for p in ["/public/x", "/public/x/more", "/private/x",
-                   "/private/ok/y", "/docs/keep/a.pdf", "/docs/old/a.pdf",
-                   "/a/b/secret", "/priv", "", "?q=1"]], "url string")
-    a = {r["url"]: r["allowed"] for r in robots_allowed(urls, rules).collect()}
-    b = {r["url"]: r["allowed"]
-         for r in robots_allowed_map(urls, robots_rules_by_host(rules))
-         .collect()}
-    assert a == b
 
 
 def test_parse_sitemap_urls_formats():

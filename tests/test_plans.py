@@ -272,18 +272,17 @@ def test_pagerank_lineage_is_cut(spark):
     assert plan.count("Join") == 0, plan
 
 
-def test_robots_map_flavor_has_no_per_url_aggregation(spark):
-    """robots_allowed_map must verdict via per-row array algebra after
-    ONE host join — no max_by / per-URL HashAggregate (the groupBy
-    flavor's two wide shuffles of the page set)."""
+def test_robots_allowed_has_no_per_url_aggregation(spark):
+    """robots_allowed must verdict via per-row array algebra after ONE
+    host join — no max_by / per-URL HashAggregate (an explode +
+    groupBy(url) plan would shuffle the page set twice)."""
     from wine_label_ocr_spark.operators.robots import (
-        parse_robots_rules, robots_allowed_map, robots_rules_by_host)
+        parse_robots_rules, robots_allowed)
     robots = spark.createDataFrame(
         [("h.com", "User-agent: *\nDisallow: /x\n")],
         "host string, robots_txt string")
     urls = spark.createDataFrame([("https://h.com/x",)], "url string")
-    plan = plan_of(robots_allowed_map(
-        urls, robots_rules_by_host(parse_robots_rules(robots))))
+    plan = plan_of(robots_allowed(urls, parse_robots_rules(robots)))
     assert "max_by" not in plan
     assert "array_max" in plan
     # only the (tiny) rules side aggregates: exactly one grouping, on host

@@ -3,7 +3,7 @@
 from __future__ import annotations
 
 from wine_label_ocr_spark.operators.robots import (
-    parse_robots, parse_robots_rules, robots_allowed)
+    parse_robots, parse_robots_rules, robots_allowed, robots_directives)
 
 R1 = "User-agent: *\nDisallow: /private/\nAllow: /private/ok\n"
 R2 = "User-agent: badbot\nDisallow: /\n\nUser-agent: *\nDisallow: /tmp/\n"
@@ -144,6 +144,60 @@ def test_robots_rules_host_normalized(spark):
     assert got == {"https://ex.com/no/x": False,
                    "https://ex.com:443/ok": True,
                    "https://deny.com/any": False}
+
+
+def test_robots_allowed_path_shapes_and_ported_key(spark):
+    # the match target is path plus query: no path -> '/', query-only
+    # -> '/?q=1', fragment dropped; a rules key with a port governs the
+    # bare host and every port of it
+    robots = spark.createDataFrame(
+        [("h0.com", "User-agent: *\nDisallow: /$\nDisallow: /?q=\n"),
+         ("h1.com:8080", "User-agent: *\nDisallow: /\n")],
+        "host string, robots_txt string")
+    rules = parse_robots_rules(robots)
+    urls = spark.createDataFrame(
+        [("https://h0.com",), ("https://h0.com/#top",),
+         ("https://h0.com?q=1",), ("https://h0.com?r=1",),
+         ("https://h0.com/x",), ("https://h1.com",),
+         ("https://h1.com/any?q=1",), ("https://h1.com:8080/x",),
+         ("https://h2.com",)],
+        "url string")
+    got = {r["url"]: r["allowed"]
+           for r in robots_allowed(urls, rules).collect()}
+    assert got == {
+        "https://h0.com": False,               # '/' hits '/$'
+        "https://h0.com/#top": False,          # fragment excluded
+        "https://h0.com?q=1": False,           # '/?q=1' hits '/?q='
+        "https://h0.com?r=1": True,            # '/?r=1' misses both
+        "https://h0.com/x": True,
+        "https://h1.com": False,               # ported key governs h1.com
+        "https://h1.com/any?q=1": False,
+        "https://h1.com:8080/x": False,
+        "https://h2.com": True,                # no robots row
+    }
+
+
+def test_robots_empty_inputs(spark):
+    # an empty robots table yields typed empty frames, and an empty
+    # rules table allows every URL (rows pass through unchanged)
+    robots = spark.createDataFrame([], "host string, robots_txt string")
+    rules = parse_robots_rules(robots)
+    assert rules.collect() == []
+    assert rules.schema.simpleString() == (
+        "struct<host:string,allow:boolean,prefix:string,rule_len:int,"
+        "pattern:string>")
+    dirs = robots_directives(robots)
+    assert dirs.collect() == []
+    assert dirs.schema.simpleString() == (
+        "struct<host:string,crawl_delay_ms:bigint,sitemaps:array<string>>")
+    urls = spark.createDataFrame(
+        [(1, "https://h.com/x"), (2, "https://h.com"), (3, "notaurl"),
+         (4, None)], "id int, url string")
+    got = robots_allowed(urls, rules)
+    assert got.columns == ["id", "url", "allowed"]
+    assert sorted(tuple(r) for r in got.collect()) == [
+        (1, "https://h.com/x", True), (2, "https://h.com", True),
+        (3, "notaurl", True), (4, None, True)]
 
 
 def test_robots_specificity_counts_wildcards(spark):

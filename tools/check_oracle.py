@@ -4,7 +4,8 @@ Runs each ``__spark_entry__.queries()`` entry and its ``oracle_sql()`` twin
 on the same parquet tables (default sf0.01), compares row count, column
 names, and an order-insensitive value hash (columns sorted by name, rows
 sorted, values canonicalized). Usage: ``python tools/check_oracle.py [sf_dir]``.
-``tests/test_oracle_gates.py`` imports the fetch and hash helpers below.
+The ``oracle_gate`` fixture in ``tests/conftest.py`` imports the fetch and
+hash helpers below.
 """
 
 from __future__ import annotations

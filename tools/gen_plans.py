@@ -190,16 +190,20 @@ def main(names: list[str]) -> None:
          "serializes the host anyway.",
          E.q_frontier_schedule(spark, SF)),
         ("robots_gate — rules ≪ pages equi join, most-specific pick",
-         "Exploded-rules flavor (the certified gate): host equi join, "
-         "literal-prefix pre-filter + regexp only for wildcard rules, "
-         "max_by(struct(rule_len, allow)) per URL.",
+         "The rules pack to one row per host (collect_list over the tiny "
+         "rules side), ONE host equi join, then per row: literal-prefix "
+         "pre-filter + regexp only for wildcard rules, "
+         "array_max(struct(rule_len, allow)). No per-URL aggregation — "
+         "the same plan crawl_cycle runs.",
          E.q_robots_gate(spark, SF)),
         ("crawl_cycle — composed crawl capstone",
          "outlinks → resolve → canonical (all pure maps) → one distinct → "
-         "fp anti-join against the seen store → robots_allowed_map (ONE "
-         "host equi join + array algebra — the page set is never shuffled "
-         "for the verdict) → frontier schedule. The only wide shuffles "
-         "are the candidate distinct and the host window.",
+         "fp anti-join against the seen store → robots_allowed (ONE "
+         "host equi join + array algebra, no per-URL aggregation) → "
+         "frontier schedule. The candidates shuffle for the distinct, "
+         "the fp anti-join and on host (the robots and delay joins, "
+         "which AQE turns into broadcasts of the tiny robots side, and "
+         "the host window).",
          E.q_crawl_cycle(spark, SF)),
         ("crawl_cycle_sitemap — robots-declared sitemap seeds union in",
          "Sitemap locs parse in one Arrow map over the tiny fetched-"

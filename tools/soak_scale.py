@@ -293,17 +293,6 @@ def run_crawlloop(n_pages: int) -> dict:
         t_funnel2 = time.time() - t3
         sr2, sw2 = _shuffle_totals(ui_port)
 
-        # ---- cycle 2, incremental membership plan (r8): the store is
-        # probed in place (broadcast candidate fps), never shuffled ----
-        t4 = time.time()
-        s2bc = crawl_cycle(b2, robots, seen2,
-                           broadcast_candidates=True).select("url")
-        n_sched2_bc = s2bc.count()
-        t_cycle2_bc = time.time() - t4
-        sr3, sw3 = _shuffle_totals(ui_port)
-        assert n_sched2_bc == n_sched2, \
-            "broadcast-candidates plan changed the schedule"
-
         # ---- cycle 2, bucketed storage-partitioned probe (r9): the
         # store never enters a Spark scan — candidates shuffle once on
         # the bucket key, tasks open their own bucket's files ----
@@ -360,14 +349,10 @@ def run_crawlloop(n_pages: int) -> dict:
                 "shuffle_write_mb_c1": round((sw1 - sw0) / 1e6, 1),
                 "shuffle_read_mb_c2": round((sr2 - sr1) / 1e6, 1),
                 "shuffle_write_mb_c2": round((sw2 - sw1) / 1e6, 1),
-                "cycle2_bc_sec": round(t_cycle2_bc, 1),
-                "docs_per_sec_c2_bc": round(n_pages / t_cycle2_bc, 1),
-                "shuffle_read_mb_c2_bc": round((sr3 - sr2) / 1e6, 1),
-                "shuffle_write_mb_c2_bc": round((sw3 - sw2) / 1e6, 1),
                 "cycle2_bk_sec": round(t_cycle2_bk, 1),
                 "docs_per_sec_c2_bk": round(n_pages / t_cycle2_bk, 1),
-                "shuffle_read_mb_c2_bk": round((sr4 - sr3) / 1e6, 1),
-                "shuffle_write_mb_c2_bk": round((sw4 - sw3) / 1e6, 1)}
+                "shuffle_read_mb_c2_bk": round((sr4 - sr2) / 1e6, 1),
+                "shuffle_write_mb_c2_bk": round((sw4 - sw2) / 1e6, 1)}
     finally:
         shutil.rmtree(base, ignore_errors=True)
         spark.stop()

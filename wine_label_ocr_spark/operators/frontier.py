@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W, functions as F
 
 from .dedupe import _hash64
-from .textops import registrable_host
+from .textops import authority_host, registrable_host
 
 
 def schedule_frontier(urls: DataFrame, delays: DataFrame | None = None,
@@ -61,10 +61,7 @@ def schedule_frontier(urls: DataFrame, delays: DataFrame | None = None,
         # Conflicting rows for one host resolve to the MAX delay (the
         # polite direction) via an aggregate, so duplicates can never
         # fan out the join and corrupt seq/fetch offsets.
-        d_host = F.regexp_replace(
-            F.regexp_replace(F.lower(F.col(host_col)), "^[^/@]*@", ""),
-            ":[0-9]+$", "")
-        d = (delays.select(d_host.alias("_host"),
+        d = (delays.select(authority_host(F.col(host_col)).alias("_host"),
                            F.col(delay_col).cast("bigint").alias("_d"))
              .groupBy("_host").agg(F.max("_d").alias("_delay")))
         u = u.join(d, "_host", "left")

@@ -24,12 +24,13 @@ Robots Exclusion Protocol, RFC 9309):
 Scale shape: parsing is per-host Python (genuinely line-oriented — the
 one ``mapInPandas`` here; robots files are ≤ a few KB and one per host,
 so this is the small side of everything). The URL check is pure column
-algebra: a host-keyed equi join (rules ≪ pages), a ``startswith``
-match on the rule's literal prefix (the only test wildcard-free rules
-need; a cheap pre-filter for the rest) plus a ``regexp_like`` against
-the compiled rule pattern for wildcard/anchored rules, and a
-``max_by(struct(rule_len, allow))`` most-specific pick — one narrow
-shuffle keyed on host plus one on url.
+algebra: the rules pack to one row per host (rules ≪ pages), one
+host-keyed equi join, then per row a ``startswith`` match on the
+rule's literal prefix (the only test wildcard-free rules need; a cheap
+pre-filter for the rest) plus a ``regexp_like`` against the compiled
+rule pattern for wildcard/anchored rules, and an
+``array_max(struct(rule_len, allow))`` most-specific pick. The page
+set is never aggregated.
 """
 
 from __future__ import annotations
@@ -197,18 +198,30 @@ def parse_robots_rules(robots: DataFrame, host_col: str = "host",
 
 def robots_allowed(urls: DataFrame, rules: DataFrame,
                    url_col: str = "url") -> DataFrame:
-    """Adds an ``allowed`` column: longest-matching-prefix verdict per
-    URL against the host's rules; URLs on hosts with no rules (or no
+    """Adds an ``allowed`` column: the most specific matching rule's
+    verdict per URL against the host's rules (RFC 9309 octet
+    specificity, Allow on ties); URLs on hosts with no rules (or no
     robots row at all, or no parseable host) are allowed. Input rows
     pass through unchanged otherwise.
 
+    ``rules`` is ``parse_robots_rules``'s exploded shape, host first.
+    It is packed to ONE row per host (``collect_list`` of
+    ``struct(allow, prefix, rule_len, pattern)``), joined to the URLs
+    on the host, and each row picks its verdict with array algebra:
+    ``filter`` the matching rules, ``array_max`` over ``struct(rule_len,
+    allow)`` — struct order IS the RFC tie-break, since ``true > false``
+    makes Allow win equal specificity. No per-URL aggregation: the URL
+    side crosses at most one host-keyed exchange (none once the packed
+    rules broadcast), and the plan is stream-safe (a stream-static join
+    plus pure maps).
+
     BOTH join sides are host-normalized the same way (lowercase,
-    userinfo/port stripped — ``registrable_host`` semantics) so
-    ``https://h.com:443/x`` is governed by ``h.com``'s rules and a
-    rules table keyed ``h.com:8080`` still governs ``h.com`` URLs; the
-    match target is path PLUS query (RFC 9309 matches ``/search?q=``
-    rules), fragment excluded."""
-    from .textops import registrable_host
+    userinfo/port stripped — ``registrable_host`` on the URL,
+    ``authority_host`` on the rules key) so ``https://h.com:443/x`` is
+    governed by ``h.com``'s rules and a rules table keyed ``h.com:8080``
+    still governs ``h.com`` URLs; the match target is path PLUS query
+    (RFC 9309 matches ``/search?q=`` rules), fragment excluded."""
+    from .textops import authority_host, registrable_host
     raw_path = F.regexp_extract(F.col(url_col),
                                 r"^(?i:https?)://[^/?#]+([^#]*)", 1)
     # query-only URLs ('https://h.com?x=1') have an empty path: '/?x=1'
@@ -217,25 +230,22 @@ def robots_allowed(urls: DataFrame, rules: DataFrame,
             .otherwise(raw_path)
     probe = urls.withColumn("_host", registrable_host(F.col(url_col))) \
                 .withColumn("_path", path)
-    rules_host = F.regexp_replace(
-        F.regexp_replace(F.lower(F.col(rules.columns[0])), "^[^/@]*@", ""),
-        ":[0-9]+$", "")
-    r = rules.select(rules_host.alias("_host"),
-                     "allow", "prefix", "rule_len", "pattern")
-    lit_hit = F.col("_path").startswith(F.col("prefix"))
-    match = F.when(F.col("pattern").isNull(), lit_hit).otherwise(
-        lit_hit & F.regexp_like(F.col("_path"), F.col("pattern")))
-    hit = (probe.select(F.col(url_col).alias("_u"), "_host", "_path")
-           .join(r, "_host")
-           .filter(match)
-           .groupBy("_u")
-           .agg(F.max_by(
-               F.col("allow"),
-               F.struct(F.col("rule_len"), F.col("allow"))).alias("_verdict")))
-    out = (probe.join(hit, probe[url_col] == hit["_u"], "left")
-           .withColumn("allowed", F.coalesce(F.col("_verdict"), F.lit(True)))
-           .drop("_u", "_verdict", "_host", "_path"))
-    return out
+    packed = (rules.select(
+                  authority_host(F.col(rules.columns[0])).alias("_host"),
+                  F.struct("allow", "prefix", "rule_len", "pattern")
+                   .alias("_r"))
+              .groupBy("_host").agg(F.collect_list("_r").alias("_rules")))
+    match = lambda r: (  # noqa: E731
+        F.col("_path").startswith(r["prefix"])
+        & (r["pattern"].isNull()
+           | F.regexp_like(F.col("_path"), r["pattern"])))
+    best = F.array_max(F.transform(
+        F.filter(F.col("_rules"), match),
+        lambda r: F.struct(r["rule_len"].alias("rule_len"),
+                           r["allow"].alias("allow"))))
+    return (probe.join(packed, "_host", "left")
+            .withColumn("allowed", F.coalesce(best["allow"], F.lit(True)))
+            .drop("_host", "_path", "_rules"))
 
 
 def robots_directives(robots: DataFrame, host_col: str = "host",
@@ -266,62 +276,3 @@ def robots_directives(robots: DataFrame, host_col: str = "host",
     return robots.select(host_col, robots_col).mapInPandas(
         run, schema=f"{host_col} string, crawl_delay_ms bigint, "
                     "sitemaps array<string>")
-
-
-def robots_rules_by_host(rules: DataFrame) -> DataFrame:
-    """Exploded rule rows → ONE row per normalized host with the rule
-    set packed into an array column ``rules`` — the static side of the
-    map-flavored verdict (``robots_allowed_map``). Host normalization
-    matches ``robots_allowed``'s rules side (lowercase, userinfo/port
-    stripped) and happens BEFORE the pack so a table keyed
-    ``h.com:8080`` still governs ``h.com``."""
-    rules_host = F.regexp_replace(
-        F.regexp_replace(F.lower(F.col(rules.columns[0])), "^[^/@]*@", ""),
-        ":[0-9]+$", "")
-    return (rules.select(
-                rules_host.alias("host"),
-                F.struct("allow", "prefix", "rule_len", "pattern")
-                 .alias("_r"))
-            .groupBy("host").agg(F.collect_list("_r").alias("rules")))
-
-
-def robots_allowed_map(urls: DataFrame, rules_by_host: DataFrame,
-                       url_col: str = "url") -> DataFrame:
-    """Map-flavored twin of ``robots_allowed``: identical verdicts
-    (most-specific rule wins — RFC 9309 octet specificity — Allow on
-    ties, no rules / no robots row / no parseable host → allowed;
-    pytest-pinned equivalence), different plan shape:
-
-    ONE host-keyed equi join against the packed per-host rule table +
-    per-row array algebra (``filter`` the matching rules, ``array_max``
-    over ``struct(rule_len, allow)`` — struct ordering IS the RFC
-    tie-break, since ``true > false`` makes Allow win equal
-    specificity). No per-URL aggregation, so the page set is never
-    shuffled: at 10^12 pages this is strictly cheaper than
-    ``robots_allowed``'s explode + groupBy(url) (two wide shuffles),
-    and it is STREAM-SAFE — a stream-static join plus pure maps, the
-    building block of ``crawl_candidates_stream``. The classic flavor
-    stays for the exploded-rules shape the driver gate certifies."""
-    from .textops import registrable_host
-    raw_path = F.regexp_extract(F.col(url_col),
-                                r"^(?i:https?)://[^/?#]+([^#]*)", 1)
-    path = F.when(raw_path == "", F.lit("/")) \
-            .when(raw_path.startswith("?"), F.concat(F.lit("/"), raw_path)) \
-            .otherwise(raw_path)
-    probe = urls.withColumn("_host", registrable_host(F.col(url_col))) \
-                .withColumn("_path", path)
-    joined = probe.join(
-        rules_by_host.select(F.col("host").alias("_host"),
-                             F.col("rules").alias("_rules")),
-        "_host", "left")
-    match = lambda r: (  # noqa: E731
-        F.col("_path").startswith(r["prefix"])
-        & (r["pattern"].isNull()
-           | F.regexp_like(F.col("_path"), r["pattern"])))
-    best = F.array_max(F.transform(
-        F.filter(F.col("_rules"), match),
-        lambda r: F.struct(r["rule_len"].alias("rule_len"),
-                           r["allow"].alias("allow"))))
-    return (joined.withColumn("allowed",
-                              F.coalesce(best["allow"], F.lit(True)))
-            .drop("_host", "_path", "_rules"))

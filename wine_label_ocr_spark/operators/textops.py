@@ -807,6 +807,15 @@ def registrable_host(url: Column) -> Column:
         F.lit("")))
 
 
+def authority_host(host: Column) -> Column:
+    """A host-keyed table's key (``h.com``, ``H.com:8080``,
+    ``user@h.com``) normalized the way ``registrable_host`` normalizes
+    a URL's authority: lowercased, userinfo and port stripped, so a
+    robots or delay table keyed ``h.com:8080`` joins ``h.com`` URLs."""
+    return F.regexp_replace(
+        F.regexp_replace(F.lower(host), "^[^/@]*@", ""), ":[0-9]+$", "")
+
+
 def canonical_url(url: Column) -> Column:
     """Canonical form of an http(s) URL for crawl dedup — the key under
     which two captures count as "the same page":

@@ -6,7 +6,7 @@ an existing operator, chained as ONE lazy DataFrame program —
 
     pages ──extract_outlinks(resolve=True)──▶ hrefs     (pure map)
       ──canonical_url──▶ candidate URLs, distinct       (1 shuffle)
-      ──anti-join seen-URL fingerprint store──▶ unseen  (equi join)
+      ──seen-URL fingerprint store membership──▶ unseen (anti-join)
       ──robots_allowed──▶ politeness-allowed            (host equi join)
       ──schedule_frontier(robots_directives)──▶ slots   (host window)
 
@@ -24,13 +24,17 @@ fetch→expand→schedule loop.
 Scale shapes (the 100 TB read): outlink extraction + resolution +
 canonicalization are pure JVM maps (zero Exchange); the candidate
 ``distinct`` and the seen-store anti-join shuffle only (url | 64-bit
-fp); robots rules are host-keyed and rules ≪ pages; the frontier
+fp); robots rules pack to one row per host and join the candidates
+on the host (rules ≪ pages, no per-URL aggregation); the frontier
 window is host-keyed (politeness serializes a host anyway — see
 ``operators/frontier.py``). The seen store is ID-free 64-bit
 fingerprints (``seen_url_fps``), the same store discipline as
 ``dedupe.snapshot_fingerprints``: membership is all the next cycle
 asks, so at 10^12 URLs the store is 8 bytes a row and the anti-join
-never touches strings.
+never touches strings. Membership has two plans, chosen by the type of
+``seen_fps``: a DataFrame store is anti-joined (the store shuffles on
+fp), a bucketed ``SeenUrlStore`` is probed in place
+(``SeenUrlStore.probe_unseen``: no store scan or exchange).
 """
 
 from __future__ import annotations
@@ -40,8 +44,8 @@ from pyspark.sql import DataFrame, functions as F
 from ..operators.dedupe import _hash64
 from ..operators.frontier import schedule_frontier
 from ..operators.graph import extract_outlinks
-from ..operators.robots import (parse_robots_rules, robots_allowed_map,
-                                robots_directives, robots_rules_by_host)
+from ..operators.robots import (parse_robots_rules, robots_allowed,
+                                robots_directives)
 from ..operators.sitemap import parse_sitemap
 from ..operators.textops import canonical_url
 
@@ -80,7 +84,11 @@ class SeenUrlStore:
     (lo, hi))`` prunes non-overlapping files from the manifest footer
     stats BEFORE Spark lists them — at 10^12 URLs a range-bounded
     probe (membership check, per-shard anti-join) touches only the
-    files whose range it can hit, not the whole store."""
+    files whose range it can hit, not the whole store.
+
+    ``crawl_cycle`` takes either form of the store as ``seen_fps``:
+    ``read()`` for the anti-join, or a bucketed store (``n_buckets``)
+    itself for ``probe_unseen``, which never scans or shuffles it."""
 
     def __init__(self, root: str, oracle_safe: bool = False,
                  n_files_per_commit: int = 8,
@@ -101,10 +109,10 @@ class SeenUrlStore:
     # each task opens only its own bucket's data files directly (Arrow
     # reader, fp column only, batch-streamed). That is the
     # storage-partitioned-join shape: at a 10^12-row store the default
-    # anti-join shuffles the store every cycle and broadcast_candidates
-    # requires candidates ≪ store; the bucketed probe handles
-    # corpus-wide candidate sets with store-side cost = reading the
-    # probed buckets once, no shuffle, no broadcast assumption.
+    # anti-join shuffles the store every cycle; the bucketed probe
+    # handles corpus-wide candidate sets with store-side cost = reading
+    # the probed buckets once, no shuffle, no broadcast assumption
+    # (BENCH.md r9 soak, 1M pages: 91 s vs the anti-join's 172 s).
 
     def _files_by_bucket(self) -> dict[int, list[str]]:
         files = self.table.current_files()
@@ -222,7 +230,6 @@ def _crawl_stages(pages: DataFrame, robots: DataFrame,
                   agent: str, oracle_safe: bool,
                   sitemaps: DataFrame | None = None,
                   respect_meta_robots: bool = False,
-                  broadcast_candidates: bool = False,
                   stage_wrap=None):
     """The shared stage DAG: (links, candidates, unseen, allowed,
     schedule). One construction used by both ``crawl_cycle`` (the
@@ -267,43 +274,16 @@ def _crawl_stages(pages: DataFrame, robots: DataFrame,
             # bucketed storage-partitioned membership (r8 VERDICT #4):
             # candidates shuffle once on the bucket key; the store is
             # opened per-bucket inside the tasks — zero store-side scan
-            # or exchange, no candidates-≪-store assumption. The
-            # third membership plan next to the default anti-join
-            # (discovery crawls) and broadcast_candidates (steady-state
-            # recrawl).
+            # or exchange, no candidates-≪-store assumption
             unseen = seen_fps.probe_unseen(keyed, fp_col="_fp") \
                              .drop("_fp")
-        elif broadcast_candidates:
-            # incremental-crawl shape (candidates ≪ store): the store
-            # NEVER crosses an exchange. Pass 1: store ⋉ broadcast(cand
-            # fps) → the seen subset of the candidates (≤ |cand| rows,
-            # computed inside the store's scan partitions). Pass 2:
-            # cand ⟕anti broadcast(seen subset). Two broadcast joins,
-            # zero shuffle — vs the default anti-join, which shuffles
-            # the WHOLE store on fp (measured ~store-size shuffle per
-            # cycle at 1M; prohibitive at a 10^12-row store). Do NOT
-            # use when candidates rival the store (wide discovery
-            # crawls): the candidate broadcast would OOM the executors.
-            # no distinct: cand is already url-distinct, so the fps are
-            # distinct too (hash of a distinct key) — a distinct here
-            # would add the plan's ONLY exchange for nothing
-            cand_fps = keyed.select(F.col("_fp").alias("fp"))
-            seen_sub = seen_fps.select("fp").join(
-                F.broadcast(cand_fps), "fp", "left_semi")
-            unseen = (keyed.join(F.broadcast(seen_sub),
-                                 keyed["_fp"] == F.col("fp"), "left_anti")
-                      .drop("_fp"))
         else:
             unseen = (keyed.join(seen_fps.select("fp"),
                                  keyed["_fp"] == F.col("fp"), "left_anti")
                       .drop("_fp"))
-    # map-flavored verdict: one host-keyed equi join against the packed
-    # per-host rule table + per-row array algebra — the candidate set is
-    # never shuffled (robots_allowed's explode+groupBy(url) would
-    # shuffle it twice); semantics pytest-pinned identical
     unseen = wrap("unseen", unseen)
-    rules = robots_rules_by_host(parse_robots_rules(robots, agent=agent))
-    allowed = wrap("allowed", robots_allowed_map(unseen, rules)
+    rules = parse_robots_rules(robots, agent=agent)
+    allowed = wrap("allowed", robots_allowed(unseen, rules)
                    .filter(F.col("allowed")).drop("allowed"))
     sched = schedule_frontier(allowed, dirs,
                               default_delay_ms=default_delay_ms,
@@ -321,7 +301,6 @@ def crawl_cycle(pages: DataFrame, robots: DataFrame,
                 sitemaps: DataFrame | None = None,
                 respect_meta_robots: bool = False,
                 anchor_index_k: int | None = None,
-                broadcast_candidates: bool = False,
                 ) -> DataFrame | tuple[DataFrame, DataFrame]:
     """One crawl cycle: fetched ``pages (url, html)`` + per-host
     ``robots (host, robots_txt)`` + the prior cycles' seen-URL store →
@@ -344,13 +323,10 @@ def crawl_cycle(pages: DataFrame, robots: DataFrame,
     variant was killed here (page_links remains the right shape for
     callers that persist the links table once).
 
-    ``broadcast_candidates=True`` selects the incremental-crawl
-    membership plan: the seen store is probed IN PLACE (store-side
-    left-semi against the broadcast candidate fps, then a broadcast
-    anti-join back) so the store never crosses an exchange — zero
-    shuffle vs ~store-size shuffle for the default anti-join. Use when
-    candidates ≪ store (steady-state recrawl); keep the default for
-    wide discovery crawls where the candidate set itself is huge.
+    ``seen_fps`` picks the membership plan: an ``(fp)`` DataFrame is
+    anti-joined (the store shuffles on fp), a bucketed
+    ``SeenUrlStore`` is probed in place with ``probe_unseen`` (no store
+    scan or exchange; BENCH.md r9 soak, 1M pages: 91 s vs 172 s).
 
     Feed the returned URLs to the fetcher fleet, then
     ``seen_url_fps(fetched).union(seen_fps).distinct()`` is the store
@@ -358,8 +334,7 @@ def crawl_cycle(pages: DataFrame, robots: DataFrame,
     *_, sched = _crawl_stages(
         pages, robots, seen_fps, default_delay_ms, n_workers, agent,
         oracle_safe, sitemaps=sitemaps,
-        respect_meta_robots=respect_meta_robots,
-        broadcast_candidates=broadcast_candidates)
+        respect_meta_robots=respect_meta_robots)
     if anchor_index_k is None:
         return sched
     from ..operators.graph import BASE_PATTERN, anchor_text_index
