@@ -130,6 +130,27 @@ def test_charset_detection():
     assert oracle.detect_charset("é".encode("latin-1")) == "latin-1"
 
 
+def test_information_separators_are_whitespace():
+    """``\\x1c``-``\\x1f`` are whitespace under the policy (``str.split``,
+    ``re``'s ``\\s``), in ASCII text too: an isolated one becomes a space
+    in HTML text and title, PDF text and title, as it already did next to
+    other whitespace."""
+    from wine_label_ocr_spark.fixtures import _make_pdf
+    assert oracle.normalize_ws("a\x1cb") == "a b"
+    assert oracle.normalize_ws("a\x1c b\x1f") == "a b"
+    html = (b"<html><head><title>Cuv\x1fee</title></head><body><p>"
+            + b"word " * 40 + b"Chateau\x1fMargaux\x1c end.</p></body></html>")
+    r = oracle.extract(html, "u")
+    assert r["method"] == "html"
+    assert r["text"].endswith(" word Chateau Margaux end.")
+    assert r["title"] == "Cuv ee"
+    r = oracle.extract(_make_pdf(["first paragraph\x1fof the pdf page"],
+                                 "T\x1fitle"), "u")
+    assert r["method"] == "pdf"
+    assert r["text"] == "first paragraph of the pdf page"
+    assert r["title"] == "T itle"
+
+
 def test_boilerplate_dropped():
     html = (b"<html><head><title>T</title></head><body>"
             b"<nav><ul><li><a href='/'>Home is where the heart is and more</a>"

@@ -105,6 +105,25 @@ def test_minhash_verify_splits_each_text_once(spark):
             assert len(re.findall(rf"split\({side}#", line)) <= 1, line
 
 
+def test_exact_substring_splits_each_text_once(spark):
+    """``exact_substring_spans`` binds each text's tokens with ``let`` in
+    the seed and in the verify: every split is inside the Generate that
+    explodes the positions, once, and the explode does not carry the
+    text. Inlined, each text was split again for every position (the
+    seed hash) and every candidate position (the verify gram)."""
+    from wine_label_ocr_spark.operators.dedupe import exact_substring_spans
+    d = spark.createDataFrame(
+        [(i, f"a b c d e f g h i j k {i % 3}") for i in range(6)],
+        "doc_id bigint, text string")
+    spans = exact_substring_spans(d, min_tokens=4)
+    assert spans.count() > 0  # the fixture reaches the verify
+    lines = [line for line in plan_of(spans).splitlines() if "split(" in line]
+    assert len(lines) >= 2, plan_of(spans)  # the seed and the verify
+    for line in lines:
+        assert "Generate explode(" in line and line.count("split(") == 1, line
+        assert "_t#" not in line.rsplit("[0]", 1)[1], line
+
+
 def test_ivf_seeding_has_no_global_window(spark):
     """r1 VERDICT #4: the IVF seed sample must be a distributed top-k
     (TakeOrderedAndProject), never a row_number over an unpartitioned

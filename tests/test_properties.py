@@ -5,10 +5,13 @@ Pure-Python properties of the frozen kernels; no Spark session needed.
 
 from __future__ import annotations
 
+import html
+import re
+
 import pytest
 from hypothesis import given, settings, strategies as st
 
-from wine_label_ocr_spark import oracle
+from wine_label_ocr_spark import _lexer, oracle
 from wine_label_ocr_spark.operators import similarity as S
 
 text_st = st.text(
@@ -196,6 +199,131 @@ def test_year_patterns_match_plain_forms(pieces):
         assert got == want, (plain, text)
 
 
+# ---------------------------------------------------------------------------
+# HTML lexer: the C extension (oracle.lex_blocks / oracle.normalize_ws) vs
+# the Python lexer it replaced, kept here as the reference
+# ---------------------------------------------------------------------------
+
+# one-probe dispatch table; insertion order gives the precedence
+# skip > a > boiler > block (later writes win). _TAG_RE's name group
+# carries a closing tag's "/" ("/div"), so every name also has a "/name"
+# key mapped to the negated action: the sign of one lookup says whether
+# the tag closes
+_ACT_BLOCK, _ACT_LINK, _ACT_SKIP, _ACT_BOILER = 1, 2, 3, 4
+_TAG_ACTION: dict[str, int] = {}
+_TAG_ACTION.update(dict.fromkeys(_lexer.BLOCK_TAGS, _ACT_BLOCK))
+_TAG_ACTION.update(dict.fromkeys(_lexer.BOILER_CONTAINERS, _ACT_BOILER))
+_TAG_ACTION["a"] = _ACT_LINK
+_TAG_ACTION.update(dict.fromkeys(_lexer.SKIP_CONTAINERS, _ACT_SKIP))
+_TAG_ACTION.update({"/" + t: -a for t, a in _TAG_ACTION.items()})
+
+_WS_RE = re.compile(r"\s+")
+
+# Attribute section: plain-character runs are consumed atomically, a lone
+# / is allowed when it does not close the tag, quotes must close. The
+# run/quote quantifiers are possessive: every character such a unit could
+# give back is in its own excluded class, so backtracking would only
+# re-enumerate run splits, which on an unclosed tag (a truncated page) is
+# exponential. Two capture groups, so re.split yields 3 items per tag
+# (text, name, self-close flag).
+_TAG_RE = re.compile(
+    r"<!--.*?-->|<!\[CDATA\[.*?\]\]>|<!DOCTYPE[^>]*>"
+    r"|<(/?[a-zA-Z][a-zA-Z0-9-]*)"
+    r"(?:[^>\"'/]++|/(?!>)|\"[^\"]*+\"|'[^']*+')*?(/?)>",
+    re.DOTALL,
+)
+
+
+def reference_normalize_ws(s: str) -> str:
+    return _WS_RE.sub(" ", s).strip()
+
+
+def reference_lex_blocks(decoded: str) -> list[dict]:
+    """The Python lexer: ``_TAG_RE.split`` plus the depth state machine."""
+    blocks: list[dict] = []
+    segs: list[tuple[str, bool]] = []  # (raw text, is link text)
+    cur_tag = "body"
+    boiler_depth = skip_depth = link_depth = 0
+    seg_boiler = seg_link = False
+
+    def flush(next_tag: str) -> None:
+        nonlocal seg_boiler, seg_link, cur_tag
+        raw = "".join(t for t, _ in segs)
+        text = reference_normalize_ws(html.unescape(raw))
+        if text:
+            link_chars = sum(len(reference_normalize_ws(html.unescape(t)))
+                             for t, is_link in segs if is_link)
+            blocks.append({
+                "text": text,
+                "n_chars": len(text),
+                "link_chars": min(link_chars, len(text)),
+                "boiler": seg_boiler,
+                "tag": cur_tag,
+                "block_index": len(blocks),
+            })
+        segs.clear()
+        seg_boiler = seg_link = False
+        cur_tag = next_tag
+
+    parts = _TAG_RE.split(decoded)
+    last = len(parts) - 1
+    for idx in range(0, last, 3):
+        pre, name, slash = parts[idx:idx + 3]
+        if pre and skip_depth == 0 and (not pre.isspace() or segs):
+            segs.append((pre, link_depth > 0))
+            if not pre.isspace() and boiler_depth > 0:
+                seg_boiler = True
+            if link_depth > 0:
+                seg_link = True
+        if name is None:
+            continue  # comment / doctype / CDATA
+        action = _TAG_ACTION.get(name.lower())
+        if action is None:
+            continue  # transparent tag (span/b/em/...)
+        tag = name.lower()
+        closing, selfclosed = action < 0, slash == "/"
+        action = abs(action)
+        if action == _ACT_BLOCK:
+            if segs:
+                flush(tag if not closing else cur_tag)
+            elif not closing:
+                cur_tag = tag
+        elif action == _ACT_LINK:
+            if closing:
+                link_depth = max(0, link_depth - 1)
+            elif not selfclosed:
+                link_depth += 1
+        elif action == _ACT_SKIP:
+            if selfclosed:
+                pass
+            elif closing:
+                skip_depth = max(0, skip_depth - 1)
+            else:
+                skip_depth += 1
+            if segs:
+                flush(cur_tag)
+        else:  # _ACT_BOILER
+            if closing:
+                boiler_depth = max(0, boiler_depth - 1)
+            elif not selfclosed:
+                boiler_depth += 1
+            if segs:
+                flush(tag if not closing else cur_tag)
+            elif not closing:
+                cur_tag = tag
+    # trailing text after the last tag (degraded/truncated documents)
+    tail = parts[last]
+    if tail and not tail.isspace() and skip_depth == 0:
+        segs.append((tail, link_depth > 0))
+        if boiler_depth > 0:
+            seg_boiler = True
+        if link_depth > 0:
+            seg_link = True
+    if segs:
+        flush(cur_tag)
+    return blocks
+
+
 # the tag pattern as first written (4 groups: closing slash, name,
 # attributes, self-close slash)
 _PLAIN_TAG_RE = (
@@ -209,9 +337,8 @@ _PLAIN_TAG_RE = (
 def test_tag_split_matches_plain_form(pieces):
     """Same split points, and the 2-group split carries the same closing
     flag, name and self-close flag as the 4-group one."""
-    import re
     doc = "".join(pieces)
-    got = oracle._TAG_RE.split(doc)
+    got = _TAG_RE.split(doc)
     want = re.compile(_PLAIN_TAG_RE, re.DOTALL).split(doc)
     assert got[::3] == want[::5]
     for name, slash, (w1, w2, _, w4) in zip(
@@ -221,6 +348,92 @@ def test_tag_split_matches_plain_form(pieces):
             assert name is None and slash is None
         else:
             assert name == w1 + w2 and slash == w4
+
+
+# every str.isspace() character: re's \s on str patterns is the same set
+_ISSPACE = [chr(c) for c in range(0x110000) if chr(c).isspace()]
+# any code point, astral and lone surrogates (Cs) included
+_any_char = st.characters(exclude_categories=())
+# one name of each action (block, link, skip, boiler, transparent)
+_tag_name = st.sampled_from(["p", "br", "a", "script", "nav", "span"]).flatmap(
+    lambda n: st.sampled_from([n, n.upper(), n.capitalize()]))
+# a tag assembled from parts: closing slash, a name in any case, a name
+# suffix, attribute pieces (quotes, '>' inside quotes, lone '/', '<'), and
+# an end ('' leaves it unclosed)
+_tag_piece = st.builds(
+    lambda c, n, sfx, attrs, end: f"<{c}{n}{sfx}{''.join(attrs)}{end}",
+    st.sampled_from(["", "/"]), _tag_name, st.sampled_from(["", "-x", "1"]),
+    st.lists(st.sampled_from([" ", "x", "=", "'q'", '"q"', "'>'", '"/>"',
+                              "/", " / ", "<", "-", '"', "'"]), max_size=4),
+    st.sampled_from([">", "/>", "", " >"]))
+_markup_piece = st.one_of(
+    _tag_piece,
+    st.sampled_from(
+        [f"<{t}>" for t in sorted(_TAG_ACTION) if t[0] != "/"]
+        + [f"</{t}>" for t in sorted(_TAG_ACTION) if t[0] != "/"]
+        + ["<DIV>", "</Div>", "<A HREF='x'>", "</a >", "<P/>", "<Nav>",
+           "<SCRIPT>", "</script/>", "<br/>", "<hr />", "<span>", "</b>",
+           "<h1-x>", "<a/b>", "<a href=x/>", '<a title="x>y">', "<p a='>'>",
+           '<div data-x="', "<p class='", '"', "'", "/", "/>", "<", ">",
+           "</", "<a", "<!", "<!-- c -->", "<!--", "-->", "<!---->",
+           "<!-->", "--", "<![CDATA[ x ]]>", "<![CDATA[", "]]>",
+           "<!DOCTYPE html>", "<!doctype html>", "<!DOCTYPE", "&amp;",
+           "&nbsp;", "&#10;", "&#x85;", "&#x1F600;", "&#0;", "&", "&am",
+           "p;", "\x00", "\r\n"] + _ISSPACE),
+    st.text(alphabet=st.one_of(_any_char, st.sampled_from(_ISSPACE)),
+            max_size=12),
+)
+
+
+@given(st.lists(_markup_piece, max_size=60))
+@settings(max_examples=600, deadline=None)
+def test_lexer_matches_reference(pieces):
+    doc = "".join(pieces)
+    assert oracle.lex_blocks(doc) == reference_lex_blocks(doc)
+
+
+@given(st.text(alphabet=st.one_of(_any_char, st.sampled_from(_ISSPACE)),
+               max_size=80))
+@settings(max_examples=600, deadline=None)
+def test_normalize_ws_matches_reference(s):
+    assert oracle.normalize_ws(s) == reference_normalize_ws(s) \
+        == " ".join(s.split())
+
+
+def test_lexer_matches_reference_on_tag_pairs():
+    """Every pair of tag forms around text and whitespace: the state
+    machine's transitions, exhaustively. One name per action and one that
+    extends a known name; open, close, self-closing, closing and
+    self-closing, '>' inside a quote, and an unclosed quote."""
+    import itertools
+    forms = [f.format(t=t)
+             for t in ("p", "BR", "a", "Script", "nav", "span", "nav-x")
+             for f in ("<{t}>", "</{t}>", "<{t}/>", "</{t}/>", "<{t} q='>'>",
+                       '<{t} q="x')]
+    for t1, t2 in itertools.product(forms, repeat=2):
+        for pre, mid in itertools.product(("", "x"), (" ", "x")):
+            doc = f"{pre}{t1}{mid}{t2}y<p>z"
+            assert oracle.lex_blocks(doc) == reference_lex_blocks(doc), doc
+
+
+def test_lexer_matches_reference_on_adversarial_documents():
+    """Sizes hypothesis does not reach, and each str kind (1, 2 and 4
+    bytes per character, lone surrogates)."""
+    docs = [
+        '<div a="' + "x" * 1_000_000 + '">after a 1 MB attribute</div>',
+        "<p title='" + "y>" * 500_000 + "'>quoted > runs</p>",
+        "<div>" * 10_000 + "ten thousand deep" + "</div>" * 10_000,
+        "<a href=#>" * 10_000 + "deep link text" + "</a>" * 10_000,
+        "<p>before <!-- never closed <p>kept as text" + " z" * 50_000,
+        "<p>before <![CDATA[ never closed <p>text" + " z" * 50_000,
+        '<p>before <a href="never closed>text' + " z" * 50_000,
+        "<p>nul\x00inside</p><p>\x00</p>",
+        "<p>caf\xe9 &amp; cr\xe8me</p><li>Ā two byte &nbsp; 　</li>",
+        "<p>astral \U0001F600 and  lone \ud800 \udfff</p>",
+        "<P>Mixed <A HREF='#'>Case</A> tags &#x85;x&#10;y</P><!doctype x>",
+    ]
+    for doc in docs:
+        assert oracle.lex_blocks(doc) == reference_lex_blocks(doc), doc[:40]
 
 
 def _plain_scan_literal(data: bytes, start: int) -> tuple[bytes, int]:

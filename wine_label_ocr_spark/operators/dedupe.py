@@ -598,9 +598,10 @@ def exact_substring_spans(df: DataFrame, id_col: str = "doc_id",
     2. duplicated-hash candidates: one narrow groupBy(hash) with
        map-side partial counts, keep count >= 2;
     3. verify: the gram TEXT is re-derived only for candidate positions
-       (duplicated text is a small fraction of a crawl) and grouped by
-       the full gram — 64-bit collisions cannot produce false spans, so
-       the result is exact at any corpus size;
+       (duplicated text is a small fraction of a crawl), collected per
+       document so that each text is split once, and grouped by the full
+       gram — 64-bit collisions cannot produce false spans, so the result
+       is exact at any corpus size;
     4. per-doc interval merge of surviving seed windows [pos, pos+T) —
        an in-row fold after one doc-keyed regroup of bare positions.
 
@@ -612,21 +613,30 @@ def exact_substring_spans(df: DataFrame, id_col: str = "doc_id",
     def gram_at(t: Column, i: Column) -> Column:
         return F.array_join(F.slice(t, i, T), " ")
 
-    nt = F.size(tokens_col(F.col("_t")))
+    # each text is split once (``let``): a column referenced inside a
+    # per-position lambda is evaluated again for every position
+    def seed_hashes(toks: Column) -> Column:
+        nt = F.size(toks)
+        return F.transform(
+            F.when(nt >= T, F.sequence(F.lit(1), nt - F.lit(T - 1)))
+            .otherwise(F.array().cast("array<int>")),
+            lambda i: F.struct(i.alias("pos"), _hash64(
+                gram_at(toks, i), 0, oracle_safe).alias("ghash")))
+
     pos_df = (base.select(
-        "_id", "_t",
-        F.explode(F.when(nt >= T, F.sequence(F.lit(1), nt - F.lit(T - 1)))
-                  .otherwise(F.array().cast("array<int>"))).alias("pos"))
-        .select("_id", "pos",
-                _hash64(gram_at(tokens_col(F.col("_t")), F.col("pos")), 0,
-                        oracle_safe).alias("ghash")))
+        "_id", F.explode(let(tokens_col(F.col("_t")), seed_hashes)).alias("_g"))
+        .select("_id", "_g.pos", "_g.ghash"))
     cand_hashes = (pos_df.groupBy("ghash").agg(F.count(F.lit(1)).alias("c"))
                    .filter(F.col("c") >= 2).select("ghash"))
-    cand = pos_df.join(cand_hashes, "ghash", "left_semi")
+    cand = (pos_df.join(cand_hashes, "ghash", "left_semi")
+            .groupBy("_id").agg(F.collect_list("pos").alias("_ps")))
     cand_txt = (cand.join(base, "_id")
-                .select("_id", "pos",
-                        gram_at(tokens_col(F.col("_t")), F.col("pos"))
-                        .alias("gram")))
+                .select("_id", F.explode(let(
+                    tokens_col(F.col("_t")),
+                    lambda toks: F.transform(F.col("_ps"), lambda p: F.struct(
+                        p.alias("pos"), gram_at(toks, p).alias("gram"))))
+                ).alias("_g"))
+                .select("_id", "_g.pos", "_g.gram"))
     seeds = (cand_txt.withColumn(
                 "_c2", F.count(F.lit(1)).over(W.partitionBy("gram")))
              .filter(F.col("_c2") >= 2).select("_id", "pos"))

@@ -1,6 +1,9 @@
 """Frozen single-document reference extractor (the byte-identity oracle).
 
-Pure Python, zero Spark. This module *defines* correct output: the Spark
+Zero Spark. Python, except the HTML lexer (``lex_blocks``) and
+``normalize_ws``: those are the ``_lexer`` C extension, and the Python
+lexer it replaced is the reference in ``tests/test_properties.py``.
+This module *defines* correct output: the Spark
 pipeline's per-url extracted ``text`` must be byte-identical to
 ``extract(html, url)["text"]``. It plays the role the reference's golden
 JSONL files play (``/root/reference/wine_database.jsonl:1-5``,
@@ -48,6 +51,8 @@ import re
 from collections.abc import Iterator
 from typing import Any
 
+from . import _lexer
+
 # --------------------------------------------------------------------------
 # Constants (the analog of the reference's gate thresholds, hybrid.py:196-218
 # and the 0.4/0.3/0.3 score weights of hybrid.py:131).
@@ -59,30 +64,6 @@ SCORE_THRESHOLD = 0.55        # analog of decision threshold (BlobSimilarity.py:
 W_SIZE, W_LINK, W_DENSITY = 0.4, 0.3, 0.3   # hybrid.py:131 weights
 SIZE_NORM_CHARS = 200.0
 YEAR_MIN, YEAR_MAX = 1900, 2030   # final_run_ocr.py:161 range check
-
-# Containers whose content is never main text (readability convention; the
-# analog of the reference ignoring non-"bottle" classes,
-# Char_Count_TurnTable.py:104-106).
-BOILER_CONTAINERS = frozenset({"nav", "header", "footer", "aside"})
-SKIP_CONTAINERS = frozenset({"script", "style", "head", "noscript", "template"})
-BLOCK_TAGS = frozenset({
-    "p", "div", "h1", "h2", "h3", "h4", "h5", "h6", "li", "td", "th",
-    "article", "section", "main", "blockquote", "pre", "table", "ul", "ol",
-    "tr", "br", "hr", "title", "body", "html", "figcaption", "dd", "dt",
-})
-
-# one-probe dispatch table for the lexer hot loop; insertion order gives
-# the original precedence skip > a > boiler > block (later writes win).
-# _TAG_RE's name group carries a closing tag's "/" ("/div"), so every name
-# also has a "/name" key mapped to the negated action: the sign of one
-# lookup says whether the tag closes
-_ACT_BLOCK, _ACT_LINK, _ACT_SKIP, _ACT_BOILER = 1, 2, 3, 4
-_TAG_ACTION: dict[str, int] = {}
-_TAG_ACTION.update(dict.fromkeys(BLOCK_TAGS, _ACT_BLOCK))
-_TAG_ACTION.update(dict.fromkeys(BOILER_CONTAINERS, _ACT_BOILER))
-_TAG_ACTION["a"] = _ACT_LINK
-_TAG_ACTION.update(dict.fromkeys(SKIP_CONTAINERS, _ACT_SKIP))
-_TAG_ACTION.update({"/" + t: -a for t, a in _TAG_ACTION.items()})
 
 # Ordered year patterns — the analog of the 4 ordered regex patterns in
 # _extract_year_from_text (final_run_ocr.py:153-185): labeled contexts first,
@@ -112,35 +93,6 @@ YEAR_PATTERNS = (
 
 # Maker charset whitelist — final_run_ocr.py:355 ALLOWED = "A-Z0-9 &'-".
 _MAKER_STRIP_RE = re.compile(r"[^A-Z0-9 &'-]")
-_WS_RE = re.compile(r"\s+")
-
-# Attribute section: plain-char RUNS are consumed atomically
-# ([^>"'/]++, with a lone / allowed when not closing the tag) instead of
-# one char per lazy iteration — same match set (the tag still ends at the
-# first unquoted > or />; fuzz + 3000-doc corpus verified span+group
-# equality), ~1.24x faster on attribute-heavy markup.
-#
-# The run/quote quantifiers MUST be possessive (++/*+): every character
-# such a unit could give back is in its own excluded class, so the token
-# required after a give-back (closing quote, '/', '>', or another
-# branch's first char) can never match there — backtracking only
-# re-enumerates run SPLITS, which on an unclosed tag (a truncated page —
-# routine in a crawl) is exponential: `<a ` + 40 plain chars and no `>`
-# ran for minutes before r9 made these possessive (hypothesis found it;
-# regression test pins the timing). Residual worst case is the unavoidable
-# scan-to-failure per unclosed tag open: linear per open, quadratic only
-# on degenerate all-`<a ` documents.
-#
-# Two capture groups, so re.split yields 3 items per tag (text, name,
-# self-close flag) instead of 5: the name group holds a closing tag's "/"
-# ("/div", looked up directly in _TAG_ACTION) and the attribute section
-# is not captured (nothing reads it).
-_TAG_RE = re.compile(
-    r"<!--.*?-->|<!\[CDATA\[.*?\]\]>|<!DOCTYPE[^>]*>"
-    r"|<(/?[a-zA-Z][a-zA-Z0-9-]*)"
-    r"(?:[^>\"'/]++|/(?!>)|\"[^\"]*+\"|'[^']*+')*?(/?)>",
-    re.DOTALL,
-)
 _CHARSET_RE = re.compile(rb"charset\s*=\s*[\"']?([A-Za-z0-9_-]+)")
 _TITLE_RE = re.compile(r"(?is)<title[^>]*>(.*?)</title>")
 # E15 — metadata sidecar identity: the first canonical link in the first
@@ -156,8 +108,9 @@ _CANONICAL_RE = re.compile(r'<link\s+rel="canonical"\s+href="([^"]+)"')
 # inflates those with stdlib zlib (output capped — a crawl sees zip
 # bombs) and scans raw regions too, so the uncompressed fixture shape
 # keeps working unchanged. All patterns here use possessive quantifiers
-# (see _TAG_RE) and the paren scanner is a manual linear pass — no
-# backtracking blow-ups on truncated/garbage payloads.
+# (a run that cannot give characters back cannot be re-split on failure)
+# and the paren scanner is a manual linear pass — no backtracking
+# blow-ups on truncated/garbage payloads.
 _PDF_TITLE_RE = re.compile(rb"/Title\s*+(?:\(((?:[^()\\]|\\.)*+)\)|<([0-9A-Fa-f\s]*+)>)")
 _PDF_STREAM_RE = re.compile(rb"stream\r?\n?(.*?)(?:\r\n?|\n)?endstream",
                             re.DOTALL)
@@ -181,22 +134,11 @@ _PDF_TJ_SPACE_KERN = -180.0
 _PDF_MAX_INFLATE = 8_000_000  # per-stream inflate cap (zip-bomb guard)
 
 
-def normalize_ws(s: str) -> str:
-    """Collapse all whitespace runs to single spaces and strip.
-
-    The single canonical whitespace policy shared by oracle and pipeline
-    (risk §7.3.1 of SURVEY.md). Analog of the reference's
-    ``re.sub(r"\\s+", " ", s).strip()`` in final_run_ocr.py:358.
-
-    Fast path: an ascii string with no tabs/newlines/runs is already
-    canonical up to strip — the checks are C-level scans, far cheaper
-    than the regex rebuilding the string around every single space.
-    (Non-ascii goes the slow path: ``\\s`` also matches unicode spaces.)
-    """
-    if (s.isascii() and "  " not in s and "\t" not in s and "\n" not in s
-            and "\r" not in s and "\x0b" not in s and "\x0c" not in s):
-        return s.strip()
-    return _WS_RE.sub(" ", s).strip()
+# The single canonical whitespace policy shared by oracle and pipeline
+# (risk §7.3.1 of SURVEY.md): every whitespace run collapsed to one space,
+# stripped — the reference's ``re.sub(r"\s+", " ", s).strip()``
+# (final_run_ocr.py:358), equal to ``" ".join(s.split())``.
+normalize_ws = _lexer.normalize_ws
 
 
 def normalize_maker(s: str | None) -> str | None:
@@ -536,157 +478,9 @@ def _pdf_paragraphs(payload: bytes) -> list[str]:
     return [p for piece in pieces for p in _pdf_piece_paragraphs(piece)]
 
 
-def lex_blocks(decoded: str) -> list[dict[str, Any]]:
-    """D4 analog — split a decoded HTML document into contiguous text blocks.
-
-    Returns raw blocks with per-block stats, the analog of
-    ``connectedComponentsWithStats`` per-blob stats (hybrid.py:189-227):
-    ``{text, n_chars, link_chars, boiler, tag, block_index}``, in document
-    order; ``block_index`` is the block's position in the returned list.
-    """
-    blocks: list[dict[str, Any]] = []
-    # current block accumulator: list of (raw_text, is_link)
-    segs: list[tuple[str, bool]] = []
-    cur_tag = "body"
-    boiler_depth = 0
-    skip_depth = 0
-    link_depth = 0
-    seg_boiler = False  # whether any seg in current block was under boiler
-    seg_link = False    # whether any seg in current block is link text
-
-    # call sites guard on `segs` so the ~3x-more-common empty flush is a
-    # plain cur_tag assignment, not a function call (profiled: flush was
-    # 25% of kernel time at ~78 calls/doc, most with nothing to flush)
-    unescape = _htmlmod.unescape
-
-    def flush(next_tag: str) -> None:
-        nonlocal seg_boiler, seg_link, cur_tag
-        if len(segs) == 1:
-            # single-seg block — the dominant case (nav/menu items are one
-            # link seg). Skip the join, and when the lone seg is link text
-            # its link_chars equals len(text) by construction (same
-            # unescape+normalize of the same raw seg) — no second pass.
-            raw = segs[0][0]
-            text = normalize_ws(unescape(raw) if "&" in raw else raw)
-            if text:
-                blocks.append({
-                    "text": text,
-                    "n_chars": len(text),
-                    "link_chars": len(text) if seg_link else 0,
-                    "boiler": seg_boiler,
-                    "tag": cur_tag,
-                    "block_index": len(blocks),
-                })
-        else:
-            raw = "".join([t for t, _ in segs])
-            text = normalize_ws(unescape(raw) if "&" in raw else raw)
-            if text:
-                link_chars = 0
-                if seg_link:
-                    for t, is_link in segs:
-                        if is_link:
-                            link_chars += len(normalize_ws(
-                                unescape(t) if "&" in t else t))
-                    link_chars = min(link_chars, len(text))
-                blocks.append({
-                    "text": text,
-                    "n_chars": len(text),
-                    "link_chars": link_chars,
-                    "boiler": seg_boiler,
-                    "tag": cur_tag,
-                    "block_index": len(blocks),
-                })
-        segs.clear()
-        seg_boiler = False
-        seg_link = False
-        cur_tag = next_tag
-
-    # local bindings — the loop runs once per tag over every document;
-    # a single action-dict lookup replaces the 3 set probes + 'a' compare
-    # (boring tags — the majority — now cost ONE dict miss)
-    act_get = _TAG_ACTION.get
-    segs_append = segs.append  # one list object for the whole document
-    # ONE C-level split pass instead of finditer: parts is
-    # [text, name, slash, text, name, ...] — the inter-tag text arrives
-    # as list elements (no match objects, no span()/groups() calls, no
-    # slicing), same match set and groups by construction (re.split
-    # splits on every _TAG_RE match and interleaves its 2 groups)
-    parts = _TAG_RE.split(decoded)
-    last = len(parts) - 1
-    idx = 0
-    while idx < last:
-        pre = parts[idx]
-        name = parts[idx + 1]
-        slash = parts[idx + 2]
-        idx += 3
-        if pre and skip_depth == 0:
-            # not-isspace() ≡ strip() truthiness for non-empty strings,
-            # without allocating the stripped copy
-            if not pre.isspace():
-                segs_append((pre, link_depth > 0))
-                if boiler_depth > 0:
-                    seg_boiler = True
-                if link_depth > 0:
-                    seg_link = True
-            elif segs:
-                segs_append((pre, link_depth > 0))
-                if link_depth > 0:
-                    seg_link = True
-        if name is None:
-            continue  # comment / doctype / CDATA
-        # dispatch keys are lowercase: a direct hit means name IS already
-        # canonical — skips the ~1.5M/20k-doc str.lower() allocations
-        # the all-lowercase markup of real pages was paying
-        action = act_get(name)
-        if action is not None:
-            tag = name
-        else:
-            tag = name.lower()
-            action = act_get(tag)
-            if action is None:
-                continue  # transparent tag (span/b/em/...)
-        closing, selfclosed = action < 0, slash == "/"
-        if closing:
-            action = -action  # tag is "/name", read only when opening
-        if action == _ACT_BLOCK:
-            if segs:
-                flush(tag if not closing else cur_tag)
-            elif not closing:
-                cur_tag = tag
-        elif action == _ACT_LINK:
-            if closing:
-                link_depth = max(0, link_depth - 1)
-            elif not selfclosed:
-                link_depth += 1
-        elif action == _ACT_SKIP:
-            if selfclosed:
-                pass
-            elif closing:
-                skip_depth = max(0, skip_depth - 1)
-            else:
-                skip_depth += 1
-            if segs:
-                flush(cur_tag)
-        else:  # _ACT_BOILER
-            if closing:
-                boiler_depth = max(0, boiler_depth - 1)
-            elif not selfclosed:
-                boiler_depth += 1
-            if segs:
-                flush(tag if not closing else cur_tag)
-            elif not closing:
-                cur_tag = tag
-    # trailing text after the last tag (degraded/truncated documents)
-    tail = parts[last]
-    if tail and not tail.isspace() and skip_depth == 0:
-        segs_append((tail, link_depth > 0))
-        if boiler_depth > 0:
-            seg_boiler = True
-        if link_depth > 0:
-            seg_link = True
-    if segs:
-        flush(cur_tag)
-    return blocks
+# D4 analog, the ``_lexer`` C extension: a decoded HTML document in, its
+# contiguous text blocks with per-block stats out (see its docstring).
+lex_blocks = _lexer.lex_blocks
 
 
 def score_block(n_chars: int, link_density: float, text_density: float) -> float:
