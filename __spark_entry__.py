@@ -262,33 +262,81 @@ def q_extract_pdf_pipeline(spark, sf):
         "text")
 
 
-def _warc_shard_dir(root: str, sf: str, tag: str) -> str:
-    """Cache dir for ``q_warc_extract``'s shards of ``sf`` under ``root``:
-    ``wlos_warc_<md5(sf)[:8]>_<tag>``, so the dirs of one ``sf`` share a
-    prefix and differ only in the content tag."""
+def _shard_dir(root: str, kind: str, sf: str, tag: str) -> str:
+    """Cache dir of the ``kind`` gate's shards (``warc``, ``wat``, ``wet``)
+    of ``sf`` under ``root``: ``wlos_<kind>_<md5(sf)[:8]>_<tag>``, so the
+    dirs of one gate and ``sf`` share a prefix and differ only in the
+    content tag."""
     import os
     sf_key = hashlib.md5(sf.encode()).hexdigest()[:8]
-    return os.path.join(root, f"wlos_warc_{sf_key}_{tag}")
+    return os.path.join(root, f"wlos_{kind}_{sf_key}_{tag}")
 
 
-def _prune_warc_shards(shard_dir: str) -> list[str]:
-    """Remove the published shard dirs of the same ``sf`` with another tag
-    (caches of an older renderer, writer or fixture), after ``shard_dir``
-    was published, and the published dirs of the older naming with no
-    ``sf`` key (``wlos_warc_<tag>``). Staging dirs (``.stage-``) of
-    in-flight runs and the dirs of other ``sf`` values are left alone.
-    Returns the removed names."""
+def _prune_shards(shard_dir: str) -> list[str]:
+    """Remove the published shard dirs of the same gate and ``sf`` with
+    another tag (caches of an older renderer, writer or fixture), after
+    ``shard_dir`` was published, and the gate's published dirs of the
+    older naming with no ``sf`` key (``wlos_<kind>_<tag>``). Staging dirs
+    (``.stage-``) of in-flight runs, the dirs of other ``sf`` values and
+    of other gates are left alone. Returns the removed names."""
     import os
     import re
     import shutil
     root, name = os.path.split(shard_dir)
     prefix = name[:name.rindex("_") + 1]
+    kind = name.split("_")[1]
     stale = [d for d in os.listdir(root) if d != name and (
         d.startswith(prefix) and ".stage-" not in d
-        or re.fullmatch(r"wlos_warc_[0-9a-f]{10}", d))]
+        or re.fullmatch(rf"wlos_{kind}_[0-9a-f]{{10}}", d))]
     for d in stale:
         shutil.rmtree(os.path.join(root, d), ignore_errors=True)
     return stale
+
+
+def _cached_shards(sf: str, kind: str, sources: tuple,
+                   pages: Callable[[], DataFrame],
+                   write: Callable[[DataFrame, str], DataFrame]) -> str:
+    """Dir of the ``kind`` gate's gzip shards of ``sf``, exported on a
+    miss by ``write(pages(), dir)`` (a DISTRIBUTED shard writer over 4
+    url-hashed partitions) under the system temp dir.
+
+    The cache tag covers the parquet fixture's file identity (names,
+    sizes, mtimes) and the source of every object in ``sources`` (the
+    page construction and the writer/reader modules), so an edit to any
+    of them never serves stale shards to the gate that certifies them.
+    A miss exports into a run-private staging dir, then ONE atomic
+    directory rename publishes it — concurrent runs race on the rename,
+    losers discard their staging dir, readers only ever see exactly one
+    complete shard set — and the winner prunes the gate's older caches
+    of the same ``sf`` (``_prune_shards``)."""
+    import inspect
+    import os
+    import shutil
+    import tempfile
+    import uuid
+
+    doc_dir = os.path.join(sf, "documents.parquet")
+    stat = "" if not os.path.isdir(doc_dir) else ";".join(
+        f"{f}:{s.st_size}:{s.st_mtime_ns}" for f, s in sorted(
+            (f, os.stat(os.path.join(doc_dir, f)))
+            for f in os.listdir(doc_dir) if not f.startswith(".")))
+    tag = hashlib.md5((sf + stat + "".join(map(inspect.getsource, sources)))
+                      .encode()).hexdigest()[:10]
+    shard_dir = _shard_dir(tempfile.gettempdir(), kind, sf, tag)
+    if not os.path.isdir(shard_dir):
+        staging = f"{shard_dir}.stage-{uuid.uuid4().hex}"
+        write(pages().repartition(4, F.abs(F.xxhash64("url")) % 4),
+              staging).collect()
+        try:
+            os.rename(staging, shard_dir)
+        except OSError:
+            if os.path.isdir(shard_dir):
+                shutil.rmtree(staging, ignore_errors=True)  # lost the race
+            else:
+                raise  # a real failure (EXDEV/EACCES/ENOSPC), not the race
+        else:
+            _prune_shards(shard_dir)
+    return shard_dir
 
 
 def q_warc_extract(spark, sf):
@@ -299,57 +347,26 @@ def q_warc_extract(spark, sf):
     extraction. The oracle recomputes the expected fields from
     documents directly, so a hash match proves the gzip WARC path is
     byte-faithful end-to-end."""
-    import hashlib as _h
     import os
-    import tempfile
-
-    from wine_label_ocr_spark.fixtures import documents_as_pages
-    from wine_label_ocr_spark.plans.pipeline import extract_records
-    from wine_label_ocr_spark.sources.warc import read_warc, write_warc_shards
-
-    # cache key covers the renderer's source, the WARC writer/reader
-    # module source (a format_warc_record/gzip_member change must not
-    # serve stale shards to the gate that certifies the writer), AND the
-    # parquet fixture's file identity (sizes + mtimes)
-    import inspect
 
     from wine_label_ocr_spark import fixtures as _fx
+    from wine_label_ocr_spark.fixtures import documents_as_pages
+    from wine_label_ocr_spark.plans.pipeline import extract_records
     from wine_label_ocr_spark.sources import warc as _warc_mod
-    doc_dir = os.path.join(sf, "documents.parquet")
-    stat = "" if not os.path.isdir(doc_dir) else ";".join(
-        f"{f}:{s.st_size}:{s.st_mtime_ns}" for f, s in sorted(
-            (f, os.stat(os.path.join(doc_dir, f)))
-            for f in os.listdir(doc_dir) if not f.startswith(".")))
-    tag = _h.md5((sf + stat + inspect.getsource(_fx.render_doc_page)
-                  + inspect.getsource(_fx.documents_as_pages)
-                  + inspect.getsource(_warc_mod))
-                 .encode()).hexdigest()[:10]
-    shard_dir = _warc_shard_dir(tempfile.gettempdir(), sf, tag)
-    if not os.path.isdir(shard_dir):
-        # distributed export into a run-private staging dir, then ONE
-        # atomic directory rename publishes it — concurrent runs race on
-        # the rename, losers discard their staging dir, readers only ever
-        # see exactly one complete shard set
-        import shutil
-        import uuid
-        staging = f"{shard_dir}.stage-{uuid.uuid4().hex}"
-        pages = documents_as_pages(spark, sf).repartition(
-            4, F.abs(F.xxhash64("url")) % 4)
-        # http_envelope=True: response records carry a real HTTP status
-        # line + headers (the Common-Crawl layout) — the reader must strip
-        # the envelope and honor the HTTP Content-Type charset for the
-        # hash to stay green against the envelope-free oracle
-        write_warc_shards(pages, staging, compress=True,
-                          http_envelope=True).collect()
-        try:
-            os.rename(staging, shard_dir)
-        except OSError:
-            if os.path.isdir(shard_dir):
-                shutil.rmtree(staging, ignore_errors=True)  # lost the race
-            else:
-                raise  # a real failure (EXDEV/EACCES/ENOSPC), not the race
-        else:
-            _prune_warc_shards(shard_dir)
+    from wine_label_ocr_spark.sources.warc import read_warc, write_warc_shards
+
+    # the tag covers the renderer's source and the WARC writer/reader
+    # module (a format_warc_record/gzip_member change must not serve
+    # stale shards to the gate that certifies the writer).
+    # http_envelope=True: response records carry a real HTTP status
+    # line + headers (the Common-Crawl layout) — the reader must strip
+    # the envelope and honor the HTTP Content-Type charset for the
+    # hash to stay green against the envelope-free oracle
+    shard_dir = _cached_shards(
+        sf, "warc", (_fx.render_doc_page, _fx.documents_as_pages, _warc_mod),
+        lambda: documents_as_pages(spark, sf),
+        lambda p, d: write_warc_shards(p, d, compress=True,
+                                       http_envelope=True))
     pages = read_warc(spark, os.path.join(shard_dir, "*.warc.gz"))
     rec = extract_records(pages)
     return rec.select(
@@ -1121,15 +1138,11 @@ def q_wat_sidecar(spark, sf):  # warc: WAT metadata export, end-to-end
     envelope fields with get_json_object. Field-level projection (not
     raw-JSON hashing) sidesteps key-order parity; the oracle states
     title/link-count/header-echo closed-form from doc_id."""
-    import hashlib as _h
     import os
-    import tempfile
 
-    from wine_label_ocr_spark.sources.warc import read_warc, write_wat_shards
-
-    import inspect
-
+    from wine_label_ocr_spark.operators import graph as _graph_mod
     from wine_label_ocr_spark.sources import warc as _warc_mod
+    from wine_label_ocr_spark.sources.warc import read_warc, write_wat_shards
 
     def pages_df():
         d = _t(spark, sf, "documents").select("doc_id")
@@ -1155,36 +1168,13 @@ def q_wat_sidecar(spark, sf):  # warc: WAT metadata export, end-to-end
              .cast("binary").alias("html"),
             F.lit(None).cast("string").alias("lang"))
 
-    doc_dir = os.path.join(sf, "documents.parquet")
-    stat = "" if not os.path.isdir(doc_dir) else ";".join(
-        f"{f}:{s.st_size}:{s.st_mtime_ns}" for f, s in sorted(
-            (f, os.stat(os.path.join(doc_dir, f)))
-            for f in os.listdir(doc_dir) if not f.startswith(".")))
-    from wine_label_ocr_spark.operators import graph as _graph_mod
-
     # the tag covers the planted-page construction (this function's own
     # source) AND graph.py (href_values/HREF_PATTERN — the link
     # extraction build_wat_records shares) — editing either must never
     # serve stale shards
-    tag = _h.md5((sf + stat + inspect.getsource(_warc_mod)
-                  + inspect.getsource(_graph_mod)
-                  + inspect.getsource(q_wat_sidecar))
-                 .encode()).hexdigest()[:10]
-    shard_dir = os.path.join(tempfile.gettempdir(), f"wlos_wat_{tag}")
-    if not os.path.isdir(shard_dir):
-        import shutil
-        import uuid
-        staging = f"{shard_dir}.stage-{uuid.uuid4().hex}"
-        write_wat_shards(pages_df().repartition(
-            4, F.abs(F.xxhash64("url")) % 4), staging,
-            compress=True).collect()
-        try:
-            os.rename(staging, shard_dir)
-        except OSError:
-            if os.path.isdir(shard_dir):
-                shutil.rmtree(staging, ignore_errors=True)  # lost the race
-            else:
-                raise
+    shard_dir = _cached_shards(
+        sf, "wat", (_warc_mod, _graph_mod, q_wat_sidecar), pages_df,
+        lambda p, d: write_wat_shards(p, d, compress=True))
     wat = read_warc(spark, os.path.join(shard_dir, "*.warc.gz"),
                     record_types=("metadata",))
     j = F.col("html").cast("string")
@@ -2855,14 +2845,10 @@ def q_wet_roundtrip(spark, sf):  # warc: WET conversion export, end-to-end
     plain text per shape closed-form from doc_id — the whole
     write-parse-read loop must be byte-faithful for the hash to
     match. Completes the WARC/WAT/WET Common-Crawl triad gate set."""
-    import hashlib as _h
     import os
-    import tempfile
 
     from wine_label_ocr_spark.sources import warc as _warc_mod
     from wine_label_ocr_spark.sources.warc import read_warc, write_wet_shards
-
-    import inspect
 
     def pages_df():
         d = _t(spark, sf, "documents").select("doc_id")
@@ -2889,29 +2875,9 @@ def q_wet_roundtrip(spark, sf):  # warc: WET conversion export, end-to-end
              .alias("warc_ts"),
             html.cast("binary").alias("html"))
 
-    doc_dir = os.path.join(sf, "documents.parquet")
-    stat = "" if not os.path.isdir(doc_dir) else ";".join(
-        f"{f}:{s.st_size}:{s.st_mtime_ns}" for f, s in sorted(
-            (f, os.stat(os.path.join(doc_dir, f)))
-            for f in os.listdir(doc_dir) if not f.startswith(".")))
-    tag = _h.md5((sf + stat + inspect.getsource(_warc_mod)
-                  + inspect.getsource(q_wet_roundtrip))
-                 .encode()).hexdigest()[:10]
-    shard_dir = os.path.join(tempfile.gettempdir(), f"wlos_wet_{tag}")
-    if not os.path.isdir(shard_dir):
-        import shutil
-        import uuid
-        staging = f"{shard_dir}.stage-{uuid.uuid4().hex}"
-        write_wet_shards(pages_df().repartition(
-            4, F.abs(F.xxhash64("url")) % 4), staging,
-            compress=True).collect()
-        try:
-            os.rename(staging, shard_dir)
-        except OSError:
-            if os.path.isdir(shard_dir):
-                shutil.rmtree(staging, ignore_errors=True)  # lost the race
-            else:
-                raise
+    shard_dir = _cached_shards(
+        sf, "wet", (_warc_mod, q_wet_roundtrip), pages_df,
+        lambda p, d: write_wet_shards(p, d, compress=True))
     wet = read_warc(spark, os.path.join(shard_dir, "*.warc.gz"),
                     record_types=("conversion",))
     return wet.select(

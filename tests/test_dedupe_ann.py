@@ -236,6 +236,71 @@ def test_embedding_near_dup_hot_bucket_guard(spark, emb):
     assert len([r for r in unguarded if r["id_a"] < 1000]) == 30 * 29 // 2
 
 
+def _banded_pairs(spark, name, ids, max_bucket=200):
+    """Rows of the banded near-dup operator ``name`` over one document per
+    entry of ``ids`` (an id, or ``(id, None)`` for a row whose content is
+    NULL): every other row carries the same content, so they share every
+    bucket."""
+    from wine_label_ocr_spark.operators import multimodal
+    rows = [(i[0], False) if isinstance(i, tuple) else (i, True) for i in ids]
+    if name == "embedding_near_dup":
+        vecs = spark.createDataFrame(
+            [(i, [1.0] * 8 if c else None) for i, c in rows],
+            "vec_id bigint, embedding array<double>")
+        return ann.embedding_near_dup(vecs, dim=8, max_bucket=max_bucket)
+    if name == "image_near_dup":
+        hashes = spark.createDataFrame(
+            [(None if i is None else str(i), 0x0F0F0F0F0F0F0F0F if c else None)
+             for i, c in rows], "url string, dhash bigint")
+        return multimodal.image_near_dup(hashes, max_bucket=max_bucket)
+    docs = spark.createDataFrame([(i, BASE if c else None) for i, c in rows],
+                                 "doc_id bigint, text string")
+    if name == "duplicate_passages":
+        return dedupe.duplicate_passages(docs, min_shared=1,
+                                         max_bucket=max_bucket)
+    return getattr(dedupe, name)(docs, max_bucket=max_bucket)
+
+
+@pytest.mark.parametrize("name", [
+    "minhash_lsh_pairs", "simhash_pairs", "duplicate_passages",
+    "embedding_near_dup", "image_near_dup"])
+def test_banded_pairs_edge_cases(spark, name):
+    """The bucket-pair builder every banded operator shares: a repeated id
+    never pairs with itself, NULL ids and NULL-content rows never pair,
+    NULL ids do not count toward the cap, and a bucket of exactly
+    ``max_bucket`` rows is kept while ``max_bucket + 1`` is dropped."""
+    def pairs(ids, max_bucket=200):
+        return [(int(r["id_a"]), int(r["id_b"]))
+                for r in _banded_pairs(spark, name, ids, max_bucket).collect()]
+
+    assert set(pairs([1, 1, 2, None, (3, None)])) == {(1, 2)}
+    if name == "duplicate_passages":
+        # one row per shared fingerprint bucket is counted, not per row
+        n_fps = dedupe.winnow_fingerprints(spark.createDataFrame(
+            [(1, BASE)], "doc_id bigint, text string")).count()
+        got = _banded_pairs(spark, name, [1, 1, 2]).collect()
+        assert [r["shared_fps"] for r in got] == [n_fps]
+    full = [1, 2, 3, 4, None, None]
+    assert sorted(set(pairs(full, max_bucket=4))) == [
+        (a, b) for a in range(1, 5) for b in range(a + 1, 5)]
+    assert pairs([1, 2, 3, 4, 5], max_bucket=4) == []
+
+
+def test_bucket_pairs_multiplicity_and_null_keys(spark):
+    """``_bucket_pairs`` emits one row per shared bucket and per pair of
+    positions with ``id_a < id_b`` (the multiplicity of the bucket
+    self-join it replaced), drops NULL keys and NULL ids before the cap,
+    and carries the named column of both sides."""
+    buck = spark.createDataFrame(
+        [(1, 0, "x"), (1, 0, "y"), (2, 0, "z"), (None, 0, "n"),
+         (1, 1, "x"), (2, 1, "z"), (3, None, "k"), (4, None, "k")],
+        "_id bigint, key int, c string")
+    got = sorted(tuple(r) for r in dedupe._bucket_pairs(
+        buck, ["key"], max_bucket=3, carry="c").collect())
+    assert got == [(1, 2, "x", "z"), (1, 2, "x", "z"), (1, 2, "y", "z")]
+    assert dedupe._bucket_pairs(buck, ["key"], max_bucket=2).count() == 1
+
+
 def test_ivf_index_prunes_partitions(spark, emb, tmp_path):
     """The written IVF layout must prove its point: a query scan reads only
     the probed cells' files (partition pruning), and results match the
@@ -2119,7 +2184,7 @@ def test_webp_meta_prefix_codes():
 @pytest.mark.parametrize("name", [
     "minhash_lsh", "near_dup_components", "simhash_fingerprints",
     "simhash_pairs", "incremental_dedup", "curation_funnel",
-    "decontamination"])
+    "decontamination", "duplicate_passages", "embedding_near_dup"])
 def test_dedup_gate_matches_oracle(oracle_gate, name):
     sdf = oracle_gate(name)
     if name in ("minhash_lsh", "simhash_fingerprints"):

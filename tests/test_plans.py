@@ -86,9 +86,12 @@ def test_minhash_shuffles_narrow_rows(spark):
 
 def test_minhash_verify_splits_each_text_once(spark):
     """The Jaccard verify binds each side's tokens and shingles with
-    ``let``: its Project splits ``_ta`` and ``_tb`` once each. Inlined,
-    each text was split 8× per evaluation, one of them inside the
-    per-position lambda (once per shingle)."""
+    ``let``: the one plan line that holds it splits ``_ta`` and ``_tb``
+    once each. Inlined, each text was split 8× per evaluation, one of
+    them inside the per-position lambda (once per shingle). The
+    threshold filter sits above the Generate that yields the Jaccard, so
+    it is not pushed into the join condition, where every candidate pair
+    evaluated the Jaccard a second time."""
     import re
 
     from wine_label_ocr_spark.operators.dedupe import minhash_lsh_pairs
@@ -97,12 +100,14 @@ def test_minhash_verify_splits_each_text_once(spark):
          for i in range(12)], "doc_id bigint, text string")
     pairs = minhash_lsh_pairs(d, n_perm=8, n_bands=2)
     assert pairs.count() > 0  # the fixture reaches the verify
-    verify = [line for line in plan_of(pairs).splitlines()
-              if "Project [" in line and " AS jaccard#" in line]
-    assert verify, plan_of(pairs)
-    for line in verify:
-        for side in ("_ta", "_tb"):
-            assert len(re.findall(rf"split\({side}#", line)) <= 1, line
+    plan = plan_of(pairs)
+    verify = [line for line in plan.splitlines() if "split(_t" in line]
+    assert len(verify) == 1, plan  # the Jaccard is evaluated in one place
+    for side in ("_ta", "_tb"):
+        assert len(re.findall(rf"split\({side}#", verify[0])) == 1, verify[0]
+    for line in plan.splitlines():
+        if "BroadcastHashJoin" in line:
+            assert "split(" not in line, line
 
 
 def test_exact_substring_splits_each_text_once(spark):
@@ -163,14 +168,57 @@ def test_rp_lsh_multi_probe_explodes_query_side_only(spark):
         "corpus side must not explode with probe count"
 
 
-def test_embedding_near_dup_has_bucket_guard(spark):
-    """The hot-bucket cap must materialize as a Window count over _bucket
-    BEFORE the self-join (r2 VERDICT #1)."""
-    from wine_label_ocr_spark.operators.ann import embedding_near_dup
-    e = spark.read.parquet(f"{SF}/embeddings.parquet")
-    plan = plan_of(embedding_near_dup(e, dim=64, n_planes=6))
-    assert "Window" in plan, plan
-    assert "count(1)" in plan and "_bucket" in plan, plan
+def _banded(spark, name):
+    """(DataFrame, bucket key columns, max_bucket) of a banded near-dup
+    operator over small inputs."""
+    from wine_label_ocr_spark.operators import ann, dedupe, multimodal
+    d = spark.read.parquet(f"{SF}/documents.parquet")
+    if name == "minhash_lsh_pairs":
+        return dedupe.minhash_lsh_pairs(d), ["band", "band_hash"], 200
+    if name == "simhash_pairs":
+        return dedupe.simhash_pairs(d), ["band", "bits"], 2000
+    if name == "duplicate_passages":
+        return dedupe.duplicate_passages(d), ["fp"], 200
+    if name == "embedding_near_dup":
+        e = spark.read.parquet(f"{SF}/embeddings.parquet")
+        return ann.embedding_near_dup(e, dim=64, n_planes=6), ["_bucket"], 200
+    h = spark.createDataFrame([("a", 1), ("b", 3)], "url string, dhash bigint")
+    return multimodal.image_near_dup(h), ["band", "bits"], 200
+
+
+@pytest.mark.parametrize("name", [
+    "minhash_lsh_pairs", "simhash_pairs", "duplicate_passages",
+    "embedding_near_dup", "image_near_dup"])
+def test_banded_pairs_have_bucket_guard(spark, name):
+    """Every banded near-dup operator pairs through ``_bucket_pairs``:
+    the hot-bucket cap is the ``count(1)`` of the aggregation on the
+    bucket key, filtered to ``2 <= n <= max_bucket`` before the Generate
+    that emits the pairs (r2 VERDICT #1's guard); the bucket key is
+    shuffled once, and there is no Window and no join on the key (the
+    former count-over-window + bucket self-join shape)."""
+    import re
+
+    df, keys, max_bucket = _banded(spark, name)
+    plan = plan_of(df)
+    lines = plan.splitlines()
+    key_list = ", ".join(rf"{k}#\d+L?" for k in keys)
+    agg = [i for i, ln in enumerate(lines) if re.search(
+        rf"HashAggregate\(keys=\[{key_list}\], functions=\[.*[^_]count\(1\)",
+        ln)]
+    assert len(agg) == 1, plan
+    cap = [i for i, ln in enumerate(lines) if re.search(
+        rf"Filter \(\(_n#\d+L >= 2\) AND \(_n#\d+L <= {max_bucket}\)\)", ln)]
+    gen = [i for i, ln in enumerate(lines)
+           if "Generate inline(" in ln and "_rows#" in ln]
+    # a plan prints each node above its child
+    assert len(cap) == 1 and len(gen) == 1 and gen[0] < cap[0] < agg[0], plan
+    exchanges = [ln for ln in lines if re.search(
+        rf"Exchange hashpartitioning\({key_list}, \d+\)", ln)]
+    assert len(exchanges) == 1, plan
+    assert "Window" not in plan, plan
+    for ln in lines:
+        if "Join" in ln:
+            assert not any(f"{k}#" in ln for k in keys), ln
 
 
 def test_decontamination_broadcasts_benchmark_grams(spark):

@@ -295,27 +295,32 @@ def test_wat_sidecar_roundtrip(spark, tmp_path):
 
 
 def test_warc_gate_shard_dirs_pruned_per_sf(tmp_path):
-    """The warc_extract gate names its shard cache per sf and, after
-    publishing a new one, removes the same sf's other tags and the
-    published dirs of the older naming with no sf key: other sf values
-    and in-flight staging dirs stay."""
+    """The WARC, WAT and WET gates name their shard caches per gate and
+    sf and, after publishing a new one, remove the same gate's and sf's
+    other tags and the gate's published dirs of the older naming with no
+    sf key: other sf values, other gates and in-flight staging dirs
+    stay."""
     import os
 
     import __spark_entry__ as E
 
-    def shard_dir(sf, tag):
-        return E._warc_shard_dir(str(tmp_path), sf, tag)
-
-    new = shard_dir("/data/sf0.01", "bbbbbbbbbb")
-    old = shard_dir("/data/sf0.01", "aaaaaaaaaa")
-    other_sf = shard_dir("/data/sf0.001", "aaaaaaaaaa")
-    staging = old + ".stage-0123"
-    legacy = str(tmp_path / "wlos_warc_cccccccccc")
-    legacy_staging = legacy + ".stage-4567"
-    for d in (new, old, other_sf, staging, legacy, legacy_staging):
-        os.mkdir(d)
-        open(os.path.join(d, "part-0.warc.gz"), "wb").close()
-    assert sorted(E._prune_warc_shards(new)) == sorted(
-        os.path.basename(d) for d in (old, legacy))
-    assert sorted(os.listdir(tmp_path)) == sorted(
-        os.path.basename(d) for d in (new, other_sf, staging, legacy_staging))
+    kept = set()
+    for kind in ("warc", "wat", "wet"):
+        new = E._shard_dir(str(tmp_path), kind, "/data/sf0.01", "bbbbbbbbbb")
+        old = E._shard_dir(str(tmp_path), kind, "/data/sf0.01", "aaaaaaaaaa")
+        other_sf = E._shard_dir(str(tmp_path), kind, "/data/sf0.001",
+                                "aaaaaaaaaa")
+        staging = old + ".stage-0123"
+        legacy = str(tmp_path / f"wlos_{kind}_cccccccccc")
+        legacy_staging = legacy + ".stage-4567"
+        for d in (new, old, other_sf, staging, legacy, legacy_staging):
+            os.mkdir(d)
+            open(os.path.join(d, "part-0.warc.gz"), "wb").close()
+        before = set(os.listdir(tmp_path))
+        assert sorted(E._prune_shards(new)) == sorted(
+            os.path.basename(d) for d in (old, legacy))
+        assert before - set(os.listdir(tmp_path)) == {
+            os.path.basename(d) for d in (old, legacy)}
+        kept |= {os.path.basename(d)
+                 for d in (new, other_sf, staging, legacy_staging)}
+    assert sorted(os.listdir(tmp_path)) == sorted(kept)

@@ -82,7 +82,9 @@ def main(names: list[str]) -> None:
          "candidate pairs only. One aggregation per bucket drops oversized "
          "buckets (the max_bucket skew guard) and emits the id pairs. The "
          "verify binds each side's tokens and shingles with `let`: one "
-         "split per text per evaluation (pinned).",
+         "split per text per evaluation, in the one Generate that yields "
+         "the Jaccard; the threshold filter sits above it, out of the "
+         "join condition (pinned).",
          minhash_lsh_pairs(docs, n_perm=8, n_bands=2, oracle_safe=False)),
         ("fuzzy_blocked_join — bounded blocks, explicit co-partitioning",
          "Window count = block-size skew guard (oversized blocks dropped, "
@@ -132,10 +134,12 @@ def main(names: list[str]) -> None:
          __import__("wine_label_ocr_spark.operators.ann",
                     fromlist=["rp_lsh_topk"]).rp_lsh_topk(
              q, emb, dim=64, k=3, n_planes=6, n_probes=3)),
-        ("embedding_near_dup — guarded bucket self-join",
-         "Window count over _bucket = the max_bucket hot-bucket guard "
-         "(quadratic-on-skew closed, r2 VERDICT #1) applied BEFORE the "
-         "self-join; same shape as minhash's band guard.",
+        ("embedding_near_dup — guarded bucket aggregation",
+         "One exchange on _bucket; the aggregation's count(1) is the "
+         "max_bucket hot-bucket guard (quadratic-on-skew closed, r2 "
+         "VERDICT #1), applied BEFORE the Generate that emits the pairs. "
+         "No Window, no self-join: the `_bucket_pairs` shape every banded "
+         "near-dup operator shares (pinned).",
          __import__("wine_label_ocr_spark.operators.ann",
                     fromlist=["embedding_near_dup"]).embedding_near_dup(
              emb, dim=64, n_planes=6)),

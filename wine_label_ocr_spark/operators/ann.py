@@ -817,19 +817,18 @@ def embedding_near_dup(corpus: DataFrame, dim: int, min_cosine: float = 0.95,
     """Near-duplicate vector pairs: one shuffle on the LSH bucket, pairwise
     cosine only within buckets (embedding-cosine dedup for training data).
 
-    ``max_bucket`` is the hot-bucket skew guard (same shape as
-    ``dedupe.minhash_lsh_pairs``): the near-dup regime is exactly when a
-    cluster of m near-identical embeddings lands in ONE bucket and the
-    self-join costs m² — buckets above the cap are dropped before the
-    join, bounding every bucket's pair count at max_bucket²/2."""
+    The pairs come from ``dedupe._bucket_pairs``, the builder of every
+    banded near-dup operator, with its ``max_bucket`` hot-bucket skew
+    guard: the near-dup regime is exactly when a cluster of m
+    near-identical embeddings lands in ONE bucket and costs m² pairs —
+    buckets above the cap are dropped before any pair is emitted,
+    bounding every bucket's pair count at max_bucket²/2."""
+    from .dedupe import _bucket_pairs
+
     planes = _hyperplanes(n_planes, dim, seed)
     c = corpus.select(F.col(c_id).alias("_id"), F.col(c_vec).alias("_v"),
                       rp_signature(F.col(c_vec), planes).alias("_bucket"))
-    c = (c.withColumn("_bn", F.count("*").over(W.partitionBy("_bucket")))
-         .filter(F.col("_bn") <= max_bucket).drop("_bn"))
-    a, b = c.alias("a"), c.alias("b")
-    return (a.join(b, (F.col("a._bucket") == F.col("b._bucket"))
-                   & (F.col("a._id") < F.col("b._id")))
-            .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"),
-                    F.round(cosine(F.col("a._v"), F.col("b._v")), 6).alias("cosine"))
+    return (_bucket_pairs(c, ["_bucket"], max_bucket, carry="_v")
+            .select("id_a", "id_b", F.round(cosine(
+                F.col("_v_a"), F.col("_v_b")), 6).alias("cosine"))
             .filter(F.col("cosine") >= min_cosine))

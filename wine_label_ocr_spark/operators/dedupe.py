@@ -12,7 +12,7 @@ The reference dedups via exact keys then fuzzy similarity
 * **n-gram Jaccard** — exact verification on candidate pairs;
 * **embedding cosine** — see ``operators.ann`` (near-dup via vector space).
 
-Exact keys, winnowing, exact-substring spans and the pair joins are
+Exact keys, winnowing, exact-substring spans and the bucket pairing are
 native ``F.*`` column algebra. The two sketches with per-token work —
 MinHash LSH bands and SimHash — are vectorized Arrow batch kernels
 (``pandas_udf``), one kernel per sketch. Hash functions come in two
@@ -23,9 +23,12 @@ same kernel body the production flavor runs.
 
 Scale notes: signatures never leave the kernel — a doc comes out as
 n_bands 32-hex-char band hashes; the LSH explode multiplies rows by
-n_bands (8-16), all of it shuffled once on (band_idx, band_hash). Hot
-buckets (boilerplate dups) are bounded by ``max_bucket`` to keep the
-pair join from exploding on skew — the explicit skew handling the north
+n_bands (8-16), all of it shuffled once on (band_idx, band_hash). Every
+banded operator (MinHash, SimHash, winnowed passages, ``ann``'s embedding
+LSH, ``multimodal``'s dHash) turns bucket collisions into id pairs with
+one builder, ``_bucket_pairs``: one aggregation per bucket key, no join.
+Hot buckets (boilerplate dups) are bounded by ``max_bucket`` to keep the
+pair count from exploding on skew — the explicit skew handling the north
 rule asks for.
 
 Both sketch kernels and the Jaccard verify are linear in document
@@ -284,6 +287,46 @@ def _minhash_bands(text: Column, k: int, n_perm: int, n_bands: int,
                       "array<string>").asNondeterministic()(text)
 
 
+def _bucket_pairs(buck: DataFrame, keys: list[str], max_bucket: int,
+                  carry: str | None = None) -> DataFrame:
+    """Candidate pairs of the rows of ``buck`` (``_id``, the ``keys``
+    columns and an optional ``carry`` column) that share a bucket — the
+    pair generator of every banded near-dup operator.
+
+    One aggregation per bucket: rows with a NULL id or key never pair
+    (an equi-join never matches them) and are dropped first; a bucket
+    keeps its rows sorted by id and its ``count(1)``, and buckets outside
+    ``2 <= count <= max_bucket`` are dropped (the hot-bucket skew guard:
+    a bucket of m rows costs m²/2 pairs). Every pair of positions i < j
+    with ``id_a < id_b`` is emitted, so there is no self-pair and a pair
+    sharing k buckets gives k rows, the multiplicity of the bucket
+    self-join on ``a._id < b._id`` this replaces — one exchange on the
+    keys, no window and no join.
+
+    Returns ``(id_a, id_b[, <carry>_a, <carry>_b])``.
+    """
+    fields = ["_id"] + ([carry] if carry else [])
+    rows = F.array_sort(F.collect_list(F.struct(*fields))).alias("_rows")
+    for c in ("_id", *keys):
+        buck = buck.filter(F.col(c).isNotNull())
+    grouped = (buck.groupBy(*keys)
+               .agg(rows, F.count(F.lit(1)).alias("_n"))
+               .filter((F.col("_n") >= 2) & (F.col("_n") <= max_bucket)))
+
+    def pair(x: Column, y: Column) -> Column:
+        out = [x["_id"].alias("id_a"), y["_id"].alias("id_b")]
+        if carry:
+            out += [x[carry].alias(f"{carry}_a"), y[carry].alias(f"{carry}_b")]
+        return F.struct(*out)
+
+    r = F.col("_rows")
+    pairs = F.flatten(F.transform(r, lambda x, i: F.transform(
+        F.filter(F.slice(r, i + 2, F.size(r) - (i + 1)),
+                 lambda y: y["_id"] > x["_id"]),
+        lambda y: pair(x, y))))
+    return grouped.select(F.inline(pairs))
+
+
 def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
                       text_col: str = "text", k: int = 3,
                       n_perm: int = 32, n_bands: int = 8,
@@ -293,10 +336,8 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
     """Near-dup candidate pairs via MinHash LSH, verified by exact Jaccard.
 
     Plan shape: band hashes (one Arrow kernel, pure map) → explode bands
-    (×n_bands) → shuffle once on (band, band_hash), one aggregation that
-    drops oversized buckets (boilerplate skew guard) and emits every id
-    pair of a bucket → distinct pairs → exact Jaccard verify on the
-    shingle arrays.
+    (×n_bands) → ``_bucket_pairs`` on (band, band_hash) → distinct pairs
+    → exact Jaccard verify on the shingle arrays.
     """
     # Bands carry ONLY (id, band, band_hash) through the shuffle — the wide
     # shingle arrays stay out of the explode/join entirely (a ~n_bands×
@@ -311,25 +352,7 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
         _minhash_bands(F.col(text_col), k, n_perm, n_bands,
                        oracle_safe).alias("_bh"),
     ).select("_id", F.posexplode("_bh").alias("band", "band_hash"))
-    # Pair generation as ONE aggregation: group each (band, band_hash)
-    # bucket, drop oversized buckets (the same skew guard the former
-    # window count applied), and emit every a<b pair from the sorted id
-    # array. The former shape — window count (exchange + sort) feeding a
-    # bucket self-join (two more exchanges) — becomes a single exchange
-    # on the bucket key with no join (guide §2.4); the candidate set is
-    # identical: all unordered id pairs sharing a surviving bucket.
-    ids = F.array_sort(F.collect_list("_id")).alias("_ids")
-    grouped = (buck.groupBy("band", "band_hash").agg(ids)
-               .filter((F.size("_ids") >= 2) & (F.size("_ids") <= max_bucket)))
-    pair_structs = F.flatten(F.transform(
-        F.col("_ids"),
-        lambda x, i: F.transform(
-            F.slice(F.col("_ids"), i + 2,
-                    F.greatest(F.size("_ids") - (i + 1), F.lit(0))),
-            lambda y: F.struct(x.alias("id_a"), y.alias("id_b")))))
-    pairs = (grouped.select(F.explode(pair_structs).alias("_p"))
-             .select(F.col("_p.id_a").alias("id_a"),
-                     F.col("_p.id_b").alias("id_b"))
+    pairs = (_bucket_pairs(buck, ["band", "band_hash"], max_bucket)
              .dropDuplicates(["id_a", "id_b"]))
     # Verify: re-derive shingles ONLY for rows that appear in a candidate
     # pair. Joining back on the text column (broadcast-small pairs side)
@@ -341,18 +364,20 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
     # it was broadcasting the CORPUS text table instead (guide §3.1 —
     # estimates after aggregates are badly wrong) — wrong at any scale
     # and measured 3× slower at sf1.0 from per-run corpus broadcasts.
-    # The threshold filter is pushed into the join condition: the Jaccard
-    # is evaluated there for every candidate pair and again in the
-    # Project for the pairs that pass, each time splitting each text once
+    # The Jaccard comes out of a one-element explode so that the
+    # threshold filter sits above a Generate: a filter on a projected
+    # column would be pushed into the join condition, which evaluates the
+    # Jaccard a second time for every pair that passes. The one
+    # evaluation splits each text once
     # (tests/test_plans.py::test_minhash_verify_splits_each_text_once).
     txt_a = df.select(F.col(id_col).alias("id_a"), F.col(text_col).alias("_ta"))
     txt_b = df.select(F.col(id_col).alias("id_b"), F.col(text_col).alias("_tb"))
     half = txt_a.join(F.broadcast(pairs), "id_a")  # ≤ |pairs| rows out
+    jac = F.round(jaccard(shingles(F.col("_ta"), k),
+                          shingles(F.col("_tb"), k)), 6)
     return (txt_b.join(F.broadcast(half), "id_b")
-            .withColumn("jaccard", F.round(
-                jaccard(shingles(F.col("_ta"), k), shingles(F.col("_tb"), k)), 6))
-            .filter(F.col("jaccard") >= min_jaccard)
-            .select("id_a", "id_b", "jaccard"))
+            .select("id_a", "id_b", F.explode(F.array(jac)).alias("jaccard"))
+            .filter(F.col("jaccard") >= min_jaccard))
 
 
 def connected_components(pairs: DataFrame, id_a: str = "id_a",
@@ -551,19 +576,15 @@ def duplicate_passages(df: DataFrame, id_col: str = "doc_id",
     different documents (syndicated paragraphs, quoted chunks), which
     whole-document MinHash misses when the rest of the text diverges.
 
-    One shuffle on fp (with the standard ``max_bucket`` hot-fingerprint
-    guard — a boilerplate fp shared by m docs would cost m²), pair join
-    inside fp buckets, per-pair shared-fp count.
+    Fingerprint buckets go through ``_bucket_pairs`` (one shuffle on fp,
+    with the standard ``max_bucket`` hot-fingerprint guard — a
+    boilerplate fp shared by m docs would cost m²); a pair's row count is
+    its shared-fp count.
     """
     fps = winnow_fingerprints(df, id_col, text_col, k, window, oracle_safe) \
         .select(F.col(id_col).alias("_id"), "fp").distinct()
-    sized = fps.withColumn("_bn", F.count("*").over(W.partitionBy("fp")))
-    fps = sized.filter(F.col("_bn") <= max_bucket).drop("_bn")
-    a, b = fps.alias("a"), fps.alias("b")
-    return (a.join(b, (F.col("a.fp") == F.col("b.fp"))
-                   & (F.col("a._id") < F.col("b._id")))
-            .groupBy(F.col("a._id").alias("id_a"),
-                     F.col("b._id").alias("id_b"))
+    return (_bucket_pairs(fps, ["fp"], max_bucket)
+            .groupBy("id_a", "id_b")
             .agg(F.count(F.lit(1)).alias("shared_fps"))
             .filter(F.col("shared_fps") >= min_shared))
 
@@ -837,28 +858,28 @@ def simhash_pairs(df: DataFrame, id_col: str = "doc_id",
     most max_hamming bands, so it MUST collide exactly on at least one —
     full recall, unlike the r1 single-prefix probe that missed pairs
     differing in the top bits. Candidates come from band-bucket collisions
-    (one shuffle on (band, bits)); exact hamming verifies. Oversized
-    buckets are dropped like minhash's skew guard (cost bound; recall caveat
-    applies only to docs inside a dropped bucket).
+    (``_hamming_pairs``); exact hamming verifies. Oversized buckets are
+    dropped like minhash's skew guard (cost bound; recall caveat applies
+    only to docs inside a dropped bucket).
     """
     n_bands = n_bands if n_bands is not None else max_hamming + 1
-    if n_bands > 64:
-        raise ValueError("n_bands must be <= 64")
     s = df.select(F.col(id_col).alias("_id"),
                   simhash64(F.col(text_col), oracle_safe).alias("_sh"))
-    buck = s.select(
-        "_id", "_sh",
-        F.explode(simhash_bands(F.col("_sh"), n_bands)).alias("_b"),
-    ).select("_id", "_sh", F.col("_b.band").alias("band"),
-             F.col("_b.bits").alias("bits"))
-    sized = buck.withColumn(
-        "_bn", F.count("*").over(W.partitionBy("band", "bits")))
-    buck = sized.filter(F.col("_bn") <= max_bucket).drop("_bn")
-    a, b = buck.alias("a"), buck.alias("b")
-    return (a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.bits") == F.col("b.bits"))
-                   & (F.col("a._id") < F.col("b._id")))
-            .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"),
-                    hamming64(F.col("a._sh"), F.col("b._sh")).alias("hamming"))
+    return _hamming_pairs(s, max_hamming, n_bands, max_bucket)
+
+
+def _hamming_pairs(hashed: DataFrame, max_hamming: int, n_bands: int,
+                   max_bucket: int) -> DataFrame:
+    """``(id_a, id_b, hamming)`` of the rows of ``hashed`` (``_id``, a
+    64-bit hash ``_sh``) within ``max_hamming`` bits: candidates share
+    one of ``n_bands`` disjoint bit bands (``_bucket_pairs`` on (band,
+    bits)), each distinct pair is verified by exact ``hamming64``."""
+    if n_bands > 64:
+        raise ValueError("n_bands must be <= 64")
+    buck = hashed.select("_id", "_sh",
+                         F.inline(simhash_bands(F.col("_sh"), n_bands)))
+    return (_bucket_pairs(buck, ["band", "bits"], max_bucket, carry="_sh")
             .dropDuplicates(["id_a", "id_b"])
+            .select("id_a", "id_b",
+                    hamming64(F.col("_sh_a"), F.col("_sh_b")).alias("hamming"))
             .filter(F.col("hamming") <= max_hamming))

@@ -3616,41 +3616,21 @@ def image_near_dup(hashed: DataFrame, id_col: str = "url",
                    hash_col: str = "dhash", max_hamming: int = 4,
                    n_bands: int = 8, max_bucket: int = 200) -> DataFrame:
     """Near-duplicate image pairs from dHashes — the SimHash banded
-    pigeonhole machinery reused verbatim: with ``n_bands`` disjoint bit
-    slices, any pair within ``max_hamming < n_bands`` bits shares at
-    least one identical band (full recall), so candidates come from one
-    narrow (band, bits) equi-join with the hot-bucket guard, then exact
+    pigeonhole pairing (``dedupe._hamming_pairs``): with ``n_bands``
+    disjoint bit slices, any pair within ``max_hamming < n_bands`` bits
+    shares at least one identical band (full recall), so candidates come
+    from one guarded aggregation per (band, bits) bucket, then exact
     ``hamming64`` verification. Never compares across buckets."""
-    from .dedupe import hamming64, simhash_bands
+    from .dedupe import _hamming_pairs
 
     if max_hamming >= n_bands:
         raise ValueError(
             f"max_hamming={max_hamming} >= n_bands={n_bands}: the banded "
             "pigeonhole only guarantees full recall below n_bands differing "
             "bits — raise n_bands (or lower max_hamming)")
-
     base = hashed.filter(F.col(hash_col).isNotNull()).select(
-        F.col(id_col).alias("_id"), F.col(hash_col).alias("_h"))
-    buck = (base.select(
-        "_id", "_h",
-        F.explode(simhash_bands(F.col("_h"), n_bands)).alias("_b"))
-        .select("_id", "_h", F.col("_b.band").alias("band"),
-                F.col("_b.bits").alias("bits")))
-    from pyspark.sql import Window as _W
-    sized = buck.withColumn(
-        "_bn", F.count("*").over(_W.partitionBy("band", "bits")))
-    buck = sized.filter(F.col("_bn") <= max_bucket).drop("_bn")
-    a, b = buck.alias("a"), buck.alias("b")
-    pairs = (a.join(b, (F.col("a.band") == F.col("b.band"))
-                    & (F.col("a.bits") == F.col("b.bits"))
-                    & (F.col("a._id") < F.col("b._id")))
-             .select(F.col("a._id").alias("id_a"),
-                     F.col("b._id").alias("id_b"),
-                     F.col("a._h").alias("_ha"), F.col("b._h").alias("_hb"))
-             .dropDuplicates(["id_a", "id_b"]))
-    return (pairs.withColumn("hamming", hamming64(F.col("_ha"), F.col("_hb")))
-            .filter(F.col("hamming") <= max_hamming)
-            .select("id_a", "id_b", F.col("hamming").cast("int").alias("hamming")))
+        F.col(id_col).alias("_id"), F.col(hash_col).alias("_sh"))
+    return _hamming_pairs(base, max_hamming, n_bands, max_bucket)
 
 
 def frame_sample_plan(df: DataFrame, every_n: int = 2) -> DataFrame:

@@ -49,7 +49,6 @@ DECISION_THRESHOLD = 0.55       # BlobSimilarity.py:107
 TRACKER_THRESHOLD = 0.75        # WineTracker.py:81-82
 
 _PUNCT_RE = re.compile(r"[^a-z0-9 ]+")
-_WS_RE = re.compile(r"\s+")
 
 
 # ---------------------------------------------------------------------------
@@ -70,11 +69,10 @@ def normalize_for_match(s: str | None, strip_stopwords: bool = False) -> str:
     if not s:
         return ""
     s = ascii_fold(s).lower().replace("&", " and ")
-    s = _PUNCT_RE.sub(" ", s)
-    toks = _WS_RE.sub(" ", s).strip().split(" ")
+    toks = _PUNCT_RE.sub(" ", s).split()
     if strip_stopwords:
-        toks = [t for t in toks if t and t not in STOP_WORDS]
-    return " ".join(t for t in toks if t)
+        toks = [t for t in toks if t not in STOP_WORDS]
+    return " ".join(toks)
 
 
 def _normalize_batch(s: pd.Series) -> pd.Series:
