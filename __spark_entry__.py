@@ -686,29 +686,14 @@ def q_training_funnel(spark, sf):
     """The whole training-data funnel composed end-to-end: corpus →
     quality gate → language filter → exact dedup → chunking, with a
     per-stage surviving-count row; the oracle recomputes every stage in
-    SQL. NB the five count branches share subtrees that this union form
-    re-executes — fine for a gate query; a production run would count all
-    stages in ONE pass (observe()/accumulators on the single funnel plan)
-    while writing stage 4's chunks."""
-    from wine_label_ocr_spark.operators.dedupe import exact_dedup
-    from wine_label_ocr_spark.operators.textops import (
-        chunk_documents, quality_gate)
+    SQL. The counts are the Observations of ONE run of the funnel
+    (``plans/funnel.run_funnel_one_pass``, chunks to the noop sink)."""
+    from wine_label_ocr_spark.plans.funnel import run_funnel_one_pass
 
-    d = _t(spark, sf, "documents")
-    s1 = d.filter(quality_gate(F.col("text")))
-    s2 = s1.filter(F.col("lang") == "en")
-    s3 = exact_dedup(s2)
-    s4 = chunk_documents(s3, chunk_tokens=64, overlap=8)
-
-    def stage(n, df):
-        return df.agg(F.count(F.lit(1)).alias("n")).select(
-            F.lit(n).alias("stage"), "n")
-
-    return (stage("0_corpus", d)
-            .unionByName(stage("1_quality", s1))
-            .unionByName(stage("2_lang_en", s2))
-            .unionByName(stage("3_deduped", s3))
-            .unionByName(stage("4_chunks", s4)))
+    counts = run_funnel_one_pass(_t(spark, sf, "documents"))
+    labels = ("0_corpus", "1_quality", "2_lang_en", "3_deduped", "4_chunks")
+    return spark.createDataFrame(list(zip(labels, counts.values())),
+                                 "stage string, n bigint")
 
 
 def q_latest_capture(spark, sf):  # A8/U3 — crawl-scale last-wins per url
@@ -1499,13 +1484,13 @@ def q_curation_funnel(spark, sf):  # plans/curate: capstone survivor counts
     byte-faithful (certified by extract_fields_pipeline), so the oracle
     re-derives every gate from documents.text directly."""
     from wine_label_ocr_spark.fixtures import documents_as_pages
-    from wine_label_ocr_spark.plans.curate import curation_funnel
-    pages = documents_as_pages(spark, sf)
-    return curation_funnel(pages, min_quality=0.3, min_tokens=10,
-                           near_dup_jaccard=0.85, oracle_safe=True).select(
-        F.col("stage_idx").cast("int").alias("stage_idx"),
-        "stage",
-        F.col("n_docs").cast("bigint").alias("n_docs"))
+    from wine_label_ocr_spark.plans.curate import run_curation_funnel
+    counts = run_curation_funnel(documents_as_pages(spark, sf),
+                                 min_quality=0.3, min_tokens=10,
+                                 near_dup_jaccard=0.85, oracle_safe=True)
+    return spark.createDataFrame(
+        [(i, *kv) for i, kv in enumerate(counts.items())],
+        "stage_idx int, stage string, n_docs bigint")
 
 
 def q_url_canon(spark, sf):  # textops.canonical_url: crawl URL dedup key
@@ -2104,10 +2089,12 @@ def q_crawl_cycle_funnel(spark, sf):  # plans/crawl: per-stage survivors
     candidates → unseen → allowed → scheduled), each closed-form in
     doc_id for the oracle; scheduled == allowed pins the scheduler's
     no-drop contract on canonical http(s) URLs."""
-    from wine_label_ocr_spark.plans.crawl import crawl_cycle_funnel
+    from wine_label_ocr_spark.plans.crawl import run_crawl_funnel_one_pass
     pages, robots, seen = _crawl_cycle_inputs(spark, sf)
-    return (crawl_cycle_funnel(pages, robots, seen, oracle_safe=True)
-            .orderBy("stage_idx"))
+    counts = run_crawl_funnel_one_pass(pages, robots, seen, oracle_safe=True)
+    return spark.createDataFrame(
+        [(i, *kv) for i, kv in enumerate(counts.items())],
+        "stage_idx int, stage string, n_urls bigint")
 
 
 def _crawl_sitemap_inputs(spark, sf):

@@ -1,15 +1,13 @@
 from __future__ import annotations
 
-import tempfile
-
 import pytest
 
 
 @pytest.fixture(scope="session")
-def spark():
+def spark(tmp_path_factory):
     from wine_label_ocr_spark.session import get_spark
 
-    wh = tempfile.mkdtemp(prefix="wlos_wh_")
+    wh = str(tmp_path_factory.mktemp("wlos_wh_"))
     s = get_spark(app="tests", master="local[4]", shuffle_partitions=4,
                   extra_conf={"spark.sql.warehouse.dir": wh})
     s.sparkContext.setLogLevel("ERROR")

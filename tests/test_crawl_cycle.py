@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from wine_label_ocr_spark.plans.crawl import (
-    crawl_cycle, crawl_cycle_funnel, seen_url_fps)
+    crawl_cycle, run_crawl_funnel_one_pass, seen_url_fps)
 
 PAGES = [
     # src url, html
@@ -61,8 +61,7 @@ def test_crawl_cycle_composed_contracts(spark):
 
 def test_crawl_cycle_funnel_counts(spark):
     pages, robots, seen = _inputs(spark)
-    got = {r["stage"]: r["n_urls"]
-           for r in crawl_cycle_funnel(pages, robots, seen).collect()}
+    got = run_crawl_funnel_one_pass(pages, robots, seen)
     # 5 + 2 + 2 extracted hrefs minus the fragment-only one
     assert got["outlinks"] == 8
     # distinct canonical: bare, dir/q.html, b.com/x/1, b.com/priv/s,
@@ -73,20 +72,7 @@ def test_crawl_cycle_funnel_counts(spark):
     assert got["scheduled"] == got["allowed"]  # scheduler drops nothing
 
 
-def test_crawl_funnel_one_pass_equals_branch_counts(spark):
-    """The Observation one-pass form (r8 VERDICT #8) counts exactly what
-    the five count branches count — same stage DAG, observed during ONE
-    materialization instead of re-executed per stage."""
-    from wine_label_ocr_spark.plans.crawl import run_crawl_funnel_one_pass
-    pages, robots, seen = _inputs(spark)
-    branches = {r["stage"]: r["n_urls"]
-                for r in crawl_cycle_funnel(pages, robots, seen).collect()}
-    one_pass = run_crawl_funnel_one_pass(pages, robots, seen)
-    assert one_pass == branches
-
-
 def test_crawl_funnel_one_pass_writes_schedule(spark, tmp_path):
-    from wine_label_ocr_spark.plans.crawl import run_crawl_funnel_one_pass
     pages, robots, seen = _inputs(spark)
     out = str(tmp_path / "sched")
     counts = run_crawl_funnel_one_pass(pages, robots, seen, sink=out)

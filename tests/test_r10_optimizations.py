@@ -444,6 +444,57 @@ def test_fuzzy_kernel_empty_pair(spark):
     assert sorted((r["id_a"], r["id_b"]) for r in got) == [(3, 4)]
 
 
+def test_fuzzy_block_guard_runs_before_python(spark):
+    """The block-size guard is a JVM-side window count: Window and its
+    Filter sit below the FlatMapGroupsInPandas, on the grouped map's one
+    Exchange, so an oversized block never crosses into pandas. The gate
+    query's explicit repartition is that Exchange; without one the
+    window's own shuffle serves the grouped map."""
+    import __spark_entry__ as E
+    from wine_label_ocr_spark.operators.similarity import blocked_prefix_pairs
+    bare = spark.createDataFrame(
+        [(1, "en", "s0", "ab"), (2, "en", "s0", "abc")],
+        "doc_id bigint, lang string, source string, pfx string")
+    for df in (E.q_fuzzy_blocked_join(spark, E.SF_DEFAULT),
+               blocked_prefix_pairs(bare, max_block=10)):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        lines = plan.splitlines()
+
+        def at(pat):
+            return [i for i, ln in enumerate(lines) if pat in ln]
+
+        fm, guard = at("FlatMapGroupsInPandas"), at("Filter (_bn#")
+        win = at("Window [count(1) windowspecdefinition(lang#")
+        # a plan prints each node above its child
+        assert len(fm) == len(guard) == len(win) == 1, plan
+        assert fm[0] < guard[0] < win[0], plan
+        assert len(at("Exchange")) == 1, plan
+
+
+def test_fuzzy_hot_block_dropped_others_unchanged(spark):
+    """A block 100x over ``max_block`` (near-identical prefixes, so it
+    would pair quadratically) contributes no pair, and every other
+    block's pairs are exactly those it yields without the hot block."""
+    from wine_label_ocr_spark.operators.similarity import blocked_prefix_pairs
+    max_block = 10
+    rows = [(i, "en", "s0", f"the quick brown fox {i % 3}") for i in range(6)]
+    rows += [(100 + i, "de", "s1", "abcd" if i % 2 else "abce")
+             for i in range(max_block)]          # exactly at the cap
+    hot = [(10_000 + i, "xx", "hot", f"same text {i % 2}")
+           for i in range(100 * max_block)]
+    ddl = "doc_id bigint, lang string, source string, pfx string"
+
+    def pairs(data):
+        return sorted(tuple(r) for r in blocked_prefix_pairs(
+            spark.createDataFrame(data, ddl), max_block=max_block).collect())
+
+    base = pairs(rows)
+    assert base and any(r[0] >= 100 for r in base)
+    with_hot = pairs(rows + hot)
+    assert with_hot == base
+    assert not any(r[0] >= 10_000 for r in with_hot)
+
+
 # ---------------------------------------------------------------------------
 # simhash64 / minhash band kernels (both hash flavors) vs expression forms
 # ---------------------------------------------------------------------------

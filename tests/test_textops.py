@@ -171,19 +171,6 @@ def test_pack_sequences_sharded_scales(spark):
         assert sum(toks[:-1]) < 256 or len(toks) == 1
 
 
-def test_funnel_one_pass_matches_branch_counts(spark):
-    """The observe()-based single-job funnel reports the same per-stage
-    counts as the five-branch gate query."""
-    import __spark_entry__ as E
-    from wine_label_ocr_spark.plans.funnel import run_funnel_one_pass
-    sf = "/root/testdata/sf0.001"
-    got = run_funnel_one_pass(spark.read.parquet(f"{sf}/documents.parquet"))
-    want = {r["stage"]: r["n"] for r in E.q_training_funnel(spark, sf).collect()}
-    assert got == {"corpus": want["0_corpus"], "quality": want["1_quality"],
-                   "lang": want["2_lang_en"], "deduped": want["3_deduped"],
-                   "chunks": want["4_chunks"]}
-
-
 def test_stratified_sample_deterministic_mixing(spark):
     """Corpus mixing: per-stratum keep rates land near spec, results are
     bit-stable across runs (hash rule, no RNG), absent strata drop, and

@@ -167,21 +167,58 @@ def test_curate_crawl_end_to_end(spark, tmp_path):
 
 
 def test_curation_funnel_counts_consistent(spark):
-    """curation_funnel's stage counts are internally consistent, monotone
-    non-increasing, and 'canonical' equals curate_pages' actual output
-    row count (the funnel reports the REAL stages, not a twin)."""
+    """run_curation_funnel's stage counts are internally consistent,
+    monotone non-increasing, and 'canonical' equals curate_pages' actual
+    output row count (the funnel reports the REAL stages, not a twin)."""
     from wine_label_ocr_spark.fixtures import pages_spark
-    from wine_label_ocr_spark.plans.curate import curate_pages, curation_funnel
+    from wine_label_ocr_spark.plans.curate import (curate_pages,
+                                                   run_curation_funnel)
 
     pages = pages_spark(spark, 80, partitions=4)
-    rows = {r["stage"]: r["n_docs"]
-            for r in curation_funnel(pages, min_quality=0.0,
-                                     min_tokens=1).collect()}
+    rows = run_curation_funnel(pages, min_quality=0.0, min_tokens=1)
+    assert list(rows) == ["pages", "candidates", "unique", "canonical"]
     assert rows["pages"] == 80
     assert (rows["pages"] >= rows["candidates"] >= rows["unique"]
             >= rows["canonical"] > 0)
     assert curate_pages(pages, min_quality=0.0,
                         min_tokens=1).count() == rows["canonical"]
+
+
+def test_curation_funnel_counts_pages_above_the_cut(spark):
+    """The stages above the near-dup lineage cut are observed while the
+    cut materializes: a lazy checkpoint would leave the ``pages`` and
+    ``candidates`` Observations at 0. Adaptive execution runs the
+    stages below a lazy checkpoint's exchanges at checkpoint time and
+    would hide that, so it is off here."""
+    from wine_label_ocr_spark.fixtures import pages_spark
+    from wine_label_ocr_spark.plans.curate import run_curation_funnel
+
+    pages = pages_spark(spark, 40, partitions=2)
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        counts = run_curation_funnel(pages, min_quality=0.0, min_tokens=1)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert counts["pages"] == pages.count() == 40
+    assert counts["candidates"] > 0
+
+
+def test_curation_funnel_gate_leaves_no_cache(spark):
+    """The curation gate caches nothing: no plan is left pinned in the
+    session's cache manager after it runs."""
+    import __spark_entry__ as E
+
+    spark.catalog.clearCache()
+    E.q_curation_funnel(spark, E.SF_DEFAULT).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.parametrize("name", ["training_funnel", "crawl_cycle_funnel"])
+def test_funnel_gate_matches_oracle(oracle_gate, name):
+    """The one-pass funnel runners' observed counts equal the DuckDB
+    re-derivation of every stage."""
+    oracle_gate(name)
 
 
 def test_curate_pages_optional_ingest_stages(spark):

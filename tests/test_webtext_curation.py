@@ -8,7 +8,6 @@ forms stay honest.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -176,10 +175,10 @@ class TestCdxIndex:
         assert len(out) == 1 and out[0]["surt"] == "com,a)/x"
         assert out[0]["digest"] is not None and out[0]["length"] == 1
 
-    def test_commit_lookup_and_prune(self, spark):
+    def test_commit_lookup_and_prune(self, spark, tmp_path):
         from wine_label_ocr_spark.operators.cdx import cdx_commit, cdx_lookup
         from wine_label_ocr_spark.sources.table import ManifestTable
-        root = tempfile.mkdtemp(prefix="wlos_cdx_")
+        root = str(tmp_path)
         cdx_commit(self._pages(spark), root, n_files=8)
         # point lookup: every capture of ONE url
         got = cdx_lookup(spark, root, url="https://h3.com/p/3").collect()
@@ -219,7 +218,7 @@ class TestCdxIndex:
             assert got[f"https://a.com/{i}"] == want
             assert len(want) == 32 and "=" not in want
 
-    def test_prefix_successor_astral_safe(self, spark):
+    def test_prefix_successor_astral_safe(self, spark, tmp_path):
         from wine_label_ocr_spark.operators.cdx import (
             _prefix_successor, cdx_commit, cdx_lookup)
         # unit: successor covers astral continuations U+FFFF misses
@@ -231,7 +230,7 @@ class TestCdxIndex:
         assert "com,a)/" + emoji < _prefix_successor("com,a)/")
         # end-to-end: a file holding ONLY astral-path keys must not be
         # pruned away by the prefix lookup's manifest range
-        root = tempfile.mkdtemp(prefix="wlos_cdx_astral_")
+        root = str(tmp_path)
         df = spark.createDataFrame(
             [(f"https://a.com/{emoji}", "2025-01-01 00:00:00", b"x")],
             "url string, warc_ts string, html binary") \
@@ -341,9 +340,9 @@ class TestCdxIndex:
         assert raw.count(f"WARC-Payload-Digest: sha1:{digest}".encode()) == 2
         assert b"WARC-Refers-To-Date: 2025-01-01" in raw
 
-    def test_lookup_arg_validation(self, spark):
+    def test_lookup_arg_validation(self, spark, tmp_path):
         from wine_label_ocr_spark.operators.cdx import cdx_lookup
-        root = tempfile.mkdtemp(prefix="wlos_cdx_")
+        root = str(tmp_path)
         try:
             cdx_lookup(spark, root)
         except ValueError:
@@ -372,7 +371,7 @@ class TestWet:
         for i, (h, want) in enumerate(cases):
             assert got[i] == want, f"{h!r}: {got[i]!r} != {want!r}"
 
-    def test_wet_shard_roundtrip(self, spark):
+    def test_wet_shard_roundtrip(self, spark, tmp_path):
         from wine_label_ocr_spark.sources.warc import (
             read_warc, write_wet_shards)
         pages = spark.range(20).select(
@@ -381,7 +380,7 @@ class TestWet:
             F.expr("timestamp'2025-01-01'").alias("warc_ts"),
             F.encode(F.concat(F.lit("<p>Doc "), F.col("id").cast("string"),
                               F.lit(" body.</p>")), "utf-8").alias("html"))
-        out = tempfile.mkdtemp(prefix="wlos_wet_t_")
+        out = str(tmp_path)
         manifest = write_wet_shards(pages.repartition(3), out,
                                     compress=True).collect()
         assert sum(m["n_records"] for m in manifest) == 20

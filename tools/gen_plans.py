@@ -44,6 +44,7 @@ def main(names: list[str]) -> None:
     from wine_label_ocr_spark.fixtures import pages_spark
     from wine_label_ocr_spark.operators.ann import _ivf_seed_candidates, cosine_topk
     from wine_label_ocr_spark.operators.dedupe import minhash_lsh_pairs
+    from wine_label_ocr_spark.plans.funnel import StageCounter, _training_stages
     from wine_label_ocr_spark.plans.pipeline import extract_records
     from wine_label_ocr_spark.session import get_spark
     from wine_label_ocr_spark.streaming.state import ema_phase_batch
@@ -53,7 +54,6 @@ def main(names: list[str]) -> None:
 
     def plan(df) -> str:
         return df._jdf.queryExecution().executedPlan().toString().rstrip()
-
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     q = emb.limit(3).select(F.col("vec_id").alias("q_id"), "embedding")
@@ -87,10 +87,13 @@ def main(names: list[str]) -> None:
          "join condition (pinned).",
          minhash_lsh_pairs(docs, n_perm=8, n_bands=2, oracle_safe=False)),
         ("fuzzy_blocked_join — bounded blocks, explicit co-partitioning",
-         "Window count = block-size skew guard (oversized blocks dropped, "
-         "mirrored in the DuckDB oracle). The explicit hash repartition on "
-         "(lang, source) is user-specified, so AQE cannot coalesce the "
-         "quadratic levenshtein stage down to one task.",
+         "A JVM-side Window count(1) over (lang, source) is the block-size "
+         "skew guard: oversized blocks are filtered out below the "
+         "FlatMapGroupsInPandas, before any row reaches pandas (pinned; "
+         "mirrored in the DuckDB oracle). The Window and the grouped map "
+         "share the one explicit hash repartition on (lang, source), which "
+         "is user-specified, so AQE cannot coalesce the quadratic "
+         "levenshtein stage down to one task.",
          E.q_fuzzy_blocked_join(spark, SF)),
         ("ivf seed candidates — distributed top-k, no global window",
          "TakeOrderedAndProject (pinned): per-partition partial top-k then "
@@ -123,9 +126,10 @@ def main(names: list[str]) -> None:
                     fromlist=["pack_sequences"]).pack_sequences(
              docs, budget_tokens=512, n_shards=8)),
         ("training_funnel — composed quality→lang→dedup→chunk counts",
-         "Five observation branches over shared subtrees (gate form); the "
-         "one-pass observe() form lives in plans/funnel.py.",
-         E.q_training_funnel(spark, SF)),
+         "One plan with a CollectMetrics node (an Observation's count(1)) "
+         "at every stage boundary and no Union: the gate materializes it "
+         "once to the noop sink and reports the observed counts.",
+         _training_stages(docs, StageCounter().wrap)),
         ("rp_lsh_topk multi-probe — only the broadcast query side explodes",
          "n_probes=3 expands QUERY signatures to hamming-1 neighbor "
          "buckets (margin-ordered); the corpus is bucketed exactly once "
@@ -139,7 +143,9 @@ def main(names: list[str]) -> None:
          "max_bucket hot-bucket guard (quadratic-on-skew closed, r2 "
          "VERDICT #1), applied BEFORE the Generate that emits the pairs. "
          "No Window, no self-join: the `_bucket_pairs` shape every banded "
-         "near-dup operator shares (pinned).",
+         "near-dup operator shares (pinned). The cosine comes from a "
+         "one-element explode, so the threshold Filter sits above the "
+         "Generate and each pair's cosine is computed once (pinned).",
          __import__("wine_label_ocr_spark.operators.ann",
                     fromlist=["embedding_near_dup"]).embedding_near_dup(
              emb, dim=64, n_planes=6)),

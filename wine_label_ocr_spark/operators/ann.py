@@ -219,17 +219,12 @@ def _sig_from_dots(d: Column, n_planes: int) -> Column:
 
 
 def rp_signature(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-pattern bucket id (long) from dot products with fixed planes."""
-    bits = []
-    for j, plane in enumerate(planes):
-        lit = F.array(*[F.lit(w) for w in plane])
-        bits.append(F.when(dot(vec, lit) > 0,
-                           F.shiftleft(F.lit(1).cast("long"), j))
-                    .otherwise(F.lit(0).cast("long")))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out.bitwiseOR(b)
-    return out
+    """Sign-pattern bucket id (long) from dot products with fixed planes;
+    the dots array is bound once with ``let``."""
+    from ..functions import let
+
+    return let(_plane_dots(vec, planes),
+               lambda d: _sig_from_dots(d, len(planes)))
 
 
 def rp_probe_buckets(vec: Column, planes: list[list[float]],
@@ -828,7 +823,9 @@ def embedding_near_dup(corpus: DataFrame, dim: int, min_cosine: float = 0.95,
     planes = _hyperplanes(n_planes, dim, seed)
     c = corpus.select(F.col(c_id).alias("_id"), F.col(c_vec).alias("_v"),
                       rp_signature(F.col(c_vec), planes).alias("_bucket"))
+    # a one-element explode yields the cosine, so the threshold filter
+    # sits above the Generate and the cosine is evaluated once per pair
+    cos = F.round(cosine(F.col("_v_a"), F.col("_v_b")), 6)
     return (_bucket_pairs(c, ["_bucket"], max_bucket, carry="_v")
-            .select("id_a", "id_b", F.round(cosine(
-                F.col("_v_a"), F.col("_v_b")), 6).alias("cosine"))
+            .select("id_a", "id_b", F.explode(F.array(cos)).alias("cosine"))
             .filter(F.col("cosine") >= min_cosine))

@@ -32,7 +32,7 @@ import re
 import unicodedata
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql.functions import pandas_udf
 
 # _WINERY_WORDS verbatim (MakerAndCustomIDSimilarity.py:36-39)
@@ -544,7 +544,11 @@ def blocked_prefix_pairs(df: DataFrame, id_col: str = "doc_id",
     Semantics identical to the former SMJ theta join it replaces:
 
     * a block larger than ``max_block`` rows (counting EVERY row, nulls
-      included — the former window ``count(*)``) contributes nothing;
+      included) contributes nothing. The count is a JVM-side window
+      ``count(1)`` over the block key, so an oversized block is dropped
+      before any of it crosses into pandas. The window adds no
+      Exchange: it and the grouped map share one hash partitioning on
+      ``block_cols`` (the caller's repartition, if it made one);
     * blocks keyed by a NULL component contribute nothing (null-rejecting
       equality, J4);
     * rows with NULL id or NULL prefix never pair (null comparisons in
@@ -569,7 +573,7 @@ def blocked_prefix_pairs(df: DataFrame, id_col: str = "doc_id",
                               "id_b": pd.Series(dtype="int64"),
                               "lev": pd.Series(dtype="int32"),
                               "maxlen": pd.Series(dtype="int32")})
-        if any(k is None for k in key[:n_keys]) or len(pdf) > max_block:
+        if any(k is None for k in key[:n_keys]):
             return empty
         ok = pdf[pdf[id_col].notna() & pdf[pfx_col].notna()]
         if len(ok) < 2:
@@ -592,5 +596,8 @@ def blocked_prefix_pairs(df: DataFrame, id_col: str = "doc_id",
                              "lev": lev[keep].astype(np.int32),
                              "maxlen": maxlen[keep].astype(np.int32)})
 
-    return (df.groupBy(*[F.col(c) for c in block_cols])
+    size = F.count(F.lit(1)).over(Window.partitionBy(*block_cols))
+    return (df.withColumn("_bn", size).filter(F.col("_bn") <= max_block)
+            .drop("_bn")
+            .groupBy(*[F.col(c) for c in block_cols])
             .applyInPandas(kernel, schema=schema))

@@ -48,6 +48,7 @@ from ..operators.robots import (parse_robots_rules, robots_allowed,
                                 robots_directives)
 from ..operators.sitemap import parse_sitemap
 from ..operators.textops import canonical_url
+from .funnel import StageCounter
 
 
 def seen_url_fps(urls: DataFrame, url_col: str = "url",
@@ -230,12 +231,14 @@ def _crawl_stages(pages: DataFrame, robots: DataFrame,
                   agent: str, oracle_safe: bool,
                   sitemaps: DataFrame | None = None,
                   respect_meta_robots: bool = False,
-                  stage_wrap=None):
-    """The shared stage DAG: (links, candidates, unseen, allowed,
-    schedule). One construction used by both ``crawl_cycle`` (the
-    product) and ``crawl_cycle_funnel`` (its per-stage survivor counts,
-    the driver gate), so the gate certifies the capstone's real stages,
-    not a twin — the ``plans/curate.py`` pattern.
+                  stage_wrap=None) -> DataFrame:
+    """The shared stage DAG, pages → schedule. One construction used by
+    both ``crawl_cycle`` (the product) and ``run_crawl_funnel_one_pass``
+    (its per-stage survivor counts, the driver gate), so the gate
+    certifies the capstone's real stages, not a twin — the
+    ``plans/curate.py`` pattern. ``stage_wrap(name, df)`` (a
+    ``funnel.StageCounter.wrap``) observes the outlinks, candidates,
+    unseen and allowed stages.
 
     ``sitemaps`` is the fetched-sitemap table ``(url, sitemap_xml)``;
     only files whose url a ``Sitemap:`` directive in THESE robots bytes
@@ -285,12 +288,11 @@ def _crawl_stages(pages: DataFrame, robots: DataFrame,
     rules = parse_robots_rules(robots, agent=agent)
     allowed = wrap("allowed", robots_allowed(unseen, rules)
                    .filter(F.col("allowed")).drop("allowed"))
-    sched = schedule_frontier(allowed, dirs,
-                              default_delay_ms=default_delay_ms,
-                              n_workers=n_workers,
-                              delay_col="crawl_delay_ms",
-                              oracle_safe=oracle_safe)
-    return links, cand, unseen, allowed, sched
+    return schedule_frontier(allowed, dirs,
+                             default_delay_ms=default_delay_ms,
+                             n_workers=n_workers,
+                             delay_col="crawl_delay_ms",
+                             oracle_safe=oracle_safe)
 
 
 def crawl_cycle(pages: DataFrame, robots: DataFrame,
@@ -331,7 +333,7 @@ def crawl_cycle(pages: DataFrame, robots: DataFrame,
     Feed the returned URLs to the fetcher fleet, then
     ``seen_url_fps(fetched).union(seen_fps).distinct()`` is the store
     for the cycle after — the crawl-over-crawl loop."""
-    *_, sched = _crawl_stages(
+    sched = _crawl_stages(
         pages, robots, seen_fps, default_delay_ms, n_workers, agent,
         oracle_safe, sitemaps=sitemaps,
         respect_meta_robots=respect_meta_robots)
@@ -354,74 +356,24 @@ def crawl_cycle(pages: DataFrame, robots: DataFrame,
     return sched, idx
 
 
-def crawl_cycle_funnel(pages: DataFrame, robots: DataFrame,
-                       seen_fps: DataFrame | None = None,
-                       default_delay_ms: int = 1000, n_workers: int = 16,
-                       agent: str = "*",
-                       oracle_safe: bool = False,
-                       sitemaps: DataFrame | None = None) -> DataFrame:
-    """Per-stage survivor counts of the crawl cycle: ``(stage_idx,
-    stage, n_urls)`` for outlinks → candidates → unseen → allowed →
-    scheduled. ``scheduled == allowed`` is itself a pinned contract:
-    every allowed candidate has a parseable host (canonicalization
-    guarantees http(s)), so the scheduler drops nothing."""
-    links, cand, unseen, allowed, sched = _crawl_stages(
-        pages, robots, seen_fps, default_delay_ms, n_workers, agent,
-        oracle_safe, sitemaps=sitemaps)
-    # no cache(): the shared prefix re-executes per count branch, but
-    # every stage here is cheap maps + hash joins (unlike curate.py's
-    # funnel, where extraction dominates), and a session-lifetime cache
-    # pin would leak across the driver's ~50 gate queries. Production
-    # counting composes observe() on ONE pass (plans/funnel.py form).
-    stages = [("outlinks", links), ("candidates", cand),
-              ("unseen", unseen), ("allowed", allowed),
-              ("scheduled", sched)]
-    out = None
-    for i, (name, df) in enumerate(stages):
-        c = df.agg(F.count(F.lit(1)).alias("n_urls")).select(
-            F.lit(i).alias("stage_idx"), F.lit(name).alias("stage"),
-            "n_urls")
-        out = c if out is None else out.unionAll(c)
-    return out
-
-
 def run_crawl_funnel_one_pass(pages: DataFrame, robots: DataFrame,
                               seen_fps: DataFrame | None = None,
                               default_delay_ms: int = 1000,
                               n_workers: int = 16, agent: str = "*",
                               sitemaps: DataFrame | None = None,
-                              sink: str = "noop") -> dict[str, int]:
-    """ONE-pass crawl-funnel counters (r8 VERDICT #8 — the
-    ``plans/funnel.py`` Observation form ported to the crawl capstone):
-    materialize the schedule once and observe every stage boundary of
-    that SINGLE execution, instead of ``crawl_cycle_funnel``'s five
-    count branches re-running the shared prefix. At 100 TB that is one
-    page scan instead of five.
-
-    Built on the SAME ``_crawl_stages`` DAG as the product and the gate
-    (a ``stage_wrap`` hook attaches an Observation at each stage
-    boundary INSIDE the surviving plan), so the counters are the real
-    stages' row flows — identical numbers to the count branches,
-    observed instead of recomputed (pytest pins equality against
-    ``crawl_cycle_funnel``).
-
-    Returns ``{stage: n_urls}`` plus the schedule row count under
-    ``"scheduled"``. ``sink='noop'`` forces materialization without
-    output; a path persists the schedule as parquet."""
-    from pyspark.sql import Observation
-
-    obs: dict[str, Observation] = {}
-
-    def wrap(name: str, df: DataFrame) -> DataFrame:
-        obs[name] = Observation(f"crawl_{name}")
-        return df.observe(obs[name], F.count(F.lit(1)).alias("n"))
-
-    *_, sched = _crawl_stages(
+                              sink: str = "noop",
+                              oracle_safe: bool = False) -> dict[str, int]:
+    """Per-stage survivor counts of the crawl cycle, observed on ONE
+    run of ``crawl_cycle``'s stages (``funnel.StageCounter``):
+    ``{outlinks, candidates, unseen, allowed, scheduled}``.
+    ``scheduled == allowed`` is itself a pinned contract: every allowed
+    candidate has a parseable host (canonicalization guarantees
+    http(s)), so the scheduler drops nothing. ``oracle_safe`` selects
+    the md5 hash flavor for DuckDB bit-parity. ``sink='noop'`` forces
+    materialization without output; a path persists the schedule as
+    parquet."""
+    counter = StageCounter()
+    sched = _crawl_stages(
         pages, robots, seen_fps, default_delay_ms, n_workers, agent,
-        False, sitemaps=sitemaps, stage_wrap=wrap)
-    sched = wrap("scheduled", sched)
-    if sink == "noop":
-        sched.write.format("noop").mode("overwrite").save()
-    else:
-        sched.write.mode("overwrite").parquet(sink)
-    return {name: int(o.get["n"]) for name, o in obs.items()}
+        oracle_safe, sitemaps=sitemaps, stage_wrap=counter.wrap)
+    return counter.run(counter.wrap("scheduled", sched), sink)

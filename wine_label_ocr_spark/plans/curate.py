@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..operators.dedupe import dedup_keep_one, exact_dedup, minhash_lsh_pairs
 from ..operators.textops import host_of, lang_id, quality_score, token_count
 from ..sources.warc import read_warc, write_warc_shards
+from .funnel import StageCounter
 from .pipeline import extract_records
 from .skew import salted_agg
 
@@ -34,17 +35,19 @@ def _curation_stages(pages: DataFrame, min_quality: float, min_tokens: int,
                      robots_rules: DataFrame | None = None,
                      normalize_text: bool = False,
                      prior_fps: DataFrame | None = None,
-                     checkpoint_uniq: bool = True,
                      c4: bool = False,
                      gopher: bool = False,
                      lm_keep: tuple[int, ...] | None = None,
                      lm_min_count: int | None = None,
-                     lm_top_n: int | None = None):
-    """The shared stage DAG: (records, candidates, unique, canonical).
+                     lm_top_n: int | None = None,
+                     stage_wrap=None) -> DataFrame:
+    """The shared stage DAG, pages → canonical (``_did`` still carried).
 
     One construction used by both ``curate_pages`` (the product) and
-    ``curation_funnel`` (its per-stage survivor counts, the driver gate)
-    so the gate certifies the capstone's real stages, not a twin.
+    ``run_curation_funnel`` (its per-stage survivor counts, the driver
+    gate) so the gate certifies the capstone's real stages, not a twin.
+    ``stage_wrap(name, df)`` (a ``funnel.StageCounter.wrap``) observes
+    the pages, candidates and unique stages.
 
     Optional ingest stages (all default-off so the certified funnel is
     unchanged): ``blocklist`` (domain suffix filter, pre-extract — the
@@ -64,6 +67,7 @@ def _curation_stages(pages: DataFrame, min_quality: float, min_tokens: int,
         from ..operators.robots import robots_allowed
         pages = robots_allowed(pages, robots_rules) \
             .filter(F.col("allowed")).drop("allowed")
+    wrap = stage_wrap or (lambda name, df: df)
     rec = extract_records(pages)
     if normalize_text:
         from ..operators.textops import fix_text
@@ -74,6 +78,7 @@ def _curation_stages(pages: DataFrame, min_quality: float, min_tokens: int,
         rec = (rec.withColumn("_c4ok", page_ok)
                .withColumn("text", clean_text)
                .filter(F.col("_c4ok")).drop("_c4ok"))
+    rec = wrap("pages", rec)
     cand = (rec.withColumn("_q", quality_score(F.col("text")))
             .withColumn("_nt", token_count(F.col("text")))
             .filter((F.col("_q") >= min_quality) & (F.col("_nt") >= min_tokens)))
@@ -103,6 +108,7 @@ def _curation_stages(pages: DataFrame, min_quality: float, min_tokens: int,
         cand = (cand.join(b, "url")
                 .filter(F.col("ppl_bucket").isin(*lm_keep))
                 .drop("ppl_bucket"))
+    cand = wrap("candidates", cand)
     # dedup ids must be stable & orderable: hash the url
     keyed = cand.withColumn("_did", F.xxhash64("url"))
     uniq = exact_dedup(keyed, text_col="text", id_col="_did")
@@ -110,25 +116,25 @@ def _curation_stages(pages: DataFrame, min_quality: float, min_tokens: int,
         from ..operators.dedupe import incremental_dedup
         uniq = incremental_dedup(uniq, prior_fps, id_col="_did",
                                  oracle_safe=oracle_safe)
-    if checkpoint_uniq:
-        # Lineage cut before the near-dup stage: `uniq` feeds FIVE plan
-        # branches downstream (the LSH bucket self-join's two sides, the
-        # verify join's two text sides, and the keep-one anti-join), so
-        # without a materialization the whole ingest→extract→gate→exact-
-        # dedup prefix re-executes per branch — measured 1.38× on the
-        # 1M-page soak (1359 s → 988 s; the rest of the wall is the LSH
-        # shuffle + gzip write, not recompute). localCheckpoint is lazy
-        # (first
-        # action materializes) and spills executor-local, the same
-        # pattern pagerank/connected_components already use; at cluster
-        # scale the equivalent cut is persisting the survivor set to a
-        # table between the stages.
-        uniq = uniq.localCheckpoint(eager=False)
+    # Lineage cut before the near-dup stage: `uniq` feeds FIVE plan
+    # branches downstream (the LSH bucket self-join's two sides, the
+    # verify join's two text sides, and the keep-one anti-join), so
+    # without a materialization the whole ingest→extract→gate→exact-
+    # dedup prefix re-executes per branch — measured 1.38× on the
+    # 1M-page soak (1359 s → 988 s; the rest of the wall is the LSH
+    # shuffle + gzip write, not recompute). localCheckpoint spills
+    # executor-local, the same pattern pagerank/connected_components
+    # already use; at cluster scale the equivalent cut is persisting
+    # the survivor set to a table between the stages. It is eager:
+    # the Observations on the stages above it count only when the cut
+    # itself runs them.
+    uniq = uniq.localCheckpoint(eager=True)
     pairs = minhash_lsh_pairs(uniq, id_col="_did", text_col="text",
                               min_jaccard=near_dup_jaccard,
                               oracle_safe=oracle_safe)
-    canonical = dedup_keep_one(uniq, pairs, id_col="_did")
-    return rec, cand, uniq, canonical
+    # `unique` is observed on the keep-one anti-join's left side, the
+    # one branch that reads it exactly once
+    return dedup_keep_one(wrap("unique", uniq), pairs, id_col="_did")
 
 
 def curate_pages(pages: DataFrame, min_quality: float = 0.3,
@@ -148,7 +154,7 @@ def curate_pages(pages: DataFrame, min_quality: float = 0.3,
     ``_curation_stages`` for the optional ingest stages (domain
     blocklist, robots verdicts, text normalization, crawl-over-crawl
     dedup)."""
-    _, _, _, canonical = _curation_stages(
+    canonical = _curation_stages(
         pages, min_quality, min_tokens, langs, near_dup_jaccard,
         blocklist=blocklist, robots_rules=robots_rules,
         normalize_text=normalize_text, prior_fps=prior_fps,
@@ -157,35 +163,23 @@ def curate_pages(pages: DataFrame, min_quality: float = 0.3,
     return canonical.drop("_did")
 
 
-def curation_funnel(pages: DataFrame, min_quality: float = 0.3,
-                    min_tokens: int = 10, langs: tuple[str, ...] = (),
-                    near_dup_jaccard: float = 0.85,
-                    oracle_safe: bool = False) -> DataFrame:
-    """Per-stage survivor counts of the curation capstone:
-    ``(stage_idx, stage, n_docs)`` for pages → candidates → unique →
-    canonical. Counts are representative-independent (which duplicate
-    survives doesn't change how many do), which is what makes the whole
-    funnel — including both dedup stages — SQL-oracle-expressible.
-    ``oracle_safe`` selects the md5 MinHash flavor for DuckDB bit-parity
-    (bench the default xxhash64 flavor)."""
-    rec, cand, uniq, canonical = _curation_stages(
+def run_curation_funnel(pages: DataFrame, min_quality: float = 0.3,
+                        min_tokens: int = 10, langs: tuple[str, ...] = (),
+                        near_dup_jaccard: float = 0.85,
+                        oracle_safe: bool = False) -> dict[str, int]:
+    """Per-stage survivor counts of the curation capstone, observed
+    while ``curate_pages``' stages run once (the eager lineage cut
+    before near-dup, then a noop write): ``{pages, candidates,
+    unique, canonical}``. Counts are representative-independent (which
+    duplicate survives doesn't change how many do), which is what makes
+    the whole funnel — including both dedup stages — SQL-oracle-
+    expressible. ``oracle_safe`` selects the md5 MinHash flavor for
+    DuckDB bit-parity (bench the default xxhash64 flavor)."""
+    counter = StageCounter()
+    canonical = _curation_stages(
         pages, min_quality, min_tokens, langs, near_dup_jaccard,
-        oracle_safe=oracle_safe)
-    # the four count branches share one lineage: without caching the cut
-    # points, extraction re-runs 4x and exact dedup 2x per evaluation.
-    # cache() registers by canonicalized logical plan, so the canonical
-    # returned by _curation_stages (built on the same uniq plan) reuses
-    # the cached cuts — no rebuilt twin of the near-dup stage here.
-    rec, uniq = rec.cache(), uniq.cache()
-    cand = cand.cache()
-    stages = [("pages", rec), ("candidates", cand),
-              ("unique", uniq), ("canonical", canonical)]
-    out = None
-    for i, (name, df) in enumerate(stages):
-        c = df.agg(F.count(F.lit(1)).alias("n_docs")).select(
-            F.lit(i).alias("stage_idx"), F.lit(name).alias("stage"), "n_docs")
-        out = c if out is None else out.unionAll(c)
-    return out
+        oracle_safe=oracle_safe, stage_wrap=counter.wrap)
+    return counter.run(counter.wrap("canonical", canonical).drop("_did"))
 
 
 def host_profile(records: DataFrame, n_salts: int = 16) -> DataFrame:
