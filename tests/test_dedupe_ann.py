@@ -274,6 +274,9 @@ def test_banded_pairs_edge_cases(spark, name):
                 for r in _banded_pairs(spark, name, ids, max_bucket).collect()]
 
     assert set(pairs([1, 1, 2, None, (3, None)])) == {(1, 2)}
+    # two NULL-content rows do not pair either: MinHash gives every NULL
+    # text one signature, so banding them paired (3, 4) at Jaccard 1.0
+    assert set(pairs([1, 1, 2, None, (3, None), (4, None)])) == {(1, 2)}
     if name == "duplicate_passages":
         # one row per shared fingerprint bucket is counted, not per row
         n_fps = dedupe.winnow_fingerprints(spark.createDataFrame(

@@ -249,50 +249,11 @@ class TestAnchorText:
         # relative href resolved against the page url
         assert by_dst["https://s1.com/local"] == [(1, "rel", 1)]
 
-    def test_page_links_parity_with_both_consumers(self, spark):
-        """The shared pass must be a drop-in for BOTH extractions: its
-        (src, href, resolved) multiset equals extract_outlinks(resolve=
-        True), and its non-NULL anchor rows equal anchor_pairs — on a
-        fixture exercising areas, nested anchors, base tags, unquoted
-        hrefs, fragments, ties, and whitespace anchors."""
-        from wine_label_ocr_spark.operators.graph import (
-            anchor_pairs, extract_outlinks, page_links)
-        html = (
-            '<base href="https://b.com/dir/">'
-            '<a href="https://t.com/p">big</a>'
-            '<a href="rel/x">rel  text</a>'
-            '<area href="/map">'
-            '<a href="https://n.com/q"><b>nested</b></a>'
-            '<a href="#frag">skip</a>'
-            "<a href=https://bare.io/u>bare</a>"
-            '<a href="https://t.com/p">   </a>'
-            '<a href="https://t.com/p">big</a>')
-        pages = spark.createDataFrame(
-            [("https://s.com/page", html), ("https://s2.com/", "<p>no links</p>")],
-            "url string, html string")
-        shared = page_links(pages).collect()
-        outl = extract_outlinks(pages, resolve=True).collect()
-        assert sorted((r["src"], r["href"], r["resolved"]) for r in shared) \
-            == sorted((r["src"], r["href"], r["resolved"]) for r in outl)
-        anch = anchor_pairs(pages).collect()
-        assert sorted((r["src"], r["href"], r["anchor"])
-                      for r in shared if r["anchor"] is not None) \
-            == sorted((r["src"], r["href"], r["anchor"]) for r in anch)
-        # index built from the shared rows == the standalone operator
-        # (no <base> in this second fixture, so both resolve the same)
-        from wine_label_ocr_spark.operators.graph import anchor_text_index
-        p2 = spark.createDataFrame(
-            [("https://s.com/", '<a href="https://t.com/p">x</a>'
-              '<a href="/r">y</a>')], "url string, html string")
-        via_links = anchor_text_index(links=page_links(p2), k=3).collect()
-        standalone = anchor_text_index(p2, k=3).collect()
-        assert sorted(map(tuple, via_links)) == sorted(map(tuple, standalone))
-
     def test_crawl_cycle_anchor_index(self, spark):
         # anchor_index_k: schedule identical to the plain cycle, index
         # over the same pages (base-aware, nofollow-consistent);
         # BENCH.md r8 records why this is a second anchor_pairs pass
-        # and not the one-scan page_links variant (1.11x vs 1.60x)
+        # (1.11x the cycle alone vs 1.60x for a one-scan shared lexer)
         from wine_label_ocr_spark.plans.crawl import crawl_cycle
         pages = spark.createDataFrame(
             [("https://a.com/1", '<a href="https://a.com/n1">go n1</a>'
@@ -307,6 +268,25 @@ class TestAnchorText:
         got = {(r["dst"], r["anchor"]) for r in idx.collect()}
         assert got == {("https://a.com/n1", "go n1"),
                        ("https://a.com/n2", "go n2")}
+
+    def test_crawl_cycle_anchor_index_base_and_nofollow(self, spark):
+        # the index reads the frontier's pages: a nofollow page adds no
+        # anchors under respect_meta_robots, and relative targets
+        # resolve against <base href> as outlinks do
+        from wine_label_ocr_spark.plans.crawl import crawl_cycle
+        pages = spark.createDataFrame(
+            [("https://a.com/1", '<base href="https://b.com/d/">'
+              '<a href="x">based</a>'),
+             ("https://a.com/2", '<meta name="robots" content="nofollow">'
+              '<a href="https://a.com/n">skipped</a>')],
+            "url string, html string")
+        robots = spark.createDataFrame(
+            [("a.com", "User-agent: *\nAllow: /")],
+            "host string, robots_txt string")
+        _, idx = crawl_cycle(pages, robots, anchor_index_k=1,
+                             respect_meta_robots=True)
+        assert {(r["dst"], r["anchor"]) for r in idx.collect()} == {
+            ("https://b.com/d/x", "based")}
 
     def test_index_uppercase_scheme_kept(self, spark):
         # resolve_href passes uppercase-scheme absolute hrefs through

@@ -567,3 +567,39 @@ def test_incremental_dedup_stream_equals_batch(spark, tmp_path):
     q.awaitTermination(120)
     got = {r["doc_id"] for r in spark.sql("select * from inc_out").collect()}
     assert got == want
+
+
+def test_stream_membership_plans_are_left_anti(spark, tmp_path):
+    """The streaming crawl candidates and the streaming crawl-over-crawl
+    dedup test store membership with the batch operators' LEFT ANTI
+    joins, not a LEFT OUTER join plus an IS NULL filter: a seen store
+    adds one LeftAnti join to the candidates plan and no LeftOuter join
+    (the robots verdict's host join is a left join with or without it),
+    and the dedup plan anti-joins once per tier."""
+    from wine_label_ocr_spark.operators.dedupe import snapshot_fingerprints
+    from wine_label_ocr_spark.plans.crawl import seen_url_fps
+    from wine_label_ocr_spark.streaming.extract_stream import (
+        crawl_candidates_stream, incremental_dedup_stream)
+
+    def joins(df):
+        plan = df._jdf.queryExecution().analyzed().toString()
+        return plan.count("LeftAnti"), plan.count("LeftOuter")
+
+    (tmp_path / "pages").mkdir()
+    (tmp_path / "docs").mkdir()
+    pages = spark.readStream.schema("url string, html string") \
+        .parquet(str(tmp_path / "pages"))
+    robots = spark.createDataFrame([("a.com", "User-agent: *\nAllow: /")],
+                                   "host string, robots_txt string")
+    seen = seen_url_fps(spark.createDataFrame([("https://a.com/x",)],
+                                              "url string"))
+    anti, outer = joins(crawl_candidates_stream(pages, robots))
+    assert joins(crawl_candidates_stream(pages, robots, seen)) \
+        == (anti + 1, outer)
+
+    docs = spark.readStream.schema("doc_id bigint, text string") \
+        .parquet(str(tmp_path / "docs"))
+    fps = snapshot_fingerprints(spark.createDataFrame(
+        [(1, "some prior text")], "doc_id bigint, text string"))
+    assert joins(incremental_dedup_stream(docs, fps, n_perm=8,
+                                          n_bands=2)) == (3, 0)

@@ -514,12 +514,6 @@ class TestHeadMeta:
               .collect()[0]
         assert r["ni"] is False and r["nf"] is False
 
-    def test_anchor_index_both_none_raises(self, spark):
-        from wine_label_ocr_spark.operators.graph import anchor_text_index
-        import pytest as _pytest
-        with _pytest.raises(ValueError, match="df.*or.*links"):
-            anchor_text_index()
-
     def test_http_equiv_charset_and_empty(self, spark):
         r = self._run(spark, '<meta http-equiv="Content-Type"'
                       ' content="text/html; charset=ISO-8859-1">')

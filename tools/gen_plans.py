@@ -79,7 +79,9 @@ def main(names: list[str]) -> None:
          "One Arrow kernel (ArrowEvalPython) gives the band hashes; the "
          "(band, band_hash) exchange carries only (id, band, hash) — the "
          "text stays out of the shuffle (pinned) and rejoins by id for "
-         "candidate pairs only. One aggregation per bucket drops oversized "
+         "candidate pairs only. NULL-text rows are filtered at the scan "
+         "(they would all share one signature and pair). One "
+         "aggregation per bucket drops oversized "
          "buckets (the max_bucket skew guard) and emits the id pairs. The "
          "verify binds each side's tokens and shingles with `let`: one "
          "split per text per evaluation, in the one Generate that yields "

@@ -427,8 +427,8 @@ def run_anchorshare(n_pages: int) -> dict:
     * cycle alone — ``crawl_cycle`` (the baseline wall);
     * duplicated  — cycle + standalone ``anchor_text_index`` (the old
       two-resolve path a user combining both operators paid);
-    * shared      — ``crawl_cycle(anchor_index_k=3)``: one lex + one
-      resolve feeding both consumers.
+    * shared      — ``crawl_cycle(anchor_index_k=3)``: the cycle plus
+      its own base-aware ``anchor_pairs`` pass over the same pages.
 
     Done-bar: shared ≤ ~1.2× cycle-alone (vs ~2× for duplicated)."""
     from wine_label_ocr_spark.fixtures import COLD_HOSTS, HOT_HOSTS, pages_spark

@@ -347,7 +347,9 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
     # shingle) measured ~2 ms/doc at sf1.0, the kernel ~50 µs/doc. Both
     # flavors are pinned bit-identical to that column form by
     # tests/test_r10_optimizations.py::test_minhash_kernel_bands.
-    buck = df.select(
+    # NULL text never pairs: every NULL text gets the same signature,
+    # so banding it would pair all NULL-text docs at Jaccard 1.0
+    buck = df.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("_id"),
         _minhash_bands(F.col(text_col), k, n_perm, n_bands,
                        oracle_safe).alias("_bh"),
@@ -738,6 +740,18 @@ def snapshot_fingerprints(df: DataFrame, text_col: str = "text",
     return exact.unionByName(bands).distinct()
 
 
+def _exact_unseen(docs: DataFrame, prior_fps: DataFrame,
+                  text_col: str) -> DataFrame:
+    """Rows of ``docs`` whose content key is not in the store's
+    ``'exact'`` slice: one LEFT ANTI equi join on the key — the exact
+    tier of ``incremental_dedup`` and of its streaming twin (a
+    stateless stream-static join there)."""
+    exact_fps = prior_fps.filter(F.col("kind") == "exact").select("fp")
+    keyed = docs.withColumn("_ck", content_key(F.col(text_col)))
+    return keyed.join(exact_fps, keyed["_ck"] == exact_fps["fp"],
+                      "left_anti").drop("_ck")
+
+
 def incremental_dedup(new_docs: DataFrame, prior_fps: DataFrame,
                       id_col: str = "doc_id", text_col: str = "text",
                       k: int = 3, n_perm: int = 32, n_bands: int = 8,
@@ -758,11 +772,7 @@ def incremental_dedup(new_docs: DataFrame, prior_fps: DataFrame,
     No broadcast assumption anywhere: at 10^12 docs the store is itself
     corpus-sized, and every join here shuffles only (id, hash) pairs.
     """
-    exact_fps = prior_fps.filter(F.col("kind") == "exact").select("fp")
-    keyed = new_docs.withColumn("_ck", content_key(F.col(text_col)))
-    fresh = keyed.join(exact_fps, keyed["_ck"] == exact_fps["fp"],
-                       "left_anti").drop("_ck")
-
+    fresh = _exact_unseen(new_docs, prior_fps, text_col)
     band_fps = prior_fps.filter(F.col("kind") != "exact") \
                         .select("kind", "fp")
     new_bands = (fresh.select(

@@ -34,10 +34,39 @@ twin, the same dispatch as ``dedupe._hash64``.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window as W, functions as F
+from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
 from .dedupe import _hash64
 from .textops import authority_host, registrable_host
+
+
+def _with_delay(u: DataFrame, delays: DataFrame | None,
+                default_delay_ms: int, host_col: str = "host",
+                delay_col: str = "delay_ms") -> tuple[DataFrame, Column]:
+    """``u`` (keyed on ``_host``) left-joined to the per-host ``delays``
+    table, and the bigint delay column: the host's delay, else
+    ``default_delay_ms``.
+
+    The table's host key gets the SAME authority normalization as the
+    URL side (lowercase, userinfo/port stripped — the robots.py
+    rules-side treatment): a table keyed 'h.com:8080' must still govern
+    'h.com', or its URLs silently fall back to the default delay and
+    over-fetch the host. Conflicting rows for one host resolve to the
+    MAX delay (the polite direction) via an aggregate, so duplicates can
+    never fan out the join and corrupt seq/fetch offsets."""
+    default = F.lit(int(default_delay_ms))
+    if delays is None:
+        return u, default.cast("bigint")
+    d = (delays.select(authority_host(F.col(host_col)).alias("_host"),
+                       F.col(delay_col).cast("bigint").alias("_d"))
+         .groupBy("_host").agg(F.max("_d").alias("_delay")))
+    return u.join(d, "_host", "left"), F.coalesce(F.col("_delay"), default)
+
+
+def _worker(host: Column, n_workers: int, oracle_safe: bool) -> Column:
+    """``hash(host) mod n_workers``: the host-sticky fetcher assignment."""
+    return F.pmod(_hash64(host, 0, oracle_safe),
+                  F.lit(int(n_workers))).cast("int")
 
 
 def schedule_frontier(urls: DataFrame, delays: DataFrame | None = None,
@@ -52,25 +81,9 @@ def schedule_frontier(urls: DataFrame, delays: DataFrame | None = None,
     u = urls.select(F.col(url_col).alias("url"),
                     registrable_host(F.col(url_col)).alias("_host")) \
             .filter(F.col("_host").isNotNull())
-    if delays is not None:
-        # the delay table's host key gets the SAME authority
-        # normalization as the URL side (lowercase, userinfo/port
-        # stripped — the robots.py rules-side treatment): a table keyed
-        # 'h.com:8080' must still govern 'h.com', or its URLs silently
-        # fall back to the default delay and over-fetch the host.
-        # Conflicting rows for one host resolve to the MAX delay (the
-        # polite direction) via an aggregate, so duplicates can never
-        # fan out the join and corrupt seq/fetch offsets.
-        d = (delays.select(authority_host(F.col(host_col)).alias("_host"),
-                           F.col(delay_col).cast("bigint").alias("_d"))
-             .groupBy("_host").agg(F.max("_d").alias("_delay")))
-        u = u.join(d, "_host", "left")
-    else:
-        u = u.withColumn("_delay", F.lit(None).cast("bigint"))
-    delay = F.coalesce(F.col("_delay"), F.lit(int(default_delay_ms)))
+    u, delay = _with_delay(u, delays, default_delay_ms, host_col, delay_col)
     seq = F.row_number().over(W.partitionBy("_host").orderBy("url"))
-    worker = F.pmod(_hash64(F.col("_host"), 0, oracle_safe),
-                    F.lit(int(n_workers))).cast("int")
+    worker = _worker(F.col("_host"), n_workers, oracle_safe)
     return (u.select("url", F.col("_host").alias("host"),
                      seq.alias("seq"), worker.alias("worker"),
                      delay.alias("delay_ms"))

@@ -25,7 +25,7 @@ Scale shapes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 # href extraction: RE2-compatible (no lookarounds), shared verbatim with
 # the DuckDB oracle.  The tag name must be `a` or `area` (image-map
@@ -48,10 +48,11 @@ BASE_PATTERN = (r"<[bB][aA][sS][eE]\s(?:[^>]*\s)?(?i:href)\s*=\s*"
                 r"[\"']([^\"']+)[\"']")
 
 
-def _unquote(v):
-    """Strip one layer of surrounding quotes off a captured href value
-    (quoted captures keep their quotes so HREF_PATTERN needs only one
-    group). Pure column algebra; mirrored in the DuckDB oracle as
+def _unquote(v: Column) -> Column:
+    """Strip one layer of surrounding quotes off a captured attribute
+    value (quoted captures keep their quotes so HREF_PATTERN needs only
+    one group; ``html_meta`` unquotes its content/href captures the same
+    way). Pure column algebra; mirrored in the DuckDB oracle as
     ``CASE WHEN v[1] IN ('\"', '''') THEN v[2:-2] ELSE v END``."""
     q = v.substr(F.lit(1), F.lit(1))
     return F.when((q == '"') | (q == "'"),
@@ -64,6 +65,16 @@ def href_values(html_col) -> "F.Column":
     (outlinks, WAT sidecar, crawl cycle) shares."""
     return F.transform(
         F.regexp_extract_all(html_col, F.lit(HREF_PATTERN), 1), _unquote)
+
+
+def _effective_base(page_url: Column, basetag: Column) -> Column:
+    """The URL a page's relative hrefs resolve against: its first
+    ``<base href>`` value ``basetag`` (``BASE_PATTERN`` group 1), itself
+    resolved against the page URL as the HTML spec requires, else the
+    page URL when ``basetag`` is ""."""
+    from .textops import resolve_href
+    return F.when(basetag == "", page_url) \
+            .otherwise(resolve_href(page_url, basetag))
 
 PR_SCALE = 1_000_000_000_000  # 10^12: rank mass in integer micro-units
 
@@ -88,8 +99,7 @@ def extract_outlinks(df: DataFrame, id_col: str = "url",
     if not resolve:
         return out
     from .textops import resolve_href
-    eff_base = F.when(F.col("_basetag") == "", F.col("src")) \
-                .otherwise(resolve_href(F.col("src"), F.col("_basetag")))
+    eff_base = _effective_base(F.col("src"), F.col("_basetag"))
     return (out.withColumn("resolved",
                            resolve_href(eff_base, F.col("href")))
             .drop("_basetag"))
@@ -204,72 +214,6 @@ ANCHOR_PATTERN = (r"<(?i:a)\s(?:[^>]*\s)?(?i:href)\s*=\s*"
                   r"[^>]*>([^<]*)</(?i:a)\s*>")
 
 
-# one combined alternation so a page is lexed ONCE for both consumers:
-# at an `<a ...>simple text</a>` span the ANCHOR alternative wins
-# (ordered alternation) and captures href + text; an <area>, a nested-
-# markup anchor, or any other <a href> the anchor shape can't express
-# falls through to the HREF alternative at the same scan position —
-# every href attr HREF_PATTERN finds is still found exactly once.
-# Groups: 1 = anchor href, 2 = anchor text, 3 = bare href.
-PAGE_LINKS_PATTERN = ANCHOR_PATTERN + "|" + HREF_PATTERN
-
-
-def page_links(df: DataFrame, id_col: str = "url",
-               html_col: str = "html", resolve: bool = True) -> DataFrame:
-    """ONE extraction + ONE RFC 3986 resolve pass feeding BOTH frontier
-    expansion and the anchor-text index: ``(src, href, anchor, resolved)``
-    with ``anchor`` NULL for links that are not simple-text ``<a>``
-    anchors (area hrefs, nested-markup anchors).
-
-    The one-scan links table for callers that MATERIALIZE it once
-    (persist/write) and feed several consumers: frontier expansion,
-    anchor index, host graph. Row parity with
-    ``extract_outlinks(resolve=True)`` is structural (same href char
-    classes, one row per href attr) and pytest-pinned; anchor rows are
-    identical to ``anchor_pairs`` (same ANCHOR_PATTERN semantics,
-    whitespace-normalized text). Unlike the standalone
-    ``anchor_text_index(resolve=True)``, resolution here honors the
-    page's ``<base href>`` (the ``extract_outlinks`` rule).
-
-    MEASURED CAVEAT (BENCH.md r8): WITHOUT materialization each
-    consumer re-evaluates this plan, and the combined alternation lexes
-    slower than HREF_PATTERN alone — crawl_cycle(anchor_index_k=...)
-    therefore builds its index from a separate ``anchor_pairs`` pass
-    (1.11× the cycle alone vs 1.60× for the unmaterialized shared
-    plan). Use this operator when the links table is written/cached
-    once; use the per-consumer extractions when it is not."""
-    h = F.col(html_col)
-    # ONE scan of the page bytes (group 0 = whole match), then the
-    # groups are re-extracted per MATCH — matches are tag-sized, so the
-    # per-match regex is O(tag) not O(page); a 3-group × 3-scan variant
-    # measured 1.6x the whole-page lexing cost of this shape
-    matches = F.regexp_extract_all(h, F.lit(PAGE_LINKS_PATTERN), 0)
-    base_cols = ([F.regexp_extract(h, BASE_PATTERN, 1).alias("_basetag")]
-                 if resolve else [])
-    out = df.select(
-        F.col(id_col).alias("src"), *base_cols,
-        F.explode(matches).alias("m"),
-    ).select(
-        "src", *(["_basetag"] if resolve else []),
-        F.regexp_extract(F.col("m"), PAGE_LINKS_PATTERN, 1).alias("_ah"),
-        F.regexp_extract(F.col("m"), PAGE_LINKS_PATTERN, 2).alias("_at"),
-        F.regexp_extract(F.col("m"), PAGE_LINKS_PATTERN, 3).alias("_bh"),
-    ).select(
-        "src", *(["_basetag"] if resolve else []),
-        _unquote(F.when(F.col("_ah") != "", F.col("_ah"))
-                 .otherwise(F.col("_bh"))).alias("href"),
-        F.when(F.col("_ah") != "",
-               F.trim(F.regexp_replace(F.col("_at"), r"\s+", " ")))
-         .alias("anchor"))
-    if not resolve:
-        return out
-    from .textops import resolve_href
-    eff_base = F.when(F.col("_basetag") == "", F.col("src")) \
-                .otherwise(resolve_href(F.col("src"), F.col("_basetag")))
-    return (out.withColumn("resolved", resolve_href(eff_base, F.col("href")))
-            .drop("_basetag"))
-
-
 def anchor_pairs(df: DataFrame, id_col: str = "url",
                  html_col: str = "html") -> DataFrame:
     """One row per (page, href, anchor_text) — the raw material of an
@@ -292,23 +236,18 @@ def anchor_pairs(df: DataFrame, id_col: str = "url",
                     F.col("z.anchor").alias("anchor")))
 
 
-def anchor_text_index(df: DataFrame | None = None, id_col: str = "url",
+def anchor_text_index(df: DataFrame, id_col: str = "url",
                       html_col: str = "html", k: int = 3,
-                      resolve: bool = True,
-                      links: DataFrame | None = None) -> DataFrame:
+                      resolve: bool = True) -> DataFrame:
     """Top-k anchor texts per link TARGET — the classic web-graph
     relevance signal (how the rest of the web describes a page), used
     for retrieval training data and page-title repair.
 
     Output: (dst, rank, anchor, n_refs) with rank 1..k per dst, ordered
-    by (n_refs desc, anchor asc) — fully deterministic.
-
-    ``links``: a pre-extracted ``page_links`` DataFrame (``resolved``,
-    ``anchor`` columns) to build the index from WITHOUT re-lexing or
-    re-resolving the pages — the shared-pass shape ``crawl_cycle``'s
-    ``anchor_index=True`` uses (resolution was 97% of this operator's
-    standalone wall at 400k pages). NULL anchors (non-anchor hrefs in
-    the shared extraction) drop with the empties.
+    by (n_refs desc, anchor asc) — fully deterministic. ``resolve``
+    resolves each href against ``id_col`` (RFC 3986);
+    ``crawl_cycle(anchor_index_k=...)`` passes each page's effective
+    ``<base href>`` as ``id_col``.
 
     Scale shape: the count aggregation shuffles (dst, anchor) string
     pairs only (never pages) with map-side partial combine; the top-k
@@ -316,22 +255,14 @@ def anchor_text_index(df: DataFrame | None = None, id_col: str = "url",
     single-reducer stage. Empty anchors ("" after normalization — image
     links) are dropped: they carry no signal and would otherwise
     dominate every popular target's top-k."""
-    if df is None and links is None:
-        raise ValueError(
-            "anchor_text_index needs either `df` (pages) or `links` "
-            "(a pre-extracted page_links DataFrame)")
-    if links is not None:
-        keyed = links.select(
-            F.col("resolved" if resolve else "href").alias("dst"), "anchor")
-    else:
-        from .textops import resolve_href
-        pairs = anchor_pairs(df, id_col, html_col)
-        dst = (resolve_href(F.col("src"), F.col("href"))
-               if resolve else F.col("href"))
-        keyed = pairs.select(dst.alias("dst"), "anchor")
-    keyed = keyed.filter(F.col("dst").rlike(r"^(?i:https?)://")
-                         & F.col("anchor").isNotNull()
-                         & (F.col("anchor") != ""))
+    from .textops import resolve_href
+    pairs = anchor_pairs(df, id_col, html_col)
+    dst = (resolve_href(F.col("src"), F.col("href"))
+           if resolve else F.col("href"))
+    keyed = (pairs.select(dst.alias("dst"), "anchor")
+             .filter(F.col("dst").rlike(r"^(?i:https?)://")
+                     & F.col("anchor").isNotNull()
+                     & (F.col("anchor") != "")))
     counts = keyed.groupBy("dst", "anchor").agg(
         F.count(F.lit(1)).alias("n_refs"))
     from pyspark.sql import Window

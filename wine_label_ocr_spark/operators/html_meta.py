@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.column import Column
 
+from .graph import _unquote
+
 # every <meta ...> tag (self-closing or not); attribute pulls happen
 # per-tag so attribute ORDER never matters
 _META_TAG = r"<(?i:meta)\s[^>]*>"
@@ -31,12 +33,6 @@ _LINK_HREF = r"(?i:href)\s*=\s*(\"[^\"]*\"|'[^']*'|[^\s>]+)"
 # charset: <meta charset=utf-8> or http-equiv content 'charset=utf-8'
 _CHARSET = r"(?i:charset)\s*=\s*[\"']?([A-Za-z0-9_\-]+)"
 _TITLE = r"(?i:<title[^>]*>)([^<]*)"
-
-
-def _unquote(v: Column) -> Column:
-    q = v.substr(F.lit(1), F.lit(1))
-    return F.when((q == '"') | (q == "'"),
-                  v.substr(F.lit(2), F.length(v) - 2)).otherwise(v)
 
 
 def _meta_entries(html: Column) -> Column:

@@ -225,6 +225,40 @@ class SeenUrlStore:
                                   meta={"op": "seen_store_compact"})
 
 
+def _link_source(pages: DataFrame, respect_meta_robots: bool) -> DataFrame:
+    """The pages whose outlinks feed the frontier. With
+    ``respect_meta_robots``, a page carrying ``<meta name=robots
+    content=nofollow>`` contributes no links: a pure-map filter on the
+    SAME page scan (zero joins, zero extra passes) — the page itself
+    still counts as fetched/seen; only its link contribution drops."""
+    if not respect_meta_robots:
+        return pages
+    from ..operators.html_meta import robots_meta_flags
+    _, nofollow = robots_meta_flags(F.col("html").cast("string"))
+    return pages.filter(~nofollow)
+
+
+def _unseen(cand: DataFrame, seen_fps: DataFrame | SeenUrlStore | None,
+            oracle_safe: bool = False) -> DataFrame:
+    """Rows of ``cand`` whose ``url`` fingerprint is not in the seen
+    store — the crawl's membership stage, run by ``crawl_cycle`` and by
+    ``streaming.crawl_candidates_stream`` alike. An ``(fp)`` DataFrame
+    store is LEFT ANTI joined (the store shuffles on fp; on a stream it
+    is a stateless stream-static join); a bucketed ``SeenUrlStore`` is
+    probed in place (``probe_unseen``: candidates shuffle once on the
+    bucket key, the store is opened per bucket inside the tasks — zero
+    store-side scan or exchange, batch only). ``None`` keeps every
+    row."""
+    if seen_fps is None:
+        return cand
+    keyed = cand.withColumn("_fp", _hash64(F.col("url"), 0, oracle_safe))
+    if isinstance(seen_fps, SeenUrlStore):
+        return seen_fps.probe_unseen(keyed, fp_col="_fp").drop("_fp")
+    return (keyed.join(seen_fps.select("fp"), keyed["_fp"] == F.col("fp"),
+                       "left_anti")
+            .drop("_fp"))
+
+
 def _crawl_stages(pages: DataFrame, robots: DataFrame,
                   seen_fps: DataFrame | None,
                   default_delay_ms: int, n_workers: int,
@@ -248,17 +282,9 @@ def _crawl_stages(pages: DataFrame, robots: DataFrame,
     the seen anti-join, so sitemap seeds get the same dedup/robots/
     politeness treatment as extracted outlinks."""
     dirs = robots_directives(robots, agent=agent)
-    link_src = pages
-    if respect_meta_robots:
-        # <meta name=robots content=nofollow>: this page's outlinks must
-        # not feed the frontier. A pure-map filter on the SAME page scan
-        # (zero joins, zero extra passes) — the page itself still counts
-        # as fetched/seen; only its link contribution drops.
-        from ..operators.html_meta import robots_meta_flags
-        _, nofollow = robots_meta_flags(F.col("html").cast("string"))
-        link_src = pages.filter(~nofollow)
     wrap = stage_wrap or (lambda name, df: df)
-    links = wrap("outlinks", extract_outlinks(link_src, resolve=True))
+    links = wrap("outlinks", extract_outlinks(
+        _link_source(pages, respect_meta_robots), resolve=True))
     cand_urls = links.select(canonical_url(F.col("resolved")).alias("url"))
     if sitemaps is not None:
         declared = dirs.select(F.explode("sitemaps").alias("url")).distinct()
@@ -270,21 +296,7 @@ def _crawl_stages(pages: DataFrame, robots: DataFrame,
     cand = wrap("candidates", cand_urls
                 .filter(F.col("url").isNotNull())
                 .distinct())
-    unseen = cand
-    if seen_fps is not None:
-        keyed = cand.withColumn("_fp", _hash64(F.col("url"), 0, oracle_safe))
-        if isinstance(seen_fps, SeenUrlStore):
-            # bucketed storage-partitioned membership (r8 VERDICT #4):
-            # candidates shuffle once on the bucket key; the store is
-            # opened per-bucket inside the tasks — zero store-side scan
-            # or exchange, no candidates-≪-store assumption
-            unseen = seen_fps.probe_unseen(keyed, fp_col="_fp") \
-                             .drop("_fp")
-        else:
-            unseen = (keyed.join(seen_fps.select("fp"),
-                                 keyed["_fp"] == F.col("fp"), "left_anti")
-                      .drop("_fp"))
-    unseen = wrap("unseen", unseen)
+    unseen = wrap("unseen", _unseen(cand, seen_fps, oracle_safe))
     rules = parse_robots_rules(robots, agent=agent)
     allowed = wrap("allowed", robots_allowed(unseen, rules)
                    .filter(F.col("allowed")).drop("allowed"))
@@ -312,18 +324,15 @@ def crawl_cycle(pages: DataFrame, robots: DataFrame,
     ``_crawl_stages``).
 
     ``anchor_index_k``: when set, ALSO build the top-k anchor-text
-    index over the same pages and return ``(schedule, index)``. Unlike
-    the standalone operator, anchor targets honor ``<base href>`` (the
-    outlink rule — the page id fed to the index is the effective base),
-    and pages dropped by ``respect_meta_robots`` nofollow contribute no
-    anchors either — the polite-crawler view of the graph. MEASURED
-    (BENCH.md r8, 200k pages, interleaved median-of-3): this separate
-    anchor_pairs pass costs 1.11× the cycle alone; a one-scan shared
-    combined-pattern lexer (``graph.page_links``) measured 1.60× —
-    without a links materialization each consumer re-lexes, and the
-    combined pattern lexes slower than HREF_PATTERN — so the shared
-    variant was killed here (page_links remains the right shape for
-    callers that persist the links table once).
+    index over the same pages and return ``(schedule, index)``. The
+    index reads the pages the frontier reads (``_link_source``: pages
+    dropped by ``respect_meta_robots`` nofollow contribute no anchors),
+    and its targets resolve against each page's effective base
+    (``graph._effective_base``, the ``extract_outlinks`` rule) — the
+    polite-crawler view of the graph. It is a second ``anchor_pairs``
+    pass over the pages: BENCH.md r8 measured it at 1.11× the cycle
+    alone (200k pages, interleaved median-of-3), against 1.60× for a
+    one-scan combined lexer feeding both consumers, which was deleted.
 
     ``seen_fps`` picks the membership plan: an ``(fp)`` DataFrame is
     anti-joined (the store shuffles on fp), a bucketed
@@ -339,18 +348,11 @@ def crawl_cycle(pages: DataFrame, robots: DataFrame,
         respect_meta_robots=respect_meta_robots)
     if anchor_index_k is None:
         return sched
-    from ..operators.graph import BASE_PATTERN, anchor_text_index
-    from ..operators.textops import resolve_href
-    link_src = pages
-    if respect_meta_robots:
-        from ..operators.html_meta import robots_meta_flags
-        _, nofollow = robots_meta_flags(F.col("html").cast("string"))
-        link_src = pages.filter(~nofollow)
-    h = F.col("html").cast("string")
-    basetag = F.regexp_extract(h, BASE_PATTERN, 1)
-    eff_base = F.when(basetag == "", F.col("url")) \
-                .otherwise(resolve_href(F.col("url"), basetag))
-    src_pages = link_src.select(eff_base.alias("_eff_base"), "html")
+    from ..operators.graph import (BASE_PATTERN, _effective_base,
+                                   anchor_text_index)
+    basetag = F.regexp_extract(F.col("html").cast("string"), BASE_PATTERN, 1)
+    src_pages = _link_source(pages, respect_meta_robots).select(
+        _effective_base(F.col("url"), basetag).alias("_eff_base"), "html")
     idx = anchor_text_index(src_pages, id_col="_eff_base",
                             k=anchor_index_k)
     return sched, idx

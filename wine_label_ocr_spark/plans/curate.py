@@ -1,8 +1,14 @@
 """End-to-end corpus curation: crawl in → training corpus out.
 
 The capstone composition — every stage is an existing operator, chained
-as ONE lazy DataFrame program (the only materialization barriers are the
-two dedup stages, which need corpus-wide state by definition):
+into one DataFrame program. It is NOT lazy: building it (``curate_pages``)
+already runs Spark jobs. The lineage cut before the near-dup stage is an
+eager ``localCheckpoint``, which runs ingest → extract → gates → exact
+dedup; ``dedup_keep_one``'s ``connected_components`` then runs the LSH
+pair stage in its eager edge checkpoint, and one eager
+``localCheckpoint`` and one ``count()`` per label-propagation round.
+Only the keep-one join and the write after it wait for the caller's
+action:
 
     .warc/.warc.gz shards ──read_warc──▶ pages
       ──extract_records──▶ records (byte-identical text per url)

@@ -105,34 +105,25 @@ def incremental_dedup_stream(stream_df: DataFrame, prior_fps: DataFrame,
     no-verify contract as the batch op, same ``(kind, fp)`` store
     written by ``snapshot_fingerprints``).
 
-    Structured Streaming does not support stream-static LEFT ANTI
-    joins, so each membership test is the classic anti-via-outer:
-    LEFT OUTER against the store slice, keep rows whose match column is
-    NULL. That makes the whole operator STATELESS (1 + n_bands
-    stream-static equi joins, no watermark, no state store) — every
-    micro-batch joins against the static store and appends survivors,
-    so it composes with ``dedup_stream`` (which handles within-stream
-    dups) for the full ingest chain. Batch-equivalence is pytest-pinned
-    per micro-batch."""
-    from ..operators.dedupe import _minhash_bands, content_key
-    exact_fps = (prior_fps.filter(F.col("kind") == "exact")
-                 .select(F.col("fp").alias("_fp_exact")).distinct())
-    keyed = stream_df.withColumn("_ck", content_key(F.col(text_col)))
-    out = (keyed.join(exact_fps, keyed["_ck"] == exact_fps["_fp_exact"],
-                      "left_outer")
-           .filter(F.col("_fp_exact").isNull())
-           .drop("_fp_exact"))
-    out = out.withColumn(
+    Every membership test is a stream-static LEFT ANTI join, so the
+    operator is STATELESS (1 + n_bands equi joins, no watermark, no
+    state store). The exact tier is the batch operator's own
+    ``_exact_unseen``. The band tier anti-joins once per band against
+    that band's store slice: the batch op's explode + semi join +
+    anti join back would join the stream with itself. Every micro-batch
+    joins against the static store and appends survivors, so it
+    composes with ``dedup_stream`` (which handles within-stream dups)
+    for the full ingest chain. Batch-equivalence is pytest-pinned per
+    micro-batch."""
+    from ..operators.dedupe import _exact_unseen, _minhash_bands
+    out = _exact_unseen(stream_df, prior_fps, text_col).withColumn(
         "_bands", _minhash_bands(F.col(text_col), k, n_perm, n_bands,
                                  oracle_safe))
     for b in range(n_bands):
-        slice_b = (prior_fps.filter(F.col("kind") == f"band:{b}")
-                   .select(F.col("fp").alias(f"_fp_b{b}")).distinct())
-        bh = F.get(F.col("_bands"), b)
-        out = (out.join(slice_b, bh == slice_b[f"_fp_b{b}"], "left_outer")
-               .filter(F.col(f"_fp_b{b}").isNull())
-               .drop(f"_fp_b{b}"))
-    return out.drop("_ck", "_bands")
+        slice_b = prior_fps.filter(F.col("kind") == f"band:{b}").select("fp")
+        out = out.join(slice_b, F.get(F.col("_bands"), b) == slice_b["fp"],
+                       "left_anti")
+    return out.drop("_bands")
 
 
 def crawl_candidates_stream(stream_pages: DataFrame, robots: DataFrame,
@@ -144,11 +135,11 @@ def crawl_candidates_stream(stream_pages: DataFrame, robots: DataFrame,
 
     Entirely STATELESS — the ``incremental_dedup_stream`` discipline:
     outlink extraction, RFC 3986 resolution, and canonicalization are
-    pure maps; the seen-URL store test is anti-via-left-outer against
-    the static ``(fp)`` store (stream-static LEFT ANTI is unsupported);
-    the robots verdict is ``robots_allowed`` — one stream-static
-    host-keyed join plus per-row array algebra, no per-URL aggregation.
-    No watermark, no state store.
+    pure maps; the seen-URL store test is ``crawl_cycle``'s own
+    membership stage (``plans.crawl._unseen``), a stream-static LEFT
+    ANTI join against the ``(fp)`` store; the robots verdict is
+    ``robots_allowed`` — one stream-static host-keyed join plus per-row
+    array algebra, no per-URL aggregation. No watermark, no state store.
 
     What stays batch-side BY DESIGN: global URL ``distinct`` and
     politeness slot assignment (``schedule_frontier``'s per-host
@@ -156,23 +147,16 @@ def crawl_candidates_stream(stream_pages: DataFrame, robots: DataFrame,
     micro-batch via ``foreachBatch`` (pytest pins per-micro-batch
     stream ≡ batch on both verdicts and slots), or let the next
     cycle's seen store absorb cross-batch repeats."""
-    from ..operators.dedupe import _hash64
     from ..operators.graph import extract_outlinks
     from ..operators.robots import parse_robots_rules, robots_allowed
     from ..operators.textops import canonical_url
+    from ..plans.crawl import _unseen
 
     links = extract_outlinks(stream_pages, resolve=True)
     cand = (links.select(canonical_url(F.col("resolved")).alias("url"))
             .filter(F.col("url").isNotNull()))
-    if seen_fps is not None:
-        keyed = cand.withColumn("_fp",
-                                _hash64(F.col("url"), 0, oracle_safe))
-        seen = seen_fps.select(F.col("fp").alias("_seen_fp")).distinct()
-        cand = (keyed.join(seen, keyed["_fp"] == seen["_seen_fp"],
-                           "left_outer")
-                .filter(F.col("_seen_fp").isNull())
-                .drop("_fp", "_seen_fp"))
-    return robots_allowed(cand, parse_robots_rules(robots, agent=agent))
+    return robots_allowed(_unseen(cand, seen_fps, oracle_safe),
+                          parse_robots_rules(robots, agent=agent))
 
 
 def crawl_schedule_stream(stream_pages: DataFrame, robots: DataFrame,
@@ -187,11 +171,10 @@ def crawl_schedule_stream(stream_pages: DataFrame, robots: DataFrame,
     pure maps + stream-static joins), then the two stages that used to
     stay batch-side lifted onto the stream:
 
-    * per-host crawl DELAY: one more stream-static join, against the
-      same ``robots_directives`` table ``crawl_cycle`` feeds
-      ``schedule_frontier`` (host keys get the identical authority
-      normalization, conflicting rows resolve to the MAX delay — the
-      polite direction);
+    * per-host crawl DELAY and WORKER: ``schedule_frontier``'s own
+      helpers (``frontier._with_delay``, ``frontier._worker``) — one
+      more stream-static join, against the same ``robots_directives``
+      table ``crawl_cycle`` feeds ``schedule_frontier``;
     * politeness SEQUENCING: per-host ``seq``/``fetch_offset_ms`` as
       keyed state (``applyInPandasWithState``) — the counter CONTINUES
       across micro-batches, which is politeness done properly on a
@@ -212,31 +195,23 @@ def crawl_schedule_stream(stream_pages: DataFrame, robots: DataFrame,
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from ..operators.dedupe import _hash64
+    from ..operators.frontier import _with_delay, _worker
     from ..operators.robots import robots_directives
-    from ..operators.textops import authority_host, registrable_host
+    from ..operators.textops import registrable_host
     from typing import Iterable, Iterator
 
     cand = crawl_candidates_stream(stream_pages, robots, seen_fps,
                                    agent=agent, oracle_safe=oracle_safe)
-    allowed = (cand.filter(F.col("allowed")).drop("allowed")
-               .withColumn("host", registrable_host(F.col("url")))
-               .filter(F.col("host").isNotNull()))
-    # per-host delay: stream-static join against the SAME directives
-    # table the batch scheduler consumes, same normalization/max rule
-    dirs = robots_directives(robots, agent=agent)
-    delays = (dirs.select(authority_host(F.col("host")).alias("host"),
-                          F.col("crawl_delay_ms").cast("bigint")
-                          .alias("_d"))
-              .groupBy("host").agg(F.max("_d").alias("_delay")))
-    keyed = (allowed.join(delays, "host", "left")
-             .withColumn("delay_ms",
-                         F.coalesce(F.col("_delay"),
-                                    F.lit(int(default_delay_ms))))
-             .withColumn("worker",
-                         F.pmod(_hash64(F.col("host"), 0, oracle_safe),
-                                F.lit(int(n_workers))).cast("int"))
-             .select("url", "host", "worker", "delay_ms"))
+    allowed = (cand.filter(F.col("allowed"))
+               .select("url", registrable_host(F.col("url")).alias("_host"))
+               .filter(F.col("_host").isNotNull()))
+    hosted, delay = _with_delay(allowed,
+                                robots_directives(robots, agent=agent),
+                                default_delay_ms, delay_col="crawl_delay_ms")
+    keyed = hosted.select("url", F.col("_host").alias("host"),
+                          _worker(F.col("_host"), n_workers,
+                                  oracle_safe).alias("worker"),
+                          delay.alias("delay_ms"))
 
     def fn(key: tuple, pdfs: Iterable[pd.DataFrame],
            state: GroupState) -> Iterator[pd.DataFrame]:
